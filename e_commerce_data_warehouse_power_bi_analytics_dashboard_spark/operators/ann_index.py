@@ -13,9 +13,8 @@ This module is the indexing job. ``build_ann_index`` trains every
 artifact the PQ family needs with the SAME deterministic machinery the
 inline path used (operators/similarity.py::pq_fit_codebooks /
 pq_encode / assign_centroids — min-id seeding, 6-decimal mean re-sync,
-empty-cluster carry-forward), writes them as parquet under the
-gitignored ``.scratch/`` root, and marks success atomically (marker
-written last; a torn build is rebuilt, never trusted). Because training
+empty-cluster carry-forward) and writes them as parquet, as one
+build-once artifact (sources/artifacts.py). Because training
 is deterministic and parquet round-trips doubles exactly, a query over
 the PERSISTED index is bit-identical to the from-scratch derivation —
 which is what keeps the three serve entries hash-matching their
@@ -46,18 +45,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.artifacts import ensure, scratch_root
 from ..sources.tpch import read_table
 from .similarity import assign_centroids, pq_fit_codebooks, pq_encode
 from ..functions.vectors import s_to_double
-
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-
-#: bump when any training/encoding rule changes — stale on-disk
-#: artifacts from an older recipe must never serve a newer query.
-#: (v2: added the bucket-partitioned codes_ivf layout)
-ANN_INDEX_VERSION = "v2"
 
 #: index hyper-parameters — shared with plans/llm_ops.py's PQ entries
 #: and baked into the DuckDB oracles (m subspaces × k codewords,
@@ -70,98 +61,78 @@ ARTIFACTS = (
     "codes_ivf",
 )
 
-#: (applicationId, sf_dir) pairs whose index is known good this session
-_BUILT: set[tuple[str, str]] = set()
-
 
 def index_root(sf_dir: str) -> str:
-    return os.path.join(
-        _REPO_ROOT, ".scratch", f"ann_index_{ANN_INDEX_VERSION}",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-
-
-def _marker(root: str) -> str:
-    return os.path.join(root, "_INDEX_COMPLETE")
+    # bump the kind's version when any training/encoding rule changes
+    # (v2: added the bucket-partitioned codes_ivf layout)
+    return scratch_root("ann_index_v2", sf_dir)
 
 
 def build_ann_index(spark: SparkSession, sf_dir: str) -> str:
-    """Train and persist every PQ-family artifact for ``sf_dir``.
+    """Train and persist every PQ-family artifact for ``sf_dir`` once
+    (training is deterministic, so a finished index is valid for any
+    process on the same inputs)."""
 
-    Idempotent per (session, sf_dir); across processes the completion
-    marker short-circuits the rebuild (training is deterministic, so a
-    finished index is valid for any process on the same inputs).
-    """
-    root = index_root(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _BUILT:
-        return root
-    if os.path.exists(_marker(root)):
-        _BUILT.add(key)
-        return root
+    def build(root: str) -> None:
+        emb = read_table(spark, sf_dir, "embeddings")
+        coarse_src = emb.filter(COARSE_RULE)
 
-    emb = read_table(spark, sf_dir, "embeddings")
-    coarse_src = emb.filter(COARSE_RULE)
+        def _write(df: DataFrame, name: str) -> None:
+            df.write.mode("overwrite").parquet(os.path.join(root, name))
 
-    def _write(df: DataFrame, name: str) -> None:
-        df.write.mode("overwrite").parquet(os.path.join(root, name))
+        # coarse centroids (double-widened once, at index time)
+        _write(
+            coarse_src.select(
+                F.col("vec_id").alias("centroid_id"),
+                F.expr(s_to_double("embedding")).alias("cv"),
+            ),
+            "coarse",
+        )
+        # corpus bucket assignment — thin (vid, centroid_id)
+        a_full = assign_centroids(emb, coarse_src)
+        _write(a_full.select("vid", "centroid_id"), "assign")
 
-    # coarse centroids (double-widened once, at index time)
-    _write(
-        coarse_src.select(
+        # raw-subvector codebooks + codes (the flat-ADC / IVFFlat-style path)
+        books_raw = pq_fit_codebooks(emb, m=PQ_M, k=PQ_K, iters=PQ_ITERS, dim=PQ_DIM)
+        _write(books_raw, "books_raw")
+        codes_raw = pq_encode(emb, books_raw, PQ_M, PQ_DIM)
+        _write(codes_raw, "codes_raw")
+        # the classical IVF LIST-FILE layout: the same codes, physically
+        # clustered by coarse bucket (hive-partitioned on centroid_id) so a
+        # bucket probe is a PARTITION-PRUNED scan — at 100 TB this is the
+        # difference between touching nprobe/nlist of the index and all of
+        # it. A layout of codes_raw, not new training output: its content
+        # is pinned by ann_ivfpq_partitioned_scan hash-matching the same
+        # oracle as the unpartitioned scan.
+        stored_codes = spark.read.parquet(os.path.join(root, "codes_raw"))
+        stored_assign = spark.read.parquet(os.path.join(root, "assign"))
+        (
+            stored_codes.join(stored_assign, "vid")
+            .write.mode("overwrite")
+            .partitionBy("centroid_id")
+            .parquet(os.path.join(root, "codes_ivf"))
+        )
+
+        # residual codebooks + codes (IVFADC, Jégou §V.A; dot metric —
+        # zero residuals are cosine-undefined, see ivfpq_residual_topk)
+        cents = coarse_src.select(
             F.col("vec_id").alias("centroid_id"),
             F.expr(s_to_double("embedding")).alias("cv"),
-        ),
-        "coarse",
-    )
-    # corpus bucket assignment — thin (vid, centroid_id)
-    a_full = assign_centroids(emb, coarse_src)
-    _write(a_full.select("vid", "centroid_id"), "assign")
-
-    # raw-subvector codebooks + codes (the flat-ADC / IVFFlat-style path)
-    books_raw = pq_fit_codebooks(emb, m=PQ_M, k=PQ_K, iters=PQ_ITERS, dim=PQ_DIM)
-    _write(books_raw, "books_raw")
-    codes_raw = pq_encode(emb, books_raw, PQ_M, PQ_DIM)
-    _write(codes_raw, "codes_raw")
-    # the classical IVF LIST-FILE layout: the same codes, physically
-    # clustered by coarse bucket (hive-partitioned on centroid_id) so a
-    # bucket probe is a PARTITION-PRUNED scan — at 100 TB this is the
-    # difference between touching nprobe/nlist of the index and all of
-    # it. A layout of codes_raw, not new training output: its content
-    # is pinned by ann_ivfpq_partitioned_scan hash-matching the same
-    # oracle as the unpartitioned scan.
-    stored_codes = spark.read.parquet(os.path.join(root, "codes_raw"))
-    stored_assign = spark.read.parquet(os.path.join(root, "assign"))
-    (
-        stored_codes.join(stored_assign, "vid")
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(os.path.join(root, "codes_ivf"))
-    )
-
-    # residual codebooks + codes (IVFADC, Jégou §V.A; dot metric —
-    # zero residuals are cosine-undefined, see ivfpq_residual_topk)
-    cents = coarse_src.select(
-        F.col("vec_id").alias("centroid_id"),
-        F.expr(s_to_double("embedding")).alias("cv"),
-    )
-    er = (
-        a_full.join(F.broadcast(cents), "centroid_id")
-        .select(
-            F.col("vid").alias("vec_id"),
-            F.expr("zip_with(v, cv, (a, b) -> a - b)").alias("embedding"),
         )
-    )
-    books_res = pq_fit_codebooks(
-        er, m=PQ_M, k=PQ_K, iters=PQ_ITERS, dim=PQ_DIM, metric="dot"
-    )
-    _write(books_res, "books_res")
-    _write(pq_encode(er, books_res, PQ_M, PQ_DIM, metric="dot"), "codes_res")
+        er = (
+            a_full.join(F.broadcast(cents), "centroid_id")
+            .select(
+                F.col("vid").alias("vec_id"),
+                F.expr("zip_with(v, cv, (a, b) -> a - b)").alias("embedding"),
+            )
+        )
+        books_res = pq_fit_codebooks(
+            er, m=PQ_M, k=PQ_K, iters=PQ_ITERS, dim=PQ_DIM, metric="dot"
+        )
+        _write(books_res, "books_res")
+        _write(pq_encode(er, books_res, PQ_M, PQ_DIM, metric="dot"), "codes_res")
 
-    with open(_marker(root), "w") as fh:
-        fh.write("ok\n")
-    _BUILT.add(key)
-    return root
+    return ensure(spark, index_root(sf_dir), build)
 
 
 def read_artifact(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -222,8 +193,6 @@ def read_artifact(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # untouched by fold and compaction alike.
 # ---------------------------------------------------------------------------
 
-ANN_INCR_VERSION = "v2"
-
 #: the arriving-batch coin over vec_id: 6 hex chars so the stream is
 #: independent of the 7/8/9-char coins used elsewhere. Spark + DuckDB.
 S_EMB_COIN = (
@@ -253,14 +222,9 @@ INCR_ARTIFACTS = ("coarse", "assign", "books_raw", "codes_raw", "codes_ivf")
 #: books_raw are the FROZEN quantizers — base generation only
 _INCR_FOLDED = ("assign", "codes_raw", "codes_ivf")
 
-_INCR_BUILT: set[tuple[str, str, str]] = set()
-
 
 def incr_index_root(sf_dir: str) -> str:
-    return os.path.join(
-        _REPO_ROOT, ".scratch", f"ann_index_incr_{ANN_INCR_VERSION}",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
+    return scratch_root("ann_index_incr_v2", sf_dir)
 
 
 def corpus_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -339,50 +303,42 @@ def build_incr_base(spark: SparkSession, sf_dir: str) -> str:
     deterministic machinery and marker discipline as build_ann_index;
     codes are encoded from the STORED books so base and fold share one
     encode path (parquet round-trips doubles exactly)."""
-    root = incr_index_root(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "base")
-    if key in _INCR_BUILT:
-        return root
-    if os.path.exists(os.path.join(root, "_BASE_COMPLETE")):
-        _INCR_BUILT.add(key)
-        return root
 
-    corpus = corpus_embeddings(spark, sf_dir)
-    coarse_src = corpus.filter(COARSE_RULE)
+    def build(root: str) -> None:
+        corpus = corpus_embeddings(spark, sf_dir)
+        coarse_src = corpus.filter(COARSE_RULE)
 
-    def _write(df: DataFrame, name: str) -> None:
-        df.write.mode("overwrite").parquet(os.path.join(root, name))
+        def _write(df: DataFrame, name: str) -> None:
+            df.write.mode("overwrite").parquet(os.path.join(root, name))
 
-    _write(
-        coarse_src.select(
-            F.col("vec_id").alias("centroid_id"),
-            F.expr(s_to_double("embedding")).alias("cv"),
-        ),
-        "coarse",
-    )
-    _write(
-        assign_centroids(corpus, coarse_src).select("vid", "centroid_id"),
-        "assign",
-    )
-    _write(
-        pq_fit_codebooks(corpus, m=PQ_M, k=PQ_K, iters=PQ_ITERS, dim=PQ_DIM),
-        "books_raw",
-    )
-    books = spark.read.parquet(os.path.join(root, "books_raw"))
-    _write(pq_encode(corpus, books, PQ_M, PQ_DIM), "codes_raw")
-    codes = spark.read.parquet(os.path.join(root, "codes_raw"))
-    assign = spark.read.parquet(os.path.join(root, "assign"))
-    (
-        codes.join(assign, "vid")
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(os.path.join(root, "codes_ivf"))
-    )
-    _commit_layout(root, {a: [a] for a in _INCR_FOLDED})
-    with open(os.path.join(root, "_BASE_COMPLETE"), "w") as fh:
-        fh.write("ok\n")
-    _INCR_BUILT.add(key)
-    return root
+        _write(
+            coarse_src.select(
+                F.col("vec_id").alias("centroid_id"),
+                F.expr(s_to_double("embedding")).alias("cv"),
+            ),
+            "coarse",
+        )
+        _write(
+            assign_centroids(corpus, coarse_src).select("vid", "centroid_id"),
+            "assign",
+        )
+        _write(
+            pq_fit_codebooks(corpus, m=PQ_M, k=PQ_K, iters=PQ_ITERS, dim=PQ_DIM),
+            "books_raw",
+        )
+        books = spark.read.parquet(os.path.join(root, "books_raw"))
+        _write(pq_encode(corpus, books, PQ_M, PQ_DIM), "codes_raw")
+        codes = spark.read.parquet(os.path.join(root, "codes_raw"))
+        assign = spark.read.parquet(os.path.join(root, "assign"))
+        (
+            codes.join(assign, "vid")
+            .write.mode("overwrite")
+            .partitionBy("centroid_id")
+            .parquet(os.path.join(root, "codes_ivf"))
+        )
+        _commit_layout(root, {a: [a] for a in _INCR_FOLDED})
+
+    return ensure(spark, incr_index_root(sf_dir), build)
 
 
 def _fold_one_gen(spark: SparkSession, sf_dir: str, root: str, gen: int) -> None:
@@ -429,12 +385,8 @@ def fold_incr_batch(spark: SparkSession, sf_dir: str) -> str:
     reads raw vectors only for ITS slice; at 100 TB every fold's cost
     is its batch, never the corpus."""
     root = build_incr_base(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "fold")
-    if key in _INCR_BUILT:
-        return root
     for gen in range(1, N_FOLD_GENS + 1):
         _fold_one_gen(spark, sf_dir, root, gen)
-    _INCR_BUILT.add(key)
     return root
 
 

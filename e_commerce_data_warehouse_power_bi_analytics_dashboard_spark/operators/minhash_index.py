@@ -27,8 +27,7 @@ hash-coin the exact incremental entry uses):
   sigs/    (doc, sig long[])    — for the signature-agreement
                                   prefilter before exact verify
 
-Same lifecycle discipline as operators/ann_index.py: versioned root
-under gitignored ``.scratch/``, completion marker written last, derived
+Both indexes are build-once artifacts (sources/artifacts.py), derived
 deterministically so persisted == recomputed (the equivalence test and
 the entry's from-scratch DuckDB oracle both pin this).
 """
@@ -43,12 +42,9 @@ from pyspark.sql import functions as F
 from ..functions.text import (
     o_md5_long, o_md5_long_at, s_md5_long, s_md5_long_at,
 )
+from ..sources.artifacts import discard, ensure, scratch_root
 from ..sources.tpch import read_table
 from .dedup import band_rows, minhash_signatures_from_shingles, shingle_set
-
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
 
 MINHASH_INDEX_VERSION = "v2"  # v2: bands persisted bucketed on (band_idx, bh)
 
@@ -71,18 +67,9 @@ BATCH_PCT = 10
 
 ARTIFACTS = ("bands", "sigs")
 
-_BUILT: set[tuple[str, str]] = set()
-
 
 def index_root(sf_dir: str) -> str:
-    return os.path.join(
-        _REPO_ROOT, ".scratch", f"minhash_index_{MINHASH_INDEX_VERSION}",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-
-
-def _marker(root: str) -> str:
-    return os.path.join(root, "_INDEX_COMPLETE")
+    return scratch_root(f"minhash_index_{MINHASH_INDEX_VERSION}", sf_dir)
 
 
 def bands_table_name(sf_dir: str) -> str:
@@ -136,51 +123,14 @@ def batch_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def build_minhash_index(spark: SparkSession, sf_dir: str) -> str:
-    """Derive and persist the corpus band + signature tables. Idempotent
-    per (session, sf_dir); a completed on-disk index short-circuits."""
-    root = index_root(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _BUILT:
-        return root
-    if os.path.exists(_marker(root)):
-        _BUILT.add(key)
-        return root
-
-    sh = shingle_set(corpus_docs(spark, sf_dir), "doc_id", "text", SHINGLE_K)
-    sigs = minhash_signatures_from_shingles(sh, N_HASHES)
-    # one derivation feeds both artifacts: persist the m0..m31 frame
-    # first, then band it from the written copy (avoids recomputing the
-    # 32-permutation aggregation for the band table)
-    sig_path = os.path.join(root, "sigs")
-    sigs.select(
-        "doc", F.array(*[F.col(f"m{i}") for i in range(N_HASHES)]).alias("sig")
-    ).write.mode("overwrite").parquet(sig_path)
-    stored = spark.read.parquet(sig_path).select(
-        "doc", *[F.col("sig")[i].alias(f"m{i}") for i in range(N_HASHES)]
+    """Derive and persist the corpus band + signature tables once — the
+    same base build the incremental index starts from."""
+    return ensure(
+        spark, index_root(sf_dir),
+        lambda root: IncrMinhashIndex(root, bands_table_name(sf_dir)).build_base(
+            spark, corpus_docs(spark, sf_dir)
+        ),
     )
-    bands = band_rows(stored, BANDS)
-    with open(_bands_ddl_path(root), "w") as fh:
-        fh.write(", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in bands.schema.fields
-        ))
-    tbl = bands_table_name(sf_dir)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    (
-        # pre-shuffle on the bucket keys with the bucket count: Spark's
-        # bucket id and its shuffle hash are the same murmur3, so each
-        # write task holds exactly one bucket → one sorted file per
-        # bucket (the layout the sorted bucketed scan needs)
-        bands.repartition(N_BUCKETS, "band_idx", "bh")
-        .write.bucketBy(N_BUCKETS, "band_idx", "bh")
-        .sortBy("band_idx", "bh")
-        .option("path", os.path.join(root, "bands"))
-        .mode("overwrite")
-        .saveAsTable(tbl)
-    )
-    with open(_marker(root), "w") as fh:
-        fh.write("ok\n")
-    _BUILT.add(key)
-    return root
 
 
 def read_artifact(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -252,10 +202,7 @@ O_FOLD_SLICE = (
 
 
 def incr_index_root(sf_dir: str) -> str:
-    return os.path.join(
-        _REPO_ROOT, ".scratch", f"minhash_index_incr_{MINHASH_INCR_VERSION}",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
+    return scratch_root(f"minhash_index_incr_{MINHASH_INCR_VERSION}", sf_dir)
 
 
 def incr_bands_table_name(sf_dir: str) -> str:
@@ -276,8 +223,7 @@ def _sig_array_frame(docs: DataFrame) -> DataFrame:
 def _bands_from_stored(spark: SparkSession, sig_path: str) -> DataFrame:
     """Band rows derived from a PERSISTED signature store — the
     32-permutation aggregation runs once per document at sig-write
-    time, never again for the band table (the same read-back pattern
-    build_minhash_index uses)."""
+    time, never again for the band table."""
     stored = spark.read.parquet(sig_path)
     wide = stored.select(
         "doc", *[F.col("sig")[i].alias(f"m{i}") for i in range(N_HASHES)]
@@ -312,7 +258,6 @@ class IncrMinhashIndex:
       bands/               bucketed band table files (base + one file
                            per touched bucket per fold generation)
       _bands_columns.ddl   column spec for cross-session re-attachment
-      _BASE_COMPLETE       base build finished (written last)
       _FOLD_<tag>_STARTED / _FOLD_<tag>_COMPLETE
                            per-generation fold brackets
       _COMPACT_STARTED     transient compaction-swap bracket
@@ -332,9 +277,6 @@ class IncrMinhashIndex:
     @property
     def bands_dir(self) -> str:
         return self._p("bands")
-
-    def base_complete(self) -> bool:
-        return os.path.exists(self._p("_BASE_COMPLETE"))
 
     def fold_complete(self, tag: str) -> bool:
         return os.path.exists(self._p(f"_FOLD_{tag}_COMPLETE"))
@@ -363,11 +305,8 @@ class IncrMinhashIndex:
         return None
 
     def destroy(self, spark: SparkSession) -> None:
-        import shutil
-
         spark.sql(f"DROP TABLE IF EXISTS {self.tbl}")
-        if os.path.exists(self.root):
-            shutil.rmtree(self.root)
+        discard(spark, self.root)
 
     # -- reads ------------------------------------------------------------
     def attach_bands(self, spark: SparkSession) -> DataFrame:
@@ -393,7 +332,8 @@ class IncrMinhashIndex:
     def build_base(self, spark: SparkSession, corpus: DataFrame) -> None:
         """Base generation: ``corpus``'s bands (bucketed table) +
         signatures. Caller is responsible for not re-building a
-        completed base (idempotence lives in the module wrappers)."""
+        completed base (build_incr_base runs it as a build-once
+        artifact)."""
         _sig_array_frame(corpus).write.mode("overwrite").parquet(self.sig_path)
         bands = _bands_from_stored(spark, self.sig_path)
         with open(_bands_ddl_path(self.root), "w") as fh:
@@ -403,8 +343,6 @@ class IncrMinhashIndex:
             ))
         spark.sql(f"DROP TABLE IF EXISTS {self.tbl}")
         _bucketed_band_write(bands, self.tbl, self.bands_dir, "overwrite")
-        with open(self._p("_BASE_COMPLETE"), "w") as fh:
-            fh.write("ok\n")
 
     def fold(self, spark: SparkSession, docs: DataFrame, tag: str) -> bool:
         """FOLD one generation: derive ``docs``' signatures once into a
@@ -554,17 +492,11 @@ def batch_slice_docs(spark: SparkSession, sf_dir: str, gen: int) -> DataFrame:
 def build_incr_base(spark: SparkSession, sf_dir: str) -> str:
     """Base generation: the CORPUS split's bands (bucketed table) +
     signatures, under the incremental root. Idempotent per (session,
-    sf_dir); a completed on-disk base short-circuits."""
+    sf_dir)."""
     ix = _catalog_index(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir + "#incr_base")
-    if key in _BUILT:
-        return ix.root
-    if ix.base_complete():
-        _BUILT.add(key)
-        return ix.root
-    ix.build_base(spark, corpus_docs(spark, sf_dir))
-    _BUILT.add(key)
-    return ix.root
+    return ensure(
+        spark, ix.root, lambda root: ix.build_base(spark, corpus_docs(spark, sf_dir))
+    )
 
 
 def fold_incr_batch(spark: SparkSession, sf_dir: str) -> str:
@@ -579,22 +511,15 @@ def fold_incr_batch(spark: SparkSession, sf_dir: str) -> str:
     root = build_incr_base(spark, sf_dir)
     ix = _catalog_index(sf_dir)
     _recover_torn_compact(root)
-    key = (spark.sparkContext.applicationId, sf_dir + "#incr_fold")
-    if key in _BUILT:
-        return root
-    if all(ix.fold_complete(f"g{g}") for g in range(1, N_FOLD_GENS + 1)):
-        _BUILT.add(key)
-        return root
     # torn-fold recovery: a previous fold started (no marker) in some
     # crashed process — rebuild from scratch so every append lands
     # exactly once
     if ix.torn_fold_tag() is not None:
         ix.destroy(spark)
-        _BUILT.discard((spark.sparkContext.applicationId, sf_dir + "#incr_base"))
         build_incr_base(spark, sf_dir)
     for g in range(1, N_FOLD_GENS + 1):
-        ix.fold(spark, batch_slice_docs(spark, sf_dir, g), f"g{g}")
-    _BUILT.add(key)
+        if not ix.fold_complete(f"g{g}"):  # skip building the slice plan
+            ix.fold(spark, batch_slice_docs(spark, sf_dir, g), f"g{g}")
     return root
 
 

@@ -31,80 +31,57 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import s_tokens
+from ..sources.artifacts import ensure, scratch_root
 from ..sources.tpch import read_table
-
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-
-BM25_INDEX_VERSION = "v1"
 
 ARTIFACTS = ("postings", "term_stats", "stats")
 
-_BUILT: set[tuple[str, str]] = set()
-
 
 def index_root(sf_dir: str) -> str:
-    return os.path.join(
-        _REPO_ROOT, ".scratch", f"bm25_index_{BM25_INDEX_VERSION}",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-
-
-def _marker(root: str) -> str:
-    return os.path.join(root, "_INDEX_COMPLETE")
+    return scratch_root("bm25_index_v1", sf_dir)
 
 
 def build_bm25_index(spark: SparkSession, sf_dir: str) -> str:
     """Tokenize the documents corpus once and persist the inverted
-    index. Idempotent per (session, sf_dir); completed on-disk indexes
-    short-circuit."""
-    root = index_root(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _BUILT:
-        return root
-    if os.path.exists(_marker(root)):
-        _BUILT.add(key)
-        return root
+    index (a build-once artifact, sources/artifacts.py)."""
 
-    docs = read_table(spark, sf_dir, "documents")
-    tokd = (
-        docs.select("doc_id", F.expr(s_tokens("text")).alias("toks"))
-        .select("doc_id", F.size("toks").alias("dl"), "toks")
-    )
-    postings = (
-        tokd.select("doc_id", "dl", F.explode("toks").alias("term"))
-        .groupBy("term", "doc_id", "dl")
-        .agg(F.count("*").alias("tf"))
-        .select("term", "doc_id", "tf", "dl")
-    )
-    # term-clustered physical layout: row-group min/max on `term` make
-    # the serve-time IN-list scan skip everything but the query's terms
-    (
-        postings.repartition("term")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(root, "postings"))
-    )
-    stored = spark.read.parquet(os.path.join(root, "postings"))
-    (
-        stored.groupBy("term")
-        .agg(F.count("*").cast("double").alias("df"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(root, "term_stats"))
-    )
-    (
-        tokd.select(
-            F.count("*").cast("double").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
+    def build(root: str) -> None:
+        docs = read_table(spark, sf_dir, "documents")
+        tokd = (
+            docs.select("doc_id", F.expr(s_tokens("text")).alias("toks"))
+            .select("doc_id", F.size("toks").alias("dl"), "toks")
         )
-        .write.mode("overwrite")
-        .parquet(os.path.join(root, "stats"))
-    )
-    with open(_marker(root), "w") as fh:
-        fh.write("ok\n")
-    _BUILT.add(key)
-    return root
+        postings = (
+            tokd.select("doc_id", "dl", F.explode("toks").alias("term"))
+            .groupBy("term", "doc_id", "dl")
+            .agg(F.count("*").alias("tf"))
+            .select("term", "doc_id", "tf", "dl")
+        )
+        # term-clustered physical layout: row-group min/max on `term` make
+        # the serve-time IN-list scan skip everything but the query's terms
+        (
+            postings.repartition("term")
+            .sortWithinPartitions("term", "doc_id")
+            .write.mode("overwrite")
+            .parquet(os.path.join(root, "postings"))
+        )
+        stored = spark.read.parquet(os.path.join(root, "postings"))
+        (
+            stored.groupBy("term")
+            .agg(F.count("*").cast("double").alias("df"))
+            .write.mode("overwrite")
+            .parquet(os.path.join(root, "term_stats"))
+        )
+        (
+            tokd.select(
+                F.count("*").cast("double").alias("n_docs"),
+                F.avg("dl").alias("avgdl"),
+            )
+            .write.mode("overwrite")
+            .parquet(os.path.join(root, "stats"))
+        )
+
+    return ensure(spark, index_root(sf_dir), build)
 
 
 def read_artifact(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -36,17 +36,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.zorder import zvalue  # shared with table-format OPTIMIZE
+from ..sources.artifacts import scratch_root
 from ..sources.star import StarSchema, with_star
 from ..sources.tpch import read_table
 from ._helpers import money_sum, o_money_sum
 from .catalog import register
 
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-SCRATCH_ROOT = os.path.join(_REPO_ROOT, ".scratch")
-
-
 def scratch_path(sf_dir: str, name: str) -> str:
-    return os.path.join(SCRATCH_ROOT, "layout", os.path.basename(sf_dir.rstrip("/")), name)
+    return scratch_root("layout", sf_dir, name)
 
 
 #: layouts already written this session, keyed (application, sf_dir, name).

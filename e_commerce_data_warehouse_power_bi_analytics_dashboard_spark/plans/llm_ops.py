@@ -2930,7 +2930,7 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc-prune below AND the per-pair join, so the band self-join +
     # distinct would otherwise execute twice per run
     cands = pin(D.lsh_candidate_pairs(sigs, 16))
-    # r13 (guide §2.3/§3.2 — OPTIMIZATION_r13.md): the exact
+    # r13 (guide §2.3/§3.2): the exact
     # intersections used to be a g-keyed join — cands ⋈ shingles(doc_a)
     # ⋈ shingles(doc_b) — that shuffled the FULL shingle table plus the
     # candidate-expanded probe on (doc_b, g) (the before-plan's

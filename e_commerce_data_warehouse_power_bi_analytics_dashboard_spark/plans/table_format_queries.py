@@ -22,11 +22,10 @@ version's state from ``customer`` alone:
 
 The mod classes are disjoint where it matters (%8==1 vs %16==5 never
 overlap; inserts %8==4 are even, deletes %16==3 odd), so version state
-is pure CASE arithmetic — no replay needed oracle-side. The build runs
-once per (session, sf_dir) under ``.scratch/`` with the published
-commit log as the idempotence marker (the ann_index lifecycle); entries
-then only READ — manifest folds + pruned parquet scans, the actual
-serve path of a table format at 100 TB.
+is pure CASE arithmetic — no replay needed oracle-side. Each demo table
+is built once (sources/artifacts.py); entries then only READ — manifest
+folds + pruned parquet scans, the actual serve path of a table format
+at 100 TB.
 """
 
 from __future__ import annotations
@@ -37,42 +36,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import table_format as tf
+from ..sources.artifacts import ensure, scratch_root
 from ..sources.tpch import read_table
 from ._helpers import money_sum, o_money_sum
 from .catalog import register
-from .layout import SCRATCH_ROOT
 
 #: payload columns of the demo table (key is c_custkey)
 _PAYLOAD = ["c_name", "c_nationkey", "c_acctbal", "c_mktsegment", "c_bucket"]
 
-#: tables already built this session, keyed (application, sf_dir)
-_BUILT: set[tuple[str, str]] = set()
 
-def _complete_or_clear(root: str, final_version: int) -> bool:
-    """True if the demo table's build is COMPLETE (its final commit is
-    published). A root that exists without the final commit is a
-    crashed partial build: rebuilding over it would raise
-    CommitConflict at version 0 forever, so clear it and rebuild —
-    commits are atomic, so "final manifest present" is a sound
-    completeness marker and a cleared partial loses nothing."""
-    if os.path.exists(tf._commit_path(root, final_version)):
-        return True
-    if os.path.exists(root):
-        import shutil
-
-        shutil.rmtree(root)
-    return False
-
-
-
-
-def table_root(sf_dir: str) -> str:
-    # v2: manifest format carries per-file footer stats + partition
-    # values + writer schema (r9) — old v1 scratch tables are not reused
-    return os.path.join(
-        SCRATCH_ROOT, "table_format_v2",
-        os.path.basename(sf_dir.rstrip("/")), "dim_customer",
-    )
+def _ensure_table(spark: SparkSession, sf_dir: str, name: str, build) -> str:
+    """Demo table ``name`` for ``sf_dir``, written once by ``build(root)``
+    as a build-once artifact (sources/artifacts.py). A torn build is
+    wiped, not built over, which would raise CommitConflict at version
+    0 forever. Kind v2: manifests carry per-file footer stats +
+    partition values + writer schema (r9); v1 tables are not reused."""
+    return ensure(spark, scratch_root("table_format_v2", sf_dir, name), build)
 
 
 def _with_bucket(df: DataFrame) -> DataFrame:
@@ -126,26 +105,16 @@ def _feed2(cust: DataFrame) -> DataFrame:
 
 
 def ensure_demo_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build the 3-commit demo table once per (session, sf_dir).
+    """Build the 3-commit demo table once."""
 
-    Across processes the COMMIT LOG is the idempotence marker: a table
-    whose last published manifest is version 2 is complete (commits are
-    atomic — a crashed build leaves an unpublished version that a redo
-    simply overwrites)."""
-    root = table_root(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _BUILT:
-        return root
-    if _complete_or_clear(root, 2):
-        _BUILT.add(key)
-        return root
-    cust = _with_bucket(read_table(spark, sf_dir, "customer"))
-    base = cust.filter(F.col("c_custkey") % 4 != 0).select("c_custkey", *_PAYLOAD)
-    tf.create_table(spark, root, base, partition_by="c_bucket")
-    tf.merge(spark, root, _feed1(cust), "c_custkey", _PAYLOAD, "seq", "tb")
-    tf.merge(spark, root, _feed2(cust), "c_custkey", _PAYLOAD, "seq", "tb")
-    _BUILT.add(key)
-    return root
+    def build(root: str) -> None:
+        cust = _with_bucket(read_table(spark, sf_dir, "customer"))
+        base = cust.filter(F.col("c_custkey") % 4 != 0).select("c_custkey", *_PAYLOAD)
+        tf.create_table(spark, root, base, partition_by="c_bucket")
+        tf.merge(spark, root, _feed1(cust), "c_custkey", _PAYLOAD, "seq", "tb")
+        tf.merge(spark, root, _feed2(cust), "c_custkey", _PAYLOAD, "seq", "tb")
+
+    return _ensure_table(spark, sf_dir, "dim_customer", build)
 
 
 #: oracle CASE fragments reconstructing each version's state from customer
@@ -212,13 +181,6 @@ def tf_merge_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_merge_root(sf_dir: str) -> str:
-    return os.path.join(
-        SCRATCH_ROOT, "table_format_v2",
-        os.path.basename(sf_dir.rstrip("/")), "dim_customer_sqlmerge",
-    )
-
-
 def ensure_sql_merge_table(spark: SparkSession, sf_dir: str) -> str:
     """The SAME 3-commit history as ensure_demo_table, but v1/v2 are
     produced by ``MERGE INTO`` STATEMENTS through the SQL router
@@ -228,40 +190,35 @@ def ensure_sql_merge_table(spark: SparkSession, sf_dir: str) -> str:
     end in the same state, the entry shares tf_merge_snapshot's
     closed-form oracle: a hash match proves statement routing compiles
     to the exact same commits the Python API produces."""
-    root = _sql_merge_root(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "sqlmerge")
-    if key in _BUILT:
-        return root
-    if _complete_or_clear(root, 2):
-        _BUILT.add(key)
-        return root
-    cust = _with_bucket(read_table(spark, sf_dir, "customer"))
-    base = cust.filter(F.col("c_custkey") % 4 != 0).select("c_custkey", *_PAYLOAD)
-    tf.create_table(spark, root, base, partition_by="c_bucket")
-    cust.filter(
-        (F.col("c_custkey") % 8 == 1) | (F.col("c_custkey") % 8 == 4)
-    ).select("c_custkey", *_PAYLOAD).createOrReplaceTempView("tf_merge_src1")
-    tf.sql(spark, {"dimc": root}, """
-        MERGE INTO dimc AS t USING tf_merge_src1 AS s
-        ON t.c_custkey = s.c_custkey
-        WHEN MATCHED THEN UPDATE SET
-            c_acctbal = CAST(s.c_acctbal + 1000 AS DECIMAL(12,2)),
-            c_mktsegment = 'MERGED'
-        WHEN NOT MATCHED THEN INSERT *
-    """)
-    cust.filter(
-        (F.col("c_custkey") % 16 == 3) | (F.col("c_custkey") % 16 == 5)
-    ).select("c_custkey", *_PAYLOAD).createOrReplaceTempView("tf_merge_src2")
-    tf.sql(spark, {"dimc": root}, """
-        MERGE INTO dimc AS t USING tf_merge_src2 AS s
-        ON t.c_custkey = s.c_custkey
-        WHEN MATCHED AND t.c_custkey % 16 = 3 THEN DELETE
-        WHEN MATCHED THEN UPDATE SET
-            c_acctbal = CAST(s.c_acctbal - 500 AS DECIMAL(12,2)),
-            c_mktsegment = 'MERGED2'
-    """)
-    _BUILT.add(key)
-    return root
+
+    def build(root: str) -> None:
+        cust = _with_bucket(read_table(spark, sf_dir, "customer"))
+        base = cust.filter(F.col("c_custkey") % 4 != 0).select("c_custkey", *_PAYLOAD)
+        tf.create_table(spark, root, base, partition_by="c_bucket")
+        cust.filter(
+            (F.col("c_custkey") % 8 == 1) | (F.col("c_custkey") % 8 == 4)
+        ).select("c_custkey", *_PAYLOAD).createOrReplaceTempView("tf_merge_src1")
+        tf.sql(spark, {"dimc": root}, """
+            MERGE INTO dimc AS t USING tf_merge_src1 AS s
+            ON t.c_custkey = s.c_custkey
+            WHEN MATCHED THEN UPDATE SET
+                c_acctbal = CAST(s.c_acctbal + 1000 AS DECIMAL(12,2)),
+                c_mktsegment = 'MERGED'
+            WHEN NOT MATCHED THEN INSERT *
+        """)
+        cust.filter(
+            (F.col("c_custkey") % 16 == 3) | (F.col("c_custkey") % 16 == 5)
+        ).select("c_custkey", *_PAYLOAD).createOrReplaceTempView("tf_merge_src2")
+        tf.sql(spark, {"dimc": root}, """
+            MERGE INTO dimc AS t USING tf_merge_src2 AS s
+            ON t.c_custkey = s.c_custkey
+            WHEN MATCHED AND t.c_custkey % 16 = 3 THEN DELETE
+            WHEN MATCHED THEN UPDATE SET
+                c_acctbal = CAST(s.c_acctbal - 500 AS DECIMAL(12,2)),
+                c_mktsegment = 'MERGED2'
+        """)
+
+    return _ensure_table(spark, sf_dir, "dim_customer_sqlmerge", build)
 
 
 @register(
@@ -298,13 +255,6 @@ def tf_merge_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _full_sync_root(sf_dir: str) -> str:
-    return os.path.join(
-        SCRATCH_ROOT, "table_format_v2",
-        os.path.basename(sf_dir.rstrip("/")), "dim_customer_fullsync",
-    )
-
-
 def ensure_full_sync_table(spark: SparkSession, sf_dir: str) -> str:
     """A third demo table for the FULL-SYNC dimension refresh (r11 —
     verdict #2): base = customers %4 != 0; one ``MERGE INTO`` statement
@@ -315,33 +265,28 @@ def ensure_full_sync_table(spark: SparkSession, sf_dir: str) -> str:
     overdrawn, else flagged 'STALE' — the other half of the
     reference's ON CONFLICT dim-refresh semantics, ETL.sql:304-315).
     Own scratch root so no other demo's commit log can half-match."""
-    root = _full_sync_root(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "fullsync")
-    if key in _BUILT:
-        return root
-    if _complete_or_clear(root, 1):
-        _BUILT.add(key)
-        return root
-    cust = _with_bucket(read_table(spark, sf_dir, "customer"))
-    base = cust.filter(F.col("c_custkey") % 4 != 0).select("c_custkey", *_PAYLOAD)
-    tf.create_table(spark, root, base, partition_by="c_bucket")
-    # the upstream's CURRENT dimension image: %3 != 0 (drops a third of
-    # the base keys, adds the %4==0 keys that also pass %3)
-    cust.filter(F.col("c_custkey") % 3 != 0).select(
-        "c_custkey", *_PAYLOAD
-    ).createOrReplaceTempView("tf_fullsync_src")
-    tf.sql(spark, {"dimc": root}, """
-        MERGE INTO dimc AS t USING tf_fullsync_src AS s
-        ON t.c_custkey = s.c_custkey AND t.c_bucket = s.c_bucket
-        WHEN MATCHED THEN UPDATE SET
-            c_acctbal = CAST(s.c_acctbal + 100 AS DECIMAL(12,2)),
-            c_mktsegment = 'SYNC'
-        WHEN NOT MATCHED THEN INSERT *
-        WHEN NOT MATCHED BY SOURCE AND t.c_acctbal < 0 THEN DELETE
-        WHEN NOT MATCHED BY SOURCE THEN UPDATE SET c_mktsegment = 'STALE'
-    """, strict_merge=True)
-    _BUILT.add(key)
-    return root
+
+    def build(root: str) -> None:
+        cust = _with_bucket(read_table(spark, sf_dir, "customer"))
+        base = cust.filter(F.col("c_custkey") % 4 != 0).select("c_custkey", *_PAYLOAD)
+        tf.create_table(spark, root, base, partition_by="c_bucket")
+        # the upstream's CURRENT dimension image: %3 != 0 (drops a third of
+        # the base keys, adds the %4==0 keys that also pass %3)
+        cust.filter(F.col("c_custkey") % 3 != 0).select(
+            "c_custkey", *_PAYLOAD
+        ).createOrReplaceTempView("tf_fullsync_src")
+        tf.sql(spark, {"dimc": root}, """
+            MERGE INTO dimc AS t USING tf_fullsync_src AS s
+            ON t.c_custkey = s.c_custkey AND t.c_bucket = s.c_bucket
+            WHEN MATCHED THEN UPDATE SET
+                c_acctbal = CAST(s.c_acctbal + 100 AS DECIMAL(12,2)),
+                c_mktsegment = 'SYNC'
+            WHEN NOT MATCHED THEN INSERT *
+            WHEN NOT MATCHED BY SOURCE AND t.c_acctbal < 0 THEN DELETE
+            WHEN NOT MATCHED BY SOURCE THEN UPDATE SET c_mktsegment = 'STALE'
+        """, strict_merge=True)
+
+    return _ensure_table(spark, sf_dir, "dim_customer_fullsync", build)
 
 
 @register(
@@ -429,13 +374,6 @@ def tf_time_travel_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _colmap_root(sf_dir: str) -> str:
-    return os.path.join(
-        SCRATCH_ROOT, "table_format_v2",
-        os.path.basename(sf_dir.rstrip("/")), "dim_customer_colmap",
-    )
-
-
 def ensure_colmap_table(spark: SparkSession, sf_dir: str) -> str:
     """NON-ADDITIVE schema evolution demo (r11 — verdict #5): a
     COLUMN-MAPPED table (immutable physical names, logical names in the
@@ -453,36 +391,31 @@ def ensure_colmap_table(spark: SparkSession, sf_dir: str) -> str:
     v5 re-adds the very name v4 dropped — the resurrection trap: the
     new field id maps to a physical column no existing file has, so
     every pre-v5 row MUST read NULL (the entry's oracle pins it)."""
-    root = _colmap_root(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "colmap")
-    if key in _BUILT:
-        return root
-    if _complete_or_clear(root, 6):
-        _BUILT.add(key)
-        return root
-    cust = read_table(spark, sf_dir, "customer").withColumn(
-        "c_acctbal", F.col("c_acctbal").cast("decimal(12,2)")
-    )
-    cols = ["c_custkey", "c_name", "c_acctbal", "c_mktsegment"]
-    tf.create_table(
-        spark, root,
-        cust.filter(F.col("c_custkey") % 4 != 0).select(*cols),
-        files=2, column_mapping=True,
-    )
-    tf.rename_column(root, "c_mktsegment", "segment")
-    tf.append(
-        spark, root,
-        cust.filter(F.col("c_custkey") % 4 == 0).select(
-            "c_custkey", "c_name", "c_acctbal",
-            F.col("c_mktsegment").alias("segment"),
-        ),
-    )
-    tf.widen_column(root, "c_acctbal", "decimal(14,2)")
-    tf.drop_column(root, "c_name")
-    tf.add_column(root, "c_name", "string")
-    tf.delete_where(spark, root, "c_custkey % 10 = 7")
-    _BUILT.add(key)
-    return root
+
+    def build(root: str) -> None:
+        cust = read_table(spark, sf_dir, "customer").withColumn(
+            "c_acctbal", F.col("c_acctbal").cast("decimal(12,2)")
+        )
+        cols = ["c_custkey", "c_name", "c_acctbal", "c_mktsegment"]
+        tf.create_table(
+            spark, root,
+            cust.filter(F.col("c_custkey") % 4 != 0).select(*cols),
+            files=2, column_mapping=True,
+        )
+        tf.rename_column(root, "c_mktsegment", "segment")
+        tf.append(
+            spark, root,
+            cust.filter(F.col("c_custkey") % 4 == 0).select(
+                "c_custkey", "c_name", "c_acctbal",
+                F.col("c_mktsegment").alias("segment"),
+            ),
+        )
+        tf.widen_column(root, "c_acctbal", "decimal(14,2)")
+        tf.drop_column(root, "c_name")
+        tf.add_column(root, "c_name", "string")
+        tf.delete_where(spark, root, "c_custkey % 10 = 7")
+
+    return _ensure_table(spark, sf_dir, "dim_customer_colmap", build)
 
 
 #: the demo's per-version oracle facts: (filter, name_nonnull rule,
@@ -610,35 +543,23 @@ def tf_column_mapping_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _evo_root(sf_dir: str) -> str:
-    return os.path.join(
-        SCRATCH_ROOT, "table_format_v2",
-        os.path.basename(sf_dir.rstrip("/")), "dim_customer_evo",
-    )
-
-
 def ensure_evo_table(spark: SparkSession, sf_dir: str) -> str:
     """A second demo table for ADDITIVE SCHEMA EVOLUTION: commit 0 is
     the same %4!=0 base (no loyalty_tier column); commit 1 APPENDS the
     remaining customers WITH a new loyalty_tier column. Own root so the
     merge/time-travel entries' snapshots stay untouched."""
-    root = _evo_root(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir + "#evo")
-    if key in _BUILT:
-        return root
-    if _complete_or_clear(root, 1):
-        _BUILT.add(key)
-        return root
-    cust = _with_bucket(read_table(spark, sf_dir, "customer"))
-    base = cust.filter(F.col("c_custkey") % 4 != 0).select("c_custkey", *_PAYLOAD)
-    tf.create_table(spark, root, base, partition_by="c_bucket")
-    evolved = cust.filter(F.col("c_custkey") % 4 == 0).select(
-        "c_custkey", *_PAYLOAD,
-        (F.col("c_custkey") % 3).cast("int").alias("loyalty_tier"),
-    )
-    tf.append(spark, root, evolved)
-    _BUILT.add(key)
-    return root
+
+    def build(root: str) -> None:
+        cust = _with_bucket(read_table(spark, sf_dir, "customer"))
+        base = cust.filter(F.col("c_custkey") % 4 != 0).select("c_custkey", *_PAYLOAD)
+        tf.create_table(spark, root, base, partition_by="c_bucket")
+        evolved = cust.filter(F.col("c_custkey") % 4 == 0).select(
+            "c_custkey", *_PAYLOAD,
+            (F.col("c_custkey") % 3).cast("int").alias("loyalty_tier"),
+        )
+        tf.append(spark, root, evolved)
+
+    return _ensure_table(spark, sf_dir, "dim_customer_evo", build)
 
 
 @register(
@@ -927,35 +848,23 @@ def tf_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sorted_root(sf_dir: str) -> str:
-    return os.path.join(
-        SCRATCH_ROOT, "table_format_v2",
-        os.path.basename(sf_dir.rstrip("/")), "dim_customer_sorted",
-    )
-
-
 def ensure_sorted_table(spark: SparkSession, sf_dir: str) -> str:
     """A third demo table for SORTED COMPACTION: commit 0 is the full
     customer set as ONE unsorted file (every range query must scan it);
     commit 1 is ``compact(files=4, sort_by='c_custkey')`` — OPTIMIZE +
     1-D ZORDER: four range-clustered files whose manifest stats carry
     DISJOINT c_custkey intervals."""
-    root = _sorted_root(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir + "#sorted")
-    if key in _BUILT:
-        return root
-    if _complete_or_clear(root, 1):
-        _BUILT.add(key)
-        return root
-    cust = read_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_acctbal").cast("decimal(12,2)").alias("c_acctbal"),
-        "c_mktsegment",
-    )
-    tf.create_table(spark, root, cust, files=1)
-    tf.compact(spark, root, files=4, sort_by="c_custkey")
-    _BUILT.add(key)
-    return root
+
+    def build(root: str) -> None:
+        cust = read_table(spark, sf_dir, "customer").select(
+            "c_custkey",
+            F.col("c_acctbal").cast("decimal(12,2)").alias("c_acctbal"),
+            "c_mktsegment",
+        )
+        tf.create_table(spark, root, cust, files=1)
+        tf.compact(spark, root, files=4, sort_by="c_custkey")
+
+    return _ensure_table(spark, sf_dir, "dim_customer_sorted", build)
 
 
 @register(
@@ -1006,13 +915,6 @@ def tf_sorted_range_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mor_root(sf_dir: str) -> str:
-    return os.path.join(
-        SCRATCH_ROOT, "table_format_v2",
-        os.path.basename(sf_dir.rstrip("/")), "dim_customer_mor",
-    )
-
-
 def ensure_mor_table(spark: SparkSession, sf_dir: str) -> str:
     """A fourth demo table for MERGE-ON-READ deletes: commit 0 is the
     full customer set in 4 files; commits 1 and 2 are ``delete_where``
@@ -1026,24 +928,19 @@ def ensure_mor_table(spark: SparkSession, sf_dir: str) -> str:
       v2  DELETE  = c_custkey % 10 = 7 (of remaining)  (position vectors)
       v3  COMPACT = rewrite, vectors retired
     """
-    root = _mor_root(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir + "#mor")
-    if key in _BUILT:
-        return root
-    if _complete_or_clear(root, 3):
-        _BUILT.add(key)
-        return root
-    cust = read_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name",
-        F.col("c_acctbal").cast("decimal(12,2)").alias("c_acctbal"),
-        "c_mktsegment",
-    )
-    tf.create_table(spark, root, cust, files=4)
-    tf.delete_where(spark, root, "c_mktsegment = 'BUILDING'")
-    tf.delete_where(spark, root, "c_custkey % 10 = 7")
-    tf.compact(spark, root, files=2)
-    _BUILT.add(key)
-    return root
+
+    def build(root: str) -> None:
+        cust = read_table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_name",
+            F.col("c_acctbal").cast("decimal(12,2)").alias("c_acctbal"),
+            "c_mktsegment",
+        )
+        tf.create_table(spark, root, cust, files=4)
+        tf.delete_where(spark, root, "c_mktsegment = 'BUILDING'")
+        tf.delete_where(spark, root, "c_custkey % 10 = 7")
+        tf.compact(spark, root, files=2)
+
+    return _ensure_table(spark, sf_dir, "dim_customer_mor", build)
 
 
 #: survivors after both MoR deletes (v2 == v3 state)
@@ -1168,36 +1065,24 @@ def tf_mor_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _zorder_root(sf_dir: str) -> str:
-    return os.path.join(
-        SCRATCH_ROOT, "table_format_v2",
-        os.path.basename(sf_dir.rstrip("/")), "orders_zorder",
-    )
-
-
 def ensure_zorder_table(spark: SparkSession, sf_dir: str) -> str:
     """A fifth demo table for 2-D OPTIMIZE ZORDER: commit 0 is orders
     (custkey, day-number, totalprice) as ONE unclustered file; commit 1
     is ``compact(files=8, zorder_by=(o_custkey, o_day))`` — Morton-
     interleaved range clustering, so every file's manifest stats carry
     a bounded RECTANGLE in (custkey, day) space."""
-    root = _zorder_root(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir + "#zorder")
-    if key in _BUILT:
-        return root
-    if _complete_or_clear(root, 1):
-        _BUILT.add(key)
-        return root
-    orders = read_table(spark, sf_dir, "orders").select(
-        "o_custkey",
-        F.datediff(F.col("o_orderdate"), F.lit("1992-01-01").cast("date"))
-        .cast("int").alias("o_day"),
-        F.col("o_totalprice").cast("decimal(18,2)").alias("o_totalprice"),
-    )
-    tf.create_table(spark, root, orders, files=1)
-    tf.compact(spark, root, files=8, zorder_by=("o_custkey", "o_day"))
-    _BUILT.add(key)
-    return root
+
+    def build(root: str) -> None:
+        orders = read_table(spark, sf_dir, "orders").select(
+            "o_custkey",
+            F.datediff(F.col("o_orderdate"), F.lit("1992-01-01").cast("date"))
+            .cast("int").alias("o_day"),
+            F.col("o_totalprice").cast("decimal(18,2)").alias("o_totalprice"),
+        )
+        tf.create_table(spark, root, orders, files=1)
+        tf.compact(spark, root, files=8, zorder_by=("o_custkey", "o_day"))
+
+    return _ensure_table(spark, sf_dir, "orders_zorder", build)
 
 
 @register(
@@ -1264,40 +1149,28 @@ def tf_zorder_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _upd_root(sf_dir: str) -> str:
-    return os.path.join(
-        SCRATCH_ROOT, "table_format_v2",
-        os.path.basename(sf_dir.rstrip("/")), "dim_customer_upd",
-    )
-
-
 def ensure_upd_table(spark: SparkSession, sf_dir: str) -> str:
     """A sixth demo table for MERGE-ON-READ UPDATE: v0 is the full
     customer set (4 files); v1 is one ``update_where`` commit that
     vector-deletes the MACHINERY rows' positions and appends their
     updated images — no pre-existing file rewritten."""
-    root = _upd_root(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir + "#upd")
-    if key in _BUILT:
-        return root
-    if _complete_or_clear(root, 1):
-        _BUILT.add(key)
-        return root
-    cust = read_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_acctbal").cast("decimal(12,2)").alias("c_acctbal"),
-        "c_mktsegment",
-    )
-    tf.create_table(spark, root, cust, files=4)
-    tf.update_where(
-        spark, root, "c_mktsegment = 'MACHINERY'",
-        {
-            "c_acctbal": "CAST(c_acctbal + 250 AS DECIMAL(12,2))",
-            "c_mktsegment": "'UPDATED'",
-        },
-    )
-    _BUILT.add(key)
-    return root
+
+    def build(root: str) -> None:
+        cust = read_table(spark, sf_dir, "customer").select(
+            "c_custkey",
+            F.col("c_acctbal").cast("decimal(12,2)").alias("c_acctbal"),
+            "c_mktsegment",
+        )
+        tf.create_table(spark, root, cust, files=4)
+        tf.update_where(
+            spark, root, "c_mktsegment = 'MACHINERY'",
+            {
+                "c_acctbal": "CAST(c_acctbal + 250 AS DECIMAL(12,2))",
+                "c_mktsegment": "'UPDATED'",
+            },
+        )
+
+    return _ensure_table(spark, sf_dir, "dim_customer_upd", build)
 
 
 @register(
@@ -1346,35 +1219,23 @@ _CHK = {
 }
 
 
-def _chk_root(sf_dir: str) -> str:
-    return os.path.join(
-        SCRATCH_ROOT, "table_format_v2",
-        os.path.basename(sf_dir.rstrip("/")), "dim_customer_chk",
-    )
-
-
 def ensure_chk_table(spark: SparkSession, sf_dir: str) -> str:
     """A seventh demo table for CHECK constraints: created WITH two
     constraints (validated at create), then one constrained append."""
-    root = _chk_root(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir + "#chk")
-    if key in _BUILT:
-        return root
-    if _complete_or_clear(root, 1):
-        _BUILT.add(key)
-        return root
-    cust = read_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_acctbal").cast("decimal(12,2)").alias("c_acctbal"),
-        "c_mktsegment",
-    )
-    tf.create_table(
-        spark, root, cust.filter(F.col("c_custkey") % 2 == 1), files=2,
-        constraints=_CHK,
-    )
-    tf.append(spark, root, cust.filter(F.col("c_custkey") % 2 == 0), files=2)
-    _BUILT.add(key)
-    return root
+
+    def build(root: str) -> None:
+        cust = read_table(spark, sf_dir, "customer").select(
+            "c_custkey",
+            F.col("c_acctbal").cast("decimal(12,2)").alias("c_acctbal"),
+            "c_mktsegment",
+        )
+        tf.create_table(
+            spark, root, cust.filter(F.col("c_custkey") % 2 == 1), files=2,
+            constraints=_CHK,
+        )
+        tf.append(spark, root, cust.filter(F.col("c_custkey") % 2 == 0), files=2)
+
+    return _ensure_table(spark, sf_dir, "dim_customer_chk", build)
 
 
 @register(
@@ -1436,20 +1297,6 @@ def tf_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------------- r12: REORG PURGE demo
 
-def _purge_root(sf_dir: str) -> str:
-    return os.path.join(
-        SCRATCH_ROOT, "table_format_v2",
-        os.path.basename(sf_dir.rstrip("/")), "dim_customer_purge",
-    )
-
-
-def _purge_vac_root(sf_dir: str) -> str:
-    return os.path.join(
-        SCRATCH_ROOT, "table_format_v2",
-        os.path.basename(sf_dir.rstrip("/")), "dim_customer_purge_vac",
-    )
-
-
 def _build_purge_history(spark: SparkSession, sf_dir: str, root: str) -> None:
     """The erasure composition VERDICT r11 #3 asked for, as commits:
 
@@ -1485,34 +1332,23 @@ def _build_purge_history(spark: SparkSession, sf_dir: str, root: str) -> None:
 
 
 def ensure_purge_table(spark: SparkSession, sf_dir: str) -> str:
-    root = _purge_root(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "purge")
-    if key in _BUILT:
-        return root
-    if _complete_or_clear(root, 4):
-        _BUILT.add(key)
-        return root
-    _build_purge_history(spark, sf_dir, root)
-    _BUILT.add(key)
-    return root
+    return _ensure_table(
+        spark, sf_dir, "dim_customer_purge",
+        lambda root: _build_purge_history(spark, sf_dir, root),
+    )
 
 
 def ensure_purge_vacuumed_table(spark: SparkSession, sf_dir: str) -> str:
     """The same history, then ``VACUUM RETAIN 1`` — the end state of
     the erasure story, where the dead bytes are physically gone.
-    Vacuum publishes no commit, so completeness is the final commit
-    PLUS the retention floor it records; a crash between them re-runs
-    only the (idempotent) vacuum."""
-    root = _purge_vac_root(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "purge_vac")
-    if key in _BUILT:
-        return root
-    if not _complete_or_clear(root, 4):
+    Vacuum publishes no commit, so the table is complete only once the
+    marker written after the vacuum exists."""
+
+    def build(root: str) -> None:
         _build_purge_history(spark, sf_dir, root)
-    if tf.earliest_readable(root) < 4:
         tf.vacuum(root, keep_versions=1, orphan_grace_sec=0.0)
-    _BUILT.add(key)
-    return root
+
+    return _ensure_table(spark, sf_dir, "dim_customer_purge_vac", build)
 
 
 def _purge_fact_columns(spark: SparkSession, root: str) -> tuple[list, list]:

@@ -12,18 +12,15 @@ alone"): the scale-correct fix is the silver table a warehouse load
 writes once — bucketed so repeated joins/aggregations on the bucket key
 skip their exchange and so the scan parallelizes across buckets.
 
-This module is that layout job. It mirrors the established index
-lifecycle (operators/ann_index.py — the reference's CREATE INDEX
-analog): built ONCE per scale-factor dir under ``.scratch/``, completion
-marker, idempotent cross-process reuse by registering the existing
-files (bucketed datasource tables need catalog metadata; the in-memory
-catalog forgets it across processes while the files persist, so a fresh
-process re-registers with ``CREATE TABLE ... CLUSTERED BY ...
-LOCATION`` — DDL only, no rewrite). Build cost shows in the load phase
-(bench.py ``load_sec``) on a cold run, exactly like the other index
-builds; the data content is IDENTICAL to the raw file (same rows, same
-schema — only the physical clustering changes), so every query computes
-from the same inputs.
+This module is that layout job, one build-once artifact per table
+(sources/artifacts.py). The in-memory catalog forgets bucketing metadata
+across processes while the files persist, so a fresh process
+re-registers the built files with ``CREATE TABLE ... CLUSTERED BY ...
+LOCATION`` (DDL only, no rewrite). Build cost shows in the load phase
+(bench.py ``load_sec``) on a cold run, like the index builds; the data
+content is IDENTICAL to the raw file (same rows, same schema — only the
+physical clustering changes), so every query computes from the same
+inputs.
 
 Bucket count is a FIXED layout constant (like any real table's bucket
 spec), not derived from the session's core count: the table must be
@@ -36,26 +33,13 @@ would size buckets to the 128 MB-1 GB guide target instead (§6).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-SILVER_VERSION = "v1"
+from .artifacts import ensure, scratch_root
+
+SILVER_KIND = "silver_v1"
 SILVER_BUCKETS = 32
-
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-
-#: per-process registry: (applicationId, sf_dir, table) known ready
-_READY: set[tuple[str, str, str]] = set()
-
-
-def silver_root(sf_dir: str) -> str:
-    return os.path.join(
-        _REPO_ROOT, ".scratch", f"silver_{SILVER_VERSION}",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
 
 
 def _ident(sf_dir: str) -> str:
@@ -66,10 +50,6 @@ def table_name(sf_dir: str, name: str) -> str:
     return f"silver_{name}_{_ident(sf_dir)}"
 
 
-def _marker(loc: str) -> str:
-    return os.path.join(loc, "_SILVER_COMPLETE")
-
-
 def ensure_bucketed(
     spark: SparkSession,
     sf_dir: str,
@@ -78,37 +58,31 @@ def ensure_bucketed(
     bucket_col: str,
 ) -> DataFrame:
     """Return ``name`` as a bucketed catalog table for ``sf_dir``,
-    building it from ``build()`` on first use (marker-gated, torn
-    builds wiped and retried) or registering already-built files.
+    writing it from ``build()`` on first use or registering files an
+    earlier process wrote.
 
     The write repartitions on the bucket column first so each bucket is
     ONE file (otherwise every write task emits a file per bucket —
     tasks x buckets tiny files, guide §6's small-files trap).
     """
     tbl = table_name(sf_dir, name)
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if key in _READY:
-        return spark.table(tbl)
-    loc = os.path.join(silver_root(sf_dir), name)
-    if not os.path.exists(_marker(loc)):
-        # no completed build: wipe any torn one and write fresh
-        shutil.rmtree(loc, ignore_errors=True)
+
+    def write(loc: str) -> None:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        df = build()
         (
-            df.repartition(SILVER_BUCKETS, bucket_col)
+            build().repartition(SILVER_BUCKETS, bucket_col)
             .write.mode("overwrite")
             .option("path", loc)
             .bucketBy(SILVER_BUCKETS, bucket_col)
             .sortBy(bucket_col)
             .saveAsTable(tbl)
         )
-        with open(_marker(loc), "w") as f:
-            f.write("")
-    elif not spark.catalog.tableExists(tbl):
-        # files exist from a prior process: register, don't rewrite.
-        # Schema comes from the builder's (never-executed) logical plan
-        # so the DDL always matches what the files were written with.
+
+    def register(loc: str) -> None:
+        if spark.catalog.tableExists(tbl):
+            return
+        # schema from the builder's (never-executed) logical plan, so
+        # the DDL always matches what the files were written with
         ddl = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}"
             for f in build().schema.fields
@@ -118,5 +92,6 @@ def ensure_bucketed(
             f"CLUSTERED BY ({bucket_col}) INTO {SILVER_BUCKETS} BUCKETS "
             f"LOCATION '{loc}'"
         )
-    _READY.add(key)
+
+    ensure(spark, scratch_root(SILVER_KIND, sf_dir, name), write, register)
     return spark.table(tbl)

@@ -258,8 +258,7 @@ class StarSchema:
         # clustering (exchange-free basket/graph edge builds), with no
         # second fact-sized cache copy resident. The scan stays
         # UNPERSISTED: the bucketed read is a 32-task columnar scan of
-        # the OS-page-cached silver files (measured at parity with the
-        # r12 in-memory copy; numbers in OPTIMIZATION_r13.md).
+        # the OS-page-cached silver files.
         # The UN-partitioned fact plan stays persisted: several entries
         # (the ELT differential SQL, the staging reconciliation) build
         # the raw conformance join themselves, and CacheManager

@@ -139,8 +139,8 @@ class OnlineMinhashDedup:
 
     def bootstrap(self, corpus: DataFrame) -> None:
         """Build the base generation from the bootstrap corpus and land
-        it as docs/epoch=-1. Caller gates idempotence (the catalog-side
-        pattern: skip when the base marker exists)."""
+        it as docs/epoch=-1. Caller gates idempotence (the catalog
+        binding runs the base build through sources/artifacts.ensure)."""
         self.index.build_base(self.spark, corpus)
         (
             corpus.withColumn("epoch", F.lit(-1))

@@ -1,11 +1,13 @@
-"""Round-13 optimization profiler: isolate catalog entries with the
-noop sink (guide §1.4), bench-identical methodology (warm-up rep,
-internal-cache eviction, median of N), and capture
-``explain("formatted")`` to plans/r12/<name>_<tag>.txt.
+"""Per-entry profiler: isolate catalog entries with the noop sink
+(guide §1.4), bench-identical methodology (warm-up rep, internal-cache
+eviction, median of N), and capture ``explain("formatted")`` to
+plans/profile/<name>_<tag>.txt. (Not named ``profile.py``: a script
+directory on ``sys.path`` would shadow the stdlib ``profile`` module
+that ``cProfile``, and through it pyspark, imports.)
 
 Usage:
-    python profile_r13.py <tag> <entry> [<entry> ...]
-    SPARK_GRAFT_PROF_REPS=3 python profile_r13.py before er_customer_linkage
+    python profile_entries.py <tag> <entry> [<entry> ...]
+    SPARK_GRAFT_PROF_REPS=3 python profile_entries.py before er_customer_linkage
 
 Prints one line per entry: median + per-rep samples. The tag names the
 plan files (before/after). Not part of the driver contract — a
@@ -40,7 +42,7 @@ def main() -> None:
         shuffle_partitions=int(os.environ.get("SPARK_GRAFT_BENCH_SHUFFLE", "8")),
     )
     catalog = get_catalog()
-    plans_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r13")
+    plans_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "profile")
     os.makedirs(plans_dir, exist_ok=True)
     # warm the same session artifacts bench.py declares warm, but only
     # the cheap universal ones; entries that need the index builds

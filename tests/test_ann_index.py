@@ -30,12 +30,12 @@ def _rows(df):
 
 def test_build_is_idempotent_and_marked(spark):
     root = IX.build_ann_index(spark, SF_SMOKE)
-    assert os.path.exists(os.path.join(root, "_INDEX_COMPLETE"))
+    assert os.path.exists(os.path.join(root, "_COMPLETE"))
     for name in IX.ARTIFACTS:
         assert os.path.isdir(os.path.join(root, name)), name
-    mtime = os.path.getmtime(os.path.join(root, "_INDEX_COMPLETE"))
+    mtime = os.path.getmtime(os.path.join(root, "_COMPLETE"))
     assert IX.build_ann_index(spark, SF_SMOKE) == root
-    assert os.path.getmtime(os.path.join(root, "_INDEX_COMPLETE")) == mtime
+    assert os.path.getmtime(os.path.join(root, "_COMPLETE")) == mtime
 
 
 def test_serve_equals_train_inline_flat_adc(spark):
@@ -163,49 +163,43 @@ def test_incr_kfold_appends_only_slice_sized_deltas(
     monkeypatch.setattr(
         IX, "incr_index_root", lambda sf: str(tmp_path / "incr")
     )
-    saved = set(IX._INCR_BUILT)
-    IX._INCR_BUILT.clear()
-    try:
-        root = IX.build_incr_base(spark, SF_SMOKE)
-        frozen = ("coarse", "books_raw")
-        watched = list(IX._INCR_FOLDED) + list(frozen)
-        n_batch = IX.batch_embeddings(spark, SF_SMOKE).count()
-        n_all = read_table(spark, SF_SMOKE, "embeddings").count()
-        assert n_batch > 0
-        slice_ns = [
-            IX.batch_slice_embeddings(spark, SF_SMOKE, g).count()
-            for g in range(1, IX.N_FOLD_GENS + 1)
-        ]
-        assert sum(slice_ns) == n_batch  # slices partition the batch
-        state = {
-            n: _tree_state(os.path.join(root, n)) for n in watched
-        }
-        for g in range(1, IX.N_FOLD_GENS + 1):
-            IX._fold_one_gen(spark, SF_SMOKE, root, g)
-            # nothing previously written moved
-            for n, st in state.items():
-                assert _tree_state(os.path.join(root, n)) == st, (
-                    f"fold g{g} touched {n}"
-                )
-            # this generation's delta is sized by its slice
-            assert spark.read.parquet(
-                os.path.join(root, f"assign_b{g}")
-            ).count() == slice_ns[g - 1]
-            for a in IX._INCR_FOLDED:
-                d = f"{a}_b{g}"
-                assert d in IX.read_layout(root)[a]
-                state[d] = _tree_state(os.path.join(root, d))
-        # marker short-circuit: a full fold call is now a no-op
-        assert IX.fold_incr_batch(spark, SF_SMOKE) == root
+    root = IX.build_incr_base(spark, SF_SMOKE)
+    frozen = ("coarse", "books_raw")
+    watched = list(IX._INCR_FOLDED) + list(frozen)
+    n_batch = IX.batch_embeddings(spark, SF_SMOKE).count()
+    n_all = read_table(spark, SF_SMOKE, "embeddings").count()
+    assert n_batch > 0
+    slice_ns = [
+        IX.batch_slice_embeddings(spark, SF_SMOKE, g).count()
+        for g in range(1, IX.N_FOLD_GENS + 1)
+    ]
+    assert sum(slice_ns) == n_batch  # slices partition the batch
+    state = {
+        n: _tree_state(os.path.join(root, n)) for n in watched
+    }
+    for g in range(1, IX.N_FOLD_GENS + 1):
+        IX._fold_one_gen(spark, SF_SMOKE, root, g)
+        # nothing previously written moved
         for n, st in state.items():
-            assert _tree_state(os.path.join(root, n)) == st
-        # folded read = union corpus
-        assert IX.read_incr_artifact(spark, SF_SMOKE, "assign").count() == n_all
-        assert IX.read_incr_artifact(
-            spark, SF_SMOKE, "codes_raw").count() == IX.PQ_M * n_all
-    finally:
-        IX._INCR_BUILT.clear()
-        IX._INCR_BUILT.update(saved)
+            assert _tree_state(os.path.join(root, n)) == st, (
+                f"fold g{g} touched {n}"
+            )
+        # this generation's delta is sized by its slice
+        assert spark.read.parquet(
+            os.path.join(root, f"assign_b{g}")
+        ).count() == slice_ns[g - 1]
+        for a in IX._INCR_FOLDED:
+            d = f"{a}_b{g}"
+            assert d in IX.read_layout(root)[a]
+            state[d] = _tree_state(os.path.join(root, d))
+    # marker short-circuit: a full fold call is now a no-op
+    assert IX.fold_incr_batch(spark, SF_SMOKE) == root
+    for n, st in state.items():
+        assert _tree_state(os.path.join(root, n)) == st
+    # folded read = union corpus
+    assert IX.read_incr_artifact(spark, SF_SMOKE, "assign").count() == n_all
+    assert IX.read_incr_artifact(
+        spark, SF_SMOKE, "codes_raw").count() == IX.PQ_M * n_all
 
 
 def test_incr_fold_assignments_use_frozen_centroids(spark, tmp_path, monkeypatch):
@@ -217,34 +211,28 @@ def test_incr_fold_assignments_use_frozen_centroids(spark, tmp_path, monkeypatch
     monkeypatch.setattr(
         IX, "incr_index_root", lambda sf: str(tmp_path / "incr2")
     )
-    saved = set(IX._INCR_BUILT)
-    IX._INCR_BUILT.clear()
-    try:
-        root = IX.fold_incr_batch(spark, SF_SMOKE)
-        coarse = spark.read.parquet(os.path.join(root, "coarse"))
-        batch_ids = {
-            r[0] for r in IX.batch_embeddings(spark, SF_SMOKE)
-            .select("vec_id").collect()
-        }
-        cent_ids = {r[0] for r in coarse.select("centroid_id").collect()}
-        assert not (cent_ids & batch_ids)
-        from pyspark.sql import functions as F
+    root = IX.fold_incr_batch(spark, SF_SMOKE)
+    coarse = spark.read.parquet(os.path.join(root, "coarse"))
+    batch_ids = {
+        r[0] for r in IX.batch_embeddings(spark, SF_SMOKE)
+        .select("vec_id").collect()
+    }
+    cent_ids = {r[0] for r in coarse.select("centroid_id").collect()}
+    assert not (cent_ids & batch_ids)
+    from pyspark.sql import functions as F
 
-        expected = S.assign_centroids(
-            IX.batch_embeddings(spark, SF_SMOKE),
-            coarse.select(
-                F.col("centroid_id").alias("vec_id"),
-                F.col("cv").alias("embedding"),
-            ),
-        ).select("vid", "centroid_id")
-        got = None
-        for g in range(1, IX.N_FOLD_GENS + 1):
-            part = spark.read.parquet(os.path.join(root, f"assign_b{g}"))
-            got = part if got is None else got.unionByName(part)
-        assert _rows(got) == _rows(expected)
-    finally:
-        IX._INCR_BUILT.clear()
-        IX._INCR_BUILT.update(saved)
+    expected = S.assign_centroids(
+        IX.batch_embeddings(spark, SF_SMOKE),
+        coarse.select(
+            F.col("centroid_id").alias("vec_id"),
+            F.col("cv").alias("embedding"),
+        ),
+    ).select("vid", "centroid_id")
+    got = None
+    for g in range(1, IX.N_FOLD_GENS + 1):
+        part = spark.read.parquet(os.path.join(root, f"assign_b{g}"))
+        got = part if got is None else got.unionByName(part)
+    assert _rows(got) == _rows(expected)
 
 
 def test_incr_compaction_merges_generations_without_retraining(
@@ -259,50 +247,44 @@ def test_incr_compaction_merges_generations_without_retraining(
     monkeypatch.setattr(
         IX, "incr_index_root", lambda sf: str(tmp_path / "incr3")
     )
-    saved = set(IX._INCR_BUILT)
-    IX._INCR_BUILT.clear()
-    try:
-        root = IX.fold_incr_batch(spark, SF_SMOKE)
-        before = {
-            a: _rows(IX.read_incr_artifact(spark, SF_SMOKE, a))
-            for a in IX.INCR_ARTIFACTS
-        }
-        layout0 = IX.read_layout(root)
-        assert all(
-            len(layout0[a]) == 1 + IX.N_FOLD_GENS for a in IX._INCR_FOLDED
-        )
-        # under-threshold: policy knob says don't compact yet
-        assert IX.compact_incr_ann(
-            spark, SF_SMOKE, max_dirs_per_artifact=IX.N_FOLD_GENS + 1
-        ) == 0
-        retired = IX.compact_incr_ann(spark, SF_SMOKE)
-        assert retired == len(IX._INCR_FOLDED) * (1 + IX.N_FOLD_GENS)
-        layout1 = IX.read_layout(root)
-        for a in IX._INCR_FOLDED:
-            assert layout1[a] == [f"{a}_c1"]
-            # replaced dirs are gone from disk
-            for d in layout0[a]:
-                assert not os.path.exists(os.path.join(root, d)), d
-        # row-identical across the flip — frozen quantizers, no retrain
-        for a in IX.INCR_ARTIFACTS:
-            assert _rows(
-                IX.read_incr_artifact(spark, SF_SMOKE, a)
-            ) == before[a], a
-        # fold markers survive: a fold call after compaction re-folds
-        # nothing (the batches are IN the index, just relocated)
-        assert IX.fold_incr_batch(spark, SF_SMOKE) == root
-        assert IX.read_layout(root) == layout1
-        # second compaction: nothing above threshold
-        assert IX.compact_incr_ann(spark, SF_SMOKE) == 0
-        # crash-sim: an orphan delta dir (written, never committed to
-        # the manifest) is swept by the next maintenance pass
-        orphan = os.path.join(root, "assign_b9")
-        os.makedirs(orphan)
-        IX._gc_unreferenced(root)
-        assert not os.path.exists(orphan)
-    finally:
-        IX._INCR_BUILT.clear()
-        IX._INCR_BUILT.update(saved)
+    root = IX.fold_incr_batch(spark, SF_SMOKE)
+    before = {
+        a: _rows(IX.read_incr_artifact(spark, SF_SMOKE, a))
+        for a in IX.INCR_ARTIFACTS
+    }
+    layout0 = IX.read_layout(root)
+    assert all(
+        len(layout0[a]) == 1 + IX.N_FOLD_GENS for a in IX._INCR_FOLDED
+    )
+    # under-threshold: policy knob says don't compact yet
+    assert IX.compact_incr_ann(
+        spark, SF_SMOKE, max_dirs_per_artifact=IX.N_FOLD_GENS + 1
+    ) == 0
+    retired = IX.compact_incr_ann(spark, SF_SMOKE)
+    assert retired == len(IX._INCR_FOLDED) * (1 + IX.N_FOLD_GENS)
+    layout1 = IX.read_layout(root)
+    for a in IX._INCR_FOLDED:
+        assert layout1[a] == [f"{a}_c1"]
+        # replaced dirs are gone from disk
+        for d in layout0[a]:
+            assert not os.path.exists(os.path.join(root, d)), d
+    # row-identical across the flip — frozen quantizers, no retrain
+    for a in IX.INCR_ARTIFACTS:
+        assert _rows(
+            IX.read_incr_artifact(spark, SF_SMOKE, a)
+        ) == before[a], a
+    # fold markers survive: a fold call after compaction re-folds
+    # nothing (the batches are IN the index, just relocated)
+    assert IX.fold_incr_batch(spark, SF_SMOKE) == root
+    assert IX.read_layout(root) == layout1
+    # second compaction: nothing above threshold
+    assert IX.compact_incr_ann(spark, SF_SMOKE) == 0
+    # crash-sim: an orphan delta dir (written, never committed to
+    # the manifest) is swept by the next maintenance pass
+    orphan = os.path.join(root, "assign_b9")
+    os.makedirs(orphan)
+    IX._gc_unreferenced(root)
+    assert not os.path.exists(orphan)
 
 
 def test_incr_fold_recall_drift_trend_across_generations(
@@ -330,53 +312,47 @@ def test_incr_fold_recall_drift_trend_across_generations(
     monkeypatch.setattr(
         IX, "incr_index_root", lambda sf: str(tmp_path / "incr_trend")
     )
-    saved = set(IX._INCR_BUILT)
-    IX._INCR_BUILT.clear()
-    try:
-        root = IX.build_incr_base(spark, SF_ORACLE)
-        emb = _rt(spark, SF_ORACLE, "embeddings")
-        coarse = spark.read.parquet(os.path.join(root, "coarse")).select(
-            F.col("centroid_id").alias("vec_id"), F.col("cv").alias("embedding")
+    root = IX.build_incr_base(spark, SF_ORACLE)
+    emb = _rt(spark, SF_ORACLE, "embeddings")
+    coarse = spark.read.parquet(os.path.join(root, "coarse")).select(
+        F.col("centroid_id").alias("vec_id"), F.col("cv").alias("embedding")
+    )
+    trend = []
+    assigned = spark.read.parquet(os.path.join(root, "assign"))
+    folded_pred = "FALSE"
+    for g in range(1, IX.N_FOLD_GENS + 1):
+        IX._fold_one_gen(spark, SF_ORACLE, root, g)
+        assigned = assigned.unionByName(
+            spark.read.parquet(os.path.join(root, f"assign_b{g}"))
         )
-        trend = []
-        assigned = spark.read.parquet(os.path.join(root, "assign"))
-        folded_pred = "FALSE"
-        for g in range(1, IX.N_FOLD_GENS + 1):
-            IX._fold_one_gen(spark, SF_ORACLE, root, g)
-            assigned = assigned.unionByName(
-                spark.read.parquet(os.path.join(root, f"assign_b{g}"))
-            )
-            folded_pred = (
-                f"({folded_pred}) OR (({IX.S_EMB_SLICE}) = {g - 1})"
-            )
-            qpred = f"({_INCR_QPRED}) AND ({folded_pred})"
-            queries = emb.filter(qpred)
-            nq = queries.count()
-            exact = S.brute_force_topk(emb, queries, k=3).select(
-                "query_id", "neighbor_id"
-            )
-            approx = S.ivf_topk(
-                emb, coarse, qpred, k=3, assigned=assigned
-            ).select("query_id", "neighbor_id").withColumn("hit", F.lit(1))
-            hits = (
-                exact.join(approx, ["query_id", "neighbor_id"], "left")
-                .agg(F.sum(F.coalesce("hit", F.lit(0)))).collect()[0][0]
-            )
-            recall = hits / (3 * nq) if nq else None
-            trend.append((nq, recall))
-        # the query set grows monotonically and every recall is valid
-        nqs = [nq for nq, _ in trend]
-        assert nqs == sorted(nqs) and nqs[-1] > nqs[0]
-        for nq, r in trend:
-            if nq:
-                assert 0.0 <= r <= 1.0
-        # the trend ends at the audit entry's published appended arm
-        audit = {
-            row.path: row for row in
-            ann_index_append_recall_audit(spark, SF_ORACLE).collect()
-        }
-        assert nqs[-1] == audit["appended"].n_queries
-        assert abs(trend[-1][1] - audit["appended"].recall_at_3) < 1e-12
-    finally:
-        IX._INCR_BUILT.clear()
-        IX._INCR_BUILT.update(saved)
+        folded_pred = (
+            f"({folded_pred}) OR (({IX.S_EMB_SLICE}) = {g - 1})"
+        )
+        qpred = f"({_INCR_QPRED}) AND ({folded_pred})"
+        queries = emb.filter(qpred)
+        nq = queries.count()
+        exact = S.brute_force_topk(emb, queries, k=3).select(
+            "query_id", "neighbor_id"
+        )
+        approx = S.ivf_topk(
+            emb, coarse, qpred, k=3, assigned=assigned
+        ).select("query_id", "neighbor_id").withColumn("hit", F.lit(1))
+        hits = (
+            exact.join(approx, ["query_id", "neighbor_id"], "left")
+            .agg(F.sum(F.coalesce("hit", F.lit(0)))).collect()[0][0]
+        )
+        recall = hits / (3 * nq) if nq else None
+        trend.append((nq, recall))
+    # the query set grows monotonically and every recall is valid
+    nqs = [nq for nq, _ in trend]
+    assert nqs == sorted(nqs) and nqs[-1] > nqs[0]
+    for nq, r in trend:
+        if nq:
+            assert 0.0 <= r <= 1.0
+    # the trend ends at the audit entry's published appended arm
+    audit = {
+        row.path: row for row in
+        ann_index_append_recall_audit(spark, SF_ORACLE).collect()
+    }
+    assert nqs[-1] == audit["appended"].n_queries
+    assert abs(trend[-1][1] - audit["appended"].recall_at_3) < 1e-12

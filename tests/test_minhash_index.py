@@ -25,12 +25,12 @@ def _rows(df):
 
 def test_build_is_idempotent_and_marked(spark):
     root = MI.build_minhash_index(spark, SF_SMOKE)
-    assert os.path.exists(os.path.join(root, "_INDEX_COMPLETE"))
+    assert os.path.exists(os.path.join(root, "_COMPLETE"))
     for name in MI.ARTIFACTS:
         assert os.path.isdir(os.path.join(root, name)), name
-    mtime = os.path.getmtime(os.path.join(root, "_INDEX_COMPLETE"))
+    mtime = os.path.getmtime(os.path.join(root, "_COMPLETE"))
     assert MI.build_minhash_index(spark, SF_SMOKE) == root
-    assert os.path.getmtime(os.path.join(root, "_INDEX_COMPLETE")) == mtime
+    assert os.path.getmtime(os.path.join(root, "_COMPLETE")) == mtime
 
 
 def test_persisted_index_equals_from_scratch(spark):
@@ -156,8 +156,6 @@ def test_incr_fold_is_bucket_aligned_append_base_untouched(
         MI, "incr_index_root", lambda sf: str(tmp_path / "mincr")
     )
     monkeypatch.setattr(MI, "incr_bands_table_name", lambda sf: tbl)
-    saved = set(MI._BUILT)
-    MI._BUILT.clear()
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     try:
         root = MI.build_incr_base(spark, SF_SMOKE)
@@ -257,8 +255,6 @@ def test_incr_fold_is_bucket_aligned_append_base_untouched(
         assert all(r["fid"] == r["bid"] for r in ids.collect())
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        MI._BUILT.clear()
-        MI._BUILT.update(saved)
 
 
 def test_incr_index_rebucket_compaction(spark, tmp_path, monkeypatch):
@@ -273,8 +269,6 @@ def test_incr_index_rebucket_compaction(spark, tmp_path, monkeypatch):
         MI, "incr_index_root", lambda sf: str(tmp_path / "mcomp")
     )
     monkeypatch.setattr(MI, "incr_bands_table_name", lambda sf: tbl)
-    saved = set(MI._BUILT)
-    MI._BUILT.clear()
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     spark.sql(f"DROP TABLE IF EXISTS {tbl}_compact")
     try:
@@ -322,8 +316,6 @@ def test_incr_index_rebucket_compaction(spark, tmp_path, monkeypatch):
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         spark.sql(f"DROP TABLE IF EXISTS {tbl}_compact")
-        MI._BUILT.clear()
-        MI._BUILT.update(saved)
 
 
 def test_torn_compact_recovery(spark, tmp_path, monkeypatch):
@@ -338,8 +330,6 @@ def test_torn_compact_recovery(spark, tmp_path, monkeypatch):
         MI, "incr_index_root", lambda sf: str(tmp_path / "mtorn")
     )
     monkeypatch.setattr(MI, "incr_bands_table_name", lambda sf: tbl)
-    saved = set(MI._BUILT)
-    MI._BUILT.clear()
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     try:
         root = MI.fold_incr_batch(spark, SF_SMOKE)
@@ -388,8 +378,6 @@ def test_torn_compact_recovery(spark, tmp_path, monkeypatch):
         assert got == want
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        MI._BUILT.clear()
-        MI._BUILT.update(saved)
 
 
 def test_compaction_threshold_is_a_policy_knob(spark, tmp_path, monkeypatch):
@@ -402,8 +390,6 @@ def test_compaction_threshold_is_a_policy_knob(spark, tmp_path, monkeypatch):
         MI, "incr_index_root", lambda sf: str(tmp_path / "mthresh")
     )
     monkeypatch.setattr(MI, "incr_bands_table_name", lambda sf: tbl)
-    saved = set(MI._BUILT)
-    MI._BUILT.clear()
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     spark.sql(f"DROP TABLE IF EXISTS {tbl}_compact")
     try:
@@ -419,5 +405,3 @@ def test_compaction_threshold_is_a_policy_knob(spark, tmp_path, monkeypatch):
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         spark.sql(f"DROP TABLE IF EXISTS {tbl}_compact")
-        MI._BUILT.clear()
-        MI._BUILT.update(saved)

@@ -107,13 +107,13 @@ def test_round2_plan_shapes(spark):
     # decontam: benchmark gram side broadcast, corpus side streams
     p = plan_of(CATALOG["curation_decontam_overlap"].fn(spark, SF_SMOKE))
     assert "BroadcastHashJoin" in p and "CartesianProduct" not in p
-    # basket (r4 rewrite): JOIN-FREE — one hash exchange on invoiceid for
-    # the per-basket collect_set, pairs exploded map-side from the sorted
-    # array, then the pair aggregation; there is no self-join left to
-    # degrade, so the pins are the exchange key, the explode, and top-20
-    # via TakeOrderedAndProject (never a global sort)
+    # basket (r4 rewrite): JOIN-FREE — the per-basket collect_set reads
+    # the invoiceid-bucketed silver fact (r13) with no exchange, pairs
+    # exploded map-side from the sorted array, then the pair aggregation;
+    # no self-join left to degrade, so the pins are the bucketed scan,
+    # the explode, and top-20 via TakeOrderedAndProject (no global sort)
     p = plan_of(CATALOG["basket_product_pairs"].fn(spark, SF_SMOKE))
-    assert "hashpartitioning(invoiceid" in p, f"basket lost its invoice exchange:\n{p}"
+    assert "hashpartitioning(invoiceid" not in p and "Bucketed: true" in p, p
     assert "explode" in p.lower()
     assert "SortMergeJoin [invoiceid" not in p and "ShuffledHashJoin [invoiceid" not in p
     assert "CartesianProduct" not in p

@@ -10,6 +10,8 @@ proper TimestampType with sane values.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
@@ -69,3 +71,49 @@ def test_pysource_rows_are_pure_functions_of_id():
     assert row_for(5) == (5, 655, "cart", 1.85)
     # retry idempotence: same id, same row
     assert row_for(123456) == row_for(123456)
+
+
+def test_artifact_ensure_lifecycle_contract(spark, tmp_path):
+    """sources/artifacts.ensure: a torn root is wiped before its build, a
+    marked root is reused without building, a build that raises leaves
+    no marker (the next call rebuilds), and attach runs once per
+    session."""
+    from e_commerce_data_warehouse_power_bi_analytics_dashboard_spark.operators import (
+        table_format as tf,
+    )
+    from e_commerce_data_warehouse_power_bi_analytics_dashboard_spark.sources import (
+        artifacts as A,
+    )
+
+    assert A.scratch_root("silver_v1", "/data/sf0.01/", "orders").endswith(
+        os.path.join(".scratch", "silver_v1", "sf0.01", "orders")
+    )
+
+    def never(root):
+        raise AssertionError(f"complete root {root} rebuilt")
+
+    # torn: a demo-table build that crashed after v0 — building over it
+    # would raise CommitConflict at version 0 forever
+    torn = str(tmp_path / "torn")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    tf.create_table(spark, torn, df, files=1)
+    A.ensure(spark, torn, lambda root: tf.create_table(spark, root, df, files=1))
+    assert tf.list_versions(torn) == [0]
+    assert os.path.exists(os.path.join(torn, A.MARKER))
+    assert A.ensure(spark, torn, never) == torn  # memoized
+
+    failed, built, attached = str(tmp_path / "failed"), [], []
+    with pytest.raises(ZeroDivisionError):
+        A.ensure(spark, failed, lambda root: (os.makedirs(root), 1 / 0))
+    assert os.path.isdir(failed) and not os.listdir(failed)  # no marker
+    for _ in range(2):
+        A.ensure(spark, failed, lambda r: built.append(os.path.exists(r)),
+                 attached.append)
+    assert built == [False] and attached == [failed]  # leftovers wiped
+
+    # complete on disk from another process, not yet seen by this session
+    (tmp_path / "other").mkdir()
+    (tmp_path / "other" / A.MARKER).touch()
+    for _ in range(2):
+        A.ensure(spark, str(tmp_path / "other"), never, attached.append)
+    assert attached == [failed, str(tmp_path / "other")]

@@ -1107,19 +1107,6 @@ def test_parse_ts_naive_iso_is_utc():
     assert tf._parse_ts("123.5") == 123.5
 
 
-def test_complete_or_clear_heals_partial_scratch_build(spark, tmp_path):
-    """A crashed partial demo-table build (root exists, final commit
-    missing) must be cleared and rebuilt, never wedge every later run
-    with CommitConflict at version 0."""
-    root = str(tmp_path / "partial")
-    tf.create_table(spark, root, _mor_base(spark), files=1)  # v0 only
-    assert not tfq._complete_or_clear(root, 3)  # partial: cleared
-    assert not os.path.exists(root)
-    tf.create_table(spark, root, _mor_base(spark), files=1)  # rebuild ok
-    assert tfq._complete_or_clear(root, 0)  # complete: kept
-    assert os.path.exists(root)
-
-
 def test_merge_into_sql_statement_routes_to_cow_merge(spark, tmp_path):
     """MERGE INTO through the SQL resolver: first-match-wins clause
     guards (the DELETE shadows the UPDATE for even matched keys), the

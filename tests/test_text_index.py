@@ -40,12 +40,12 @@ def _served(spark):
 
 def test_build_is_idempotent_and_marked(spark):
     root = TX.build_bm25_index(spark, SF_SMOKE)
-    assert os.path.exists(os.path.join(root, "_INDEX_COMPLETE"))
+    assert os.path.exists(os.path.join(root, "_COMPLETE"))
     for name in TX.ARTIFACTS:
         assert os.path.isdir(os.path.join(root, name)), name
-    mtime = os.path.getmtime(os.path.join(root, "_INDEX_COMPLETE"))
+    mtime = os.path.getmtime(os.path.join(root, "_COMPLETE"))
     assert TX.build_bm25_index(spark, SF_SMOKE) == root
-    assert os.path.getmtime(os.path.join(root, "_INDEX_COMPLETE")) == mtime
+    assert os.path.getmtime(os.path.join(root, "_COMPLETE")) == mtime
 
 
 def test_serve_equals_inline(spark):
