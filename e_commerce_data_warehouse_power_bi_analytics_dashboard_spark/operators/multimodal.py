@@ -22,21 +22,27 @@ The test corpus has no real media files, so ``attach_payload`` fabricates
 a deterministic payload (UTF-8 document bytes) + metadata from the
 ``documents`` table; at production scale the same schema would come from
 ``spark.read.format("binaryFile")`` or parquet with a binary column.
+
+Arrow envelope contract (``_map_rows``, the module's one
+``mapInPandas``): every operator below is a per-row function
+``fn(*values)`` over the selected input columns that yields output
+tuples in its schema's field order — none (the row is dropped), one,
+or many (1→N expansion, e.g. ``sample_frames``). Each Arrow batch in
+gives one pandas frame out, possibly empty; an exception raised by
+``fn`` fails the task and surfaces at the action. The synthesizers
+emit ``(doc_id long, <payload> binary)`` (``_payload_schema``).
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
-from collections.abc import Iterator
-from typing import TYPE_CHECKING, Sequence
+import struct
+from typing import Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
 
 #: typed metadata carried next to every payload
 METADATA_TYPE = T.StructType(
@@ -50,6 +56,33 @@ METADATA_TYPE = T.StructType(
 
 MIMES = ("image/png", "audio/wav", "video/mp4")
 
+
+def _map_rows(
+    df: DataFrame,
+    cols: Sequence[str],
+    schema: T.StructType,
+    fn: Callable[..., Iterable[tuple]],
+) -> DataFrame:
+    """``df.select(*cols)`` through ``mapInPandas``: ``fn`` runs once
+    per input row on that row's values and every tuple it yields is
+    one output row (see the module docstring)."""
+    names = schema.fieldNames()
+
+    def run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [out for vals in zip(*(pdf[c] for c in cols)) for out in fn(*vals)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(*cols).mapInPandas(run, schema)
+
+
+def _payload_schema(col: str) -> T.StructType:
+    """``(doc_id long, <col> binary)``: what every synthesizer emits."""
+    return T.StructType(
+        [T.StructField("doc_id", T.LongType()), T.StructField(col, T.BinaryType())]
+    )
 
 
 def _ids_at_width(docs: DataFrame) -> DataFrame:
@@ -104,39 +137,24 @@ def extract_features(with_payload: DataFrame) -> DataFrame:
     decode/featurize step: Arrow batches in, Arrow batches out, payload
     column pruned from the output."""
 
-    def featurize(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def features(doc_id, payload):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                n = len(b)
-                # vectorized byte histogram (r12 — guide §4.2: hand the
-                # batch to numpy, never loop bytes in Python); the
-                # byte-value summation order differs from the old
-                # first-appearance dict walk only in the ~1e-16 float
-                # tail, absorbed by the entry's 6-decimal round exactly
-                # as the engine-vs-oracle order difference already was
-                if n:
-                    counts = np.bincount(np.frombuffer(b, dtype=np.uint8))
-                    p = counts[counts > 0] / n
-                    entropy = float(-(p * np.log2(p)).sum())
-                else:
-                    entropy = 0.0
-                rows.append(
-                    (
-                        int(doc_id),
-                        n,
-                        hashlib.sha256(b).hexdigest(),
-                        b[:4].hex(),
-                        entropy,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in FEATURES_SCHEMA.fields])
+        b = bytes(payload)
+        n = len(b)
+        # vectorized byte histogram (numpy, never a Python loop over
+        # bytes); summing in byte-value order instead of first-appearance
+        # order moves only the ~1e-16 float tail, which the entry's
+        # 6-decimal round absorbs like the engine-vs-oracle order does
+        if n:
+            counts = np.bincount(np.frombuffer(b, dtype=np.uint8))
+            p = counts[counts > 0] / n
+            entropy = float(-(p * np.log2(p)).sum())
+        else:
+            entropy = 0.0
+        yield int(doc_id), n, hashlib.sha256(b).hexdigest(), b[:4].hex(), entropy
 
-    return with_payload.select("doc_id", "payload").mapInPandas(featurize, FEATURES_SCHEMA)
+    return _map_rows(with_payload, ["doc_id", "payload"], FEATURES_SCHEMA, features)
 
 
 # ---------------------------------------------------------------------------
@@ -160,22 +178,14 @@ def sample_frames(with_payload: DataFrame, frame_size: int = 256, every: int = 4
     frames). One output row per sampled frame — a mapInPandas that
     *expands* rows, exercising the 1→N batch shape."""
 
-    def sample(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def frames(doc_id, payload):
+        b = bytes(payload)
+        n_frames = (len(b) + frame_size - 1) // frame_size
+        for idx in range(0, n_frames, every):
+            frame = b[idx * frame_size : (idx + 1) * frame_size]
+            yield int(doc_id), idx, len(frame), hashlib.sha256(frame).hexdigest()
 
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                n_frames = (len(b) + frame_size - 1) // frame_size
-                for idx in range(0, n_frames, every):
-                    frame = b[idx * frame_size : (idx + 1) * frame_size]
-                    rows.append(
-                        (int(doc_id), idx, len(frame), hashlib.sha256(frame).hexdigest())
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAMES_SCHEMA.fields])
-
-    return with_payload.select("doc_id", "payload").mapInPandas(sample, FRAMES_SCHEMA)
+    return _map_rows(with_payload, ["doc_id", "payload"], FRAMES_SCHEMA, frames)
 
 
 # ---------------------------------------------------------------------------
@@ -561,23 +571,14 @@ def synthesize_png_payloads(docs: DataFrame) -> DataFrame:
     per-row filter cycling through all five types) built per-partition in
     mapInPandas. Dims/pixels are closed-form in doc_id so a SQL oracle
     can reproduce the decoded output without ever seeing the bytes."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("png", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def png(doc_id):
+        d = int(doc_id)
+        w, h = 8 * (1 + d % 6), 4 * (1 + d % 5)
+        grid = [[_pixel(d, x, y) for x in range(w)] for y in range(h)]
+        yield d, encode_png(grid, lambda y: d + y)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 * (1 + d % 6), 4 * (1 + d % 5)
-                grid = [[_pixel(d, x, y) for x in range(w)] for y in range(h)]
-                rows.append((d, encode_png(grid, lambda y, d=d: d + y)))
-            yield pd.DataFrame(rows, columns=["doc_id", "png"])
-
-    return docs.select("doc_id").mapInPandas(synth, schema)
+    return _map_rows(docs, ["doc_id"], _payload_schema("png"), png)
 
 
 #: deterministic 16-bit pixel formula shared with the SQL oracle —
@@ -594,23 +595,14 @@ def synthesize_png_gray16_payloads(docs: DataFrame) -> DataFrame:
     stride) built per-partition in mapInPandas — the scientific /
     medical-imagery depth. Dims/pixels are closed-form in doc_id so a
     SQL oracle reproduces the decoded stats without the bytes."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("png", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def png(doc_id):
+        d = int(doc_id)
+        w, h = 8 * (1 + d % 3), 4 * (1 + d % 4)
+        grid = [[_pixel16(d, x, y) for x in range(w)] for y in range(h)]
+        yield d, encode_png(grid, lambda y: d + y, depth=16)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 * (1 + d % 3), 4 * (1 + d % 4)
-                grid = [[_pixel16(d, x, y) for x in range(w)] for y in range(h)]
-                rows.append((d, encode_png(grid, lambda y, d=d: d + y, depth=16)))
-            yield pd.DataFrame(rows, columns=["doc_id", "png"])
-
-    return _ids_at_width(docs).mapInPandas(synth, schema)
+    return _map_rows(_ids_at_width(docs), ["doc_id"], _payload_schema("png"), png)
 
 
 def decode_image_gray16(with_png: DataFrame) -> DataFrame:
@@ -631,20 +623,12 @@ def decode_image_gray16(with_png: DataFrame) -> DataFrame:
         ]
     )
 
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def stats(doc_id, png):
+        w, h, c, grid = decode_png(bytes(png))
+        flat = [v for r in grid for v in r]
+        yield int(doc_id), w, h, min(flat), max(flat), sum(flat)
 
-        for pdf in batches:
-            rows = []
-            for doc_id, png in zip(pdf["doc_id"], pdf["png"]):
-                w, h, c, grid = decode_png(bytes(png))
-                flat = [v for r in grid for v in r]
-                rows.append(
-                    (int(doc_id), w, h, min(flat), max(flat), sum(flat))
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return with_png.select("doc_id", "png").mapInPandas(dec, schema)
+    return _map_rows(with_png, ["doc_id", "png"], schema, stats)
 
 
 def synthesize_png_interlaced_payloads(docs: DataFrame) -> DataFrame:
@@ -656,25 +640,14 @@ def synthesize_png_interlaced_payloads(docs: DataFrame) -> DataFrame:
     independently through all five filter types. Dims/pixels are
     closed-form in doc_id so a SQL oracle reproduces the decoded stats
     without the bytes."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("png", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def png(doc_id):
+        d = int(doc_id)
+        w, h = 3 + d % 13, 2 + d % 11
+        grid = [[_pixel(d, x, y) for x in range(w)] for y in range(h)]
+        yield d, encode_png(grid, lambda y: d + y, interlace=1)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 3 + d % 13, 2 + d % 11
-                grid = [[_pixel(d, x, y) for x in range(w)] for y in range(h)]
-                rows.append(
-                    (d, encode_png(grid, lambda y, d=d: d + y, interlace=1))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "png"])
-
-    return docs.select("doc_id").mapInPandas(synth, schema)
+    return _map_rows(docs, ["doc_id"], _payload_schema("png"), png)
 
 
 def synthesize_png_sub8_payloads(docs: DataFrame) -> DataFrame:
@@ -685,29 +658,15 @@ def synthesize_png_sub8_payloads(docs: DataFrame) -> DataFrame:
     filter types. depth = (1,2,4)[doc_id % 3]; samples are raw values
     0..2^depth-1 (no bit replication). Closed-form in doc_id for the
     SQL oracle."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("png", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def png(doc_id):
+        d = int(doc_id)
+        depth = (1, 2, 4)[d % 3]
+        w, h = 5 + d % 12, 3 + d % 6
+        grid = [[_pixel(d, x, y) % (1 << depth) for x in range(w)] for y in range(h)]
+        yield d, encode_png(grid, lambda y: d + y, depth=depth)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                depth = (1, 2, 4)[d % 3]
-                w, h = 5 + d % 12, 3 + d % 6
-                grid = [
-                    [_pixel(d, x, y) % (1 << depth) for x in range(w)]
-                    for y in range(h)
-                ]
-                rows.append(
-                    (d, encode_png(grid, lambda y, d=d: d + y, depth=depth))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "png"])
-
-    return docs.select("doc_id").mapInPandas(synth, schema)
+    return _map_rows(docs, ["doc_id"], _payload_schema("png"), png)
 
 
 #: deterministic per-channel pixel formula shared with the SQL oracle
@@ -722,26 +681,17 @@ def synthesize_png_rgb_payloads(docs: DataFrame) -> DataFrame:
     five types at the 3-byte stride) built per-partition in mapInPandas.
     Dims/pixels are closed-form in doc_id so a SQL oracle can reproduce
     the decoded channel stats without ever seeing the bytes."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("png", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def png(doc_id):
+        d = int(doc_id)
+        w, h = 8 * (1 + d % 4), 4 * (1 + d % 3)
+        grid = [
+            [_pixel_rgb(d, x, y, ch) for x in range(w) for ch in range(3)]
+            for y in range(h)
+        ]
+        yield d, encode_png(grid, lambda y: d + y, channels=3)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 * (1 + d % 4), 4 * (1 + d % 3)
-                grid = [
-                    [_pixel_rgb(d, x, y, ch) for x in range(w) for ch in range(3)]
-                    for y in range(h)
-                ]
-                rows.append((d, encode_png(grid, lambda y, d=d: d + y, channels=3)))
-            yield pd.DataFrame(rows, columns=["doc_id", "png"])
-
-    return _ids_at_width(docs).mapInPandas(synth, schema)
+    return _map_rows(_ids_at_width(docs), ["doc_id"], _payload_schema("png"), png)
 
 
 #: deterministic 16-entry palette + index formula shared with the SQL
@@ -760,25 +710,14 @@ def synthesize_png_palette_payloads(docs: DataFrame) -> DataFrame:
     mapInPandas. Palette and index grid are closed-form in doc_id so a
     SQL oracle can reproduce the palette-EXPANDED channel stats without
     ever seeing the bytes."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("png", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def png(doc_id):
+        d = int(doc_id)
+        w, h = 8 * (1 + d % 5), 4 * (1 + d % 4)
+        idx = [[_pixel_idx(d, x, y) for x in range(w)] for y in range(h)]
+        yield d, encode_png_palette(idx, _PALETTE, lambda y: d + y)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 * (1 + d % 5), 4 * (1 + d % 4)
-                idx = [[_pixel_idx(d, x, y) for x in range(w)] for y in range(h)]
-                rows.append(
-                    (d, encode_png_palette(idx, _PALETTE, lambda y, d=d: d + y))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "png"])
-
-    return docs.select("doc_id").mapInPandas(synth, schema)
+    return _map_rows(docs, ["doc_id"], _payload_schema("png"), png)
 
 
 DECODE_SCHEMA = T.StructType(
@@ -798,20 +737,14 @@ def decode_image(with_png: DataFrame) -> DataFrame:
     types raise inside decode_png and would need PIL. Arrow-batched
     mapInPandas; payload pruned from the output."""
 
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def stats(doc_id, png):
+        w, h, c, grid = decode_png(bytes(png))
+        n = w * h
+        # mean over every sample (== pixel mean for grayscale)
+        mean = sum(sum(r) for r in grid) / (n * c) if n else 0.0
+        yield int(doc_id), w, h, n, mean
 
-        for pdf in batches:
-            rows = []
-            for doc_id, png in zip(pdf["doc_id"], pdf["png"]):
-                w, h, c, grid = decode_png(bytes(png))
-                n = w * h
-                # mean over every sample (== pixel mean for grayscale)
-                mean = sum(sum(r) for r in grid) / (n * c) if n else 0.0
-                rows.append((int(doc_id), w, h, n, mean))
-            yield pd.DataFrame(rows, columns=[f.name for f in DECODE_SCHEMA.fields])
-
-    return with_png.select("doc_id", "png").mapInPandas(dec, DECODE_SCHEMA)
+    return _map_rows(with_png, ["doc_id", "png"], DECODE_SCHEMA, stats)
 
 
 RGB_STATS_SCHEMA = T.StructType(
@@ -832,24 +765,16 @@ def decode_image_rgb(with_png: DataFrame) -> DataFrame:
     numpy stride-slice computes each channel mean. Arrow-batched
     mapInPandas; payload pruned from the output."""
 
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def stats(doc_id, png):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for doc_id, png in zip(pdf["doc_id"], pdf["png"]):
-                w, h, c, grid = decode_png(bytes(png))
-                if c != 3:
-                    raise ValueError(f"doc {doc_id}: expected RGB PNG, got {c} channel(s)")
-                a = np.array(grid, dtype=np.float64).reshape(h, w, 3)
-                means = a.mean(axis=(0, 1))
-                rows.append(
-                    (int(doc_id), w, h, float(means[0]), float(means[1]), float(means[2]))
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in RGB_STATS_SCHEMA.fields])
+        w, h, c, grid = decode_png(bytes(png))
+        if c != 3:
+            raise ValueError(f"doc {doc_id}: expected RGB PNG, got {c} channel(s)")
+        means = np.array(grid, dtype=np.float64).reshape(h, w, 3).mean(axis=(0, 1))
+        yield int(doc_id), w, h, float(means[0]), float(means[1]), float(means[2])
 
-    return with_png.select("doc_id", "png").mapInPandas(dec, RGB_STATS_SCHEMA)
+    return _map_rows(with_png, ["doc_id", "png"], RGB_STATS_SCHEMA, stats)
 
 
 RESIZE_SCHEMA = T.StructType(
@@ -869,29 +794,24 @@ def resize_image(with_png: DataFrame, factor: int = 2) -> DataFrame:
     numpy reshape-mean runs per Arrow batch; dims must divide by factor
     (the synthesizer guarantees it for factor=2)."""
 
-    def rz(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def pixels(doc_id, png):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for doc_id, png in zip(pdf["doc_id"], pdf["png"]):
-                w, h, c, grid = decode_png(bytes(png))
-                if c != 1:
-                    raise ValueError(
-                        f"doc {doc_id}: box resize covers grayscale; decode RGB "
-                        "via decode_image_rgb and resize per channel"
-                    )
-                if w % factor or h % factor:
-                    raise ValueError(f"dims {w}x{h} not divisible by {factor}")
-                a = np.array(grid, dtype=np.float64)
-                small = a.reshape(h // factor, factor, w // factor, factor).mean(axis=(1, 3))
-                for y in range(small.shape[0]):
-                    for x in range(small.shape[1]):
-                        rows.append((int(doc_id), x, y, float(small[y, x])))
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZE_SCHEMA.fields])
+        w, h, c, grid = decode_png(bytes(png))
+        if c != 1:
+            raise ValueError(
+                f"doc {doc_id}: box resize covers grayscale; decode RGB "
+                "via decode_image_rgb and resize per channel"
+            )
+        if w % factor or h % factor:
+            raise ValueError(f"dims {w}x{h} not divisible by {factor}")
+        a = np.array(grid, dtype=np.float64)
+        small = a.reshape(h // factor, factor, w // factor, factor).mean(axis=(1, 3))
+        for y in range(small.shape[0]):
+            for x in range(small.shape[1]):
+                yield int(doc_id), x, y, float(small[y, x])
 
-    return with_png.select("doc_id", "png").mapInPandas(rz, RESIZE_SCHEMA)
+    return _map_rows(with_png, ["doc_id", "png"], RESIZE_SCHEMA, pixels)
 
 
 # ---------------------------------------------------------------------------
@@ -911,31 +831,20 @@ def synthesize_wav_payloads(docs: DataFrame) -> DataFrame:
     """audio-docs → (doc_id, wav binary): real RIFF/WAVE files (fmt +
     data chunks, 16-bit little-endian PCM mono @ 8 kHz) built
     per-partition in mapInPandas."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("wav", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    def wav(doc_id):
+        d = int(doc_id)
+        n = 50 + (d % 20) * 25
+        pcm = struct.pack(f"<{n}h", *[_sample(d, i) for i in range(n)])
+        fmt = struct.pack("<HHIIHH", 1, 1, _WAV_RATE, _WAV_RATE * 2, 2, 16)
+        body = (
+            b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(pcm)) + pcm
+        )
+        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 50 + (d % 20) * 25
-                pcm = struct.pack(f"<{n}h", *[_sample(d, i) for i in range(n)])
-                fmt = struct.pack("<HHIIHH", 1, 1, _WAV_RATE, _WAV_RATE * 2, 2, 16)
-                body = (
-                    b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(pcm)) + pcm
-                )
-                rows.append((d, b"RIFF" + struct.pack("<I", len(body)) + body))
-            yield pd.DataFrame(rows, columns=["doc_id", "wav"])
-
-    return docs.select("doc_id").mapInPandas(synth, schema)
+    return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
 
 def _sample24(doc_id: int, i: int) -> int:
@@ -951,38 +860,27 @@ def synthesize_wav_pcm24_payloads(docs: DataFrame) -> DataFrame:
     LIST junk chunk BEFORE fmt so the decode also exercises the RIFF
     word-alignment walk. Built per-partition in mapInPandas; samples are
     closed-form in doc_id for the SQL oracle."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("wav", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    def wav(doc_id):
+        d = int(doc_id)
+        n = 40 + (d % 16) * 20
+        pcm = b"".join(
+            struct.pack("<i", _sample24(d, i) & 0xFFFFFF)[:3]
+            for i in range(n)
+        )
+        fmt = struct.pack(
+            "<HHIIHH", 1, 1, _WAV_RATE, _WAV_RATE * 3, 3, 24
+        )
+        junk = b"LIST" + struct.pack("<I", 5) + b"INFOx" + b"\x00"
+        body = (
+            b"WAVE"
+            + junk
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(pcm)) + pcm
+        )
+        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 40 + (d % 16) * 20
-                pcm = b"".join(
-                    struct.pack("<i", _sample24(d, i) & 0xFFFFFF)[:3]
-                    for i in range(n)
-                )
-                fmt = struct.pack(
-                    "<HHIIHH", 1, 1, _WAV_RATE, _WAV_RATE * 3, 3, 24
-                )
-                junk = b"LIST" + struct.pack("<I", 5) + b"INFOx" + b"\x00"
-                body = (
-                    b"WAVE"
-                    + junk
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(pcm)) + pcm
-                )
-                rows.append((d, b"RIFF" + struct.pack("<I", len(body)) + body))
-            yield pd.DataFrame(rows, columns=["doc_id", "wav"])
-
-    return docs.select("doc_id").mapInPandas(synth, schema)
+    return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
 
 def synthesize_wav_mulaw_payloads(docs: DataFrame) -> DataFrame:
@@ -992,31 +890,20 @@ def synthesize_wav_mulaw_payloads(docs: DataFrame) -> DataFrame:
     closed-form in doc_id, so the SQL oracle reproduces the decoded
     linear samples by applying the canonical integer expansion
     (_mulaw_expand) in arithmetic."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("wav", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    def wav(doc_id):
+        d = int(doc_id)
+        n = 30 + (d % 10) * 15
+        pcm = bytes((d * 17 + i * 29) % 256 for i in range(n))
+        fmt = struct.pack("<HHIIHH", 7, 1, _WAV_RATE, _WAV_RATE, 1, 8)
+        body = (
+            b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(pcm)) + pcm
+        )
+        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 30 + (d % 10) * 15
-                pcm = bytes((d * 17 + i * 29) % 256 for i in range(n))
-                fmt = struct.pack("<HHIIHH", 7, 1, _WAV_RATE, _WAV_RATE, 1, 8)
-                body = (
-                    b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(pcm)) + pcm
-                )
-                rows.append((d, b"RIFF" + struct.pack("<I", len(body)) + body))
-            yield pd.DataFrame(rows, columns=["doc_id", "wav"])
-
-    return docs.select("doc_id").mapInPandas(synth, schema)
+    return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
 
 def synthesize_wav_alaw_payloads(docs: DataFrame) -> DataFrame:
@@ -1026,31 +913,20 @@ def synthesize_wav_alaw_payloads(docs: DataFrame) -> DataFrame:
     in doc_id, so the SQL oracle reproduces the decoded linear samples
     by applying the canonical integer expansion (_alaw_expand) in
     arithmetic."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("wav", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    def wav(doc_id):
+        d = int(doc_id)
+        n = 30 + (d % 10) * 15
+        pcm = bytes((d * 23 + i * 31) % 256 for i in range(n))
+        fmt = struct.pack("<HHIIHH", 6, 1, _WAV_RATE, _WAV_RATE, 1, 8)
+        body = (
+            b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(pcm)) + pcm
+        )
+        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 30 + (d % 10) * 15
-                pcm = bytes((d * 23 + i * 31) % 256 for i in range(n))
-                fmt = struct.pack("<HHIIHH", 6, 1, _WAV_RATE, _WAV_RATE, 1, 8)
-                body = (
-                    b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(pcm)) + pcm
-                )
-                rows.append((d, b"RIFF" + struct.pack("<I", len(body)) + body))
-            yield pd.DataFrame(rows, columns=["doc_id", "wav"])
-
-    return docs.select("doc_id").mapInPandas(synth, schema)
+    return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
 
 def synthesize_wav_float32_payloads(docs: DataFrame) -> DataFrame:
@@ -1060,35 +936,31 @@ def synthesize_wav_float32_payloads(docs: DataFrame) -> DataFrame:
     10000 < 2^14, so every value is float32-EXACT and sums of hundreds
     of them are float64-exact — the oracle reproduces the stats as one
     integer aggregation divided once, no float-accumulation hazard."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("wav", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    def wav(doc_id):
+        d = int(doc_id)
+        n = 35 + (d % 12) * 18
+        vals = [
+            ((d * 131 + i * 37) % 20001 - 10000) / 32768.0
+            for i in range(n)
+        ]
+        pcm = struct.pack(f"<{n}f", *vals)
+        fmt = struct.pack("<HHIIHH", 3, 1, _WAV_RATE, _WAV_RATE * 4, 4, 32)
+        body = (
+            b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(pcm)) + pcm
+        )
+        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
 
-        import pandas as pd
+    return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 35 + (d % 12) * 18
-                vals = [
-                    ((d * 131 + i * 37) % 20001 - 10000) / 32768.0
-                    for i in range(n)
-                ]
-                pcm = struct.pack(f"<{n}f", *vals)
-                fmt = struct.pack("<HHIIHH", 3, 1, _WAV_RATE, _WAV_RATE * 4, 4, 32)
-                body = (
-                    b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(pcm)) + pcm
-                )
-                rows.append((d, b"RIFF" + struct.pack("<I", len(body)) + body))
-            yield pd.DataFrame(rows, columns=["doc_id", "wav"])
 
-    return docs.select("doc_id").mapInPandas(synth, schema)
+def _wav_min_max_sum(doc_id, wav):
+    """(doc_id, sample_rate, n_samples, min, max, sum) over every
+    sample ``parse_wav`` returns: the row of both stats decoders."""
+    rate, _ch, samples = parse_wav(bytes(wav))
+    yield int(doc_id), rate, len(samples), min(samples), max(samples), sum(samples)
 
 
 WAVF_SCHEMA = T.StructType(
@@ -1108,21 +980,7 @@ def decode_wav_fstats(with_wav: DataFrame) -> DataFrame:
     doubles. Deterministic despite IEEE addition: the synthetic samples
     are multiples of 2^-15 whose sequential float64 sum stays exact
     (|numerator sum| < 2^23 << 2^53). Arrow-batched mapInPandas."""
-
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, wav in zip(pdf["doc_id"], pdf["wav"]):
-                rate, ch, samples = parse_wav(bytes(wav))
-                rows.append(
-                    (int(doc_id), rate, len(samples), min(samples),
-                     max(samples), sum(samples))
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in WAVF_SCHEMA.fields])
-
-    return with_wav.select("doc_id", "wav").mapInPandas(dec, WAVF_SCHEMA)
+    return _map_rows(with_wav, ["doc_id", "wav"], WAVF_SCHEMA, _wav_min_max_sum)
 
 
 WAV24_SCHEMA = T.StructType(
@@ -1141,21 +999,7 @@ def decode_wav_stats(with_wav: DataFrame) -> DataFrame:
     """Exact integer sample stats over RIFF/WAVE payloads (depth-
     agnostic — parse_wav returns native-scale ints): min/max/sum, no
     float hazard. Arrow-batched mapInPandas; payload pruned."""
-
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, wav in zip(pdf["doc_id"], pdf["wav"]):
-                rate, ch, samples = parse_wav(bytes(wav))
-                rows.append(
-                    (int(doc_id), rate, len(samples), min(samples),
-                     max(samples), sum(samples))
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in WAV24_SCHEMA.fields])
-
-    return with_wav.select("doc_id", "wav").mapInPandas(dec, WAV24_SCHEMA)
+    return _map_rows(with_wav, ["doc_id", "wav"], WAV24_SCHEMA, _wav_min_max_sum)
 
 
 WAV_SCHEMA = T.StructType(
@@ -1295,37 +1139,26 @@ def synthesize_wav_float64_payloads(docs: DataFrame) -> DataFrame:
     family as the float32 twin, so min/max/sum are float64-exact on
     both engines; the r8 'float64 needs ffmpeg' gate was dishonest
     (it is one struct unpack) and is gone."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("wav", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    def wav(doc_id):
+        d = int(doc_id)
+        n = 30 + (d % 9) * 14
+        vals = [
+            ((d * 131 + i * 37) % 20001 - 10000) / 32768.0
+            for i in range(n)
+        ]
+        pcm = struct.pack(f"<{n}d", *vals)
+        fmt = struct.pack(
+            "<HHIIHH", 3, 1, _WAV_RATE, _WAV_RATE * 8, 8, 64
+        )
+        body = (
+            b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(pcm)) + pcm
+        )
+        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 30 + (d % 9) * 14
-                vals = [
-                    ((d * 131 + i * 37) % 20001 - 10000) / 32768.0
-                    for i in range(n)
-                ]
-                pcm = struct.pack(f"<{n}d", *vals)
-                fmt = struct.pack(
-                    "<HHIIHH", 3, 1, _WAV_RATE, _WAV_RATE * 8, 8, 64
-                )
-                body = (
-                    b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(pcm)) + pcm
-                )
-                rows.append((d, b"RIFF" + struct.pack("<I", len(body)) + body))
-            yield pd.DataFrame(rows, columns=["doc_id", "wav"])
-
-    return docs.select("doc_id").mapInPandas(synth, schema)
+    return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
 
 #: MS ADPCM published constants (Microsoft WAVE format documentation):
@@ -1404,46 +1237,35 @@ def synthesize_wav_msadpcm_payloads(docs: DataFrame) -> DataFrame:
     per 16 nibbles and overflow the oracle's INT32 arithmetic; the
     biased alphabet keeps delta floored-and-bounded while still
     exercising both signs, the clamp, and the adaptation table."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("wav", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    def wav(doc_id):
+        d = int(doc_id)
+        n = 20 + (d % 6) * 10  # nibble count, even
+        p = d % 7
+        idelta = 16 + (d % 500) * 3
+        s1 = ((d * 131 + 37) % 20001) - 10000
+        s2 = ((d * 173 + 91) % 20001) - 10000
+        alpha = (0, 1, 2, 3, 4, 13, 14, 15)
+        codes = [alpha[(d * 11 + i * 7) % 8] for i in range(n)]
+        data = bytes(
+            (codes[j] << 4) | codes[j + 1] for j in range(0, n, 2)
+        )
+        header = bytes([p]) + struct.pack("<hhh", idelta, s1, s2)
+        block_align = 7 + n // 2
+        fmt = struct.pack(
+            "<HHIIHHHH", 2, 1, _WAV_RATE,
+            _WAV_RATE * block_align // (n + 2), block_align, 4,
+            2, n + 2,
+        )
+        pcm = header + data
+        body = (
+            b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(pcm)) + pcm
+        )
+        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 20 + (d % 6) * 10  # nibble count, even
-                p = d % 7
-                idelta = 16 + (d % 500) * 3
-                s1 = ((d * 131 + 37) % 20001) - 10000
-                s2 = ((d * 173 + 91) % 20001) - 10000
-                alpha = (0, 1, 2, 3, 4, 13, 14, 15)
-                codes = [alpha[(d * 11 + i * 7) % 8] for i in range(n)]
-                data = bytes(
-                    (codes[j] << 4) | codes[j + 1] for j in range(0, n, 2)
-                )
-                header = bytes([p]) + struct.pack("<hhh", idelta, s1, s2)
-                block_align = 7 + n // 2
-                fmt = struct.pack(
-                    "<HHIIHHHH", 2, 1, _WAV_RATE,
-                    _WAV_RATE * block_align // (n + 2), block_align, 4,
-                    2, n + 2,
-                )
-                pcm = header + data
-                body = (
-                    b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(pcm)) + pcm
-                )
-                rows.append((d, b"RIFF" + struct.pack("<I", len(body)) + body))
-            yield pd.DataFrame(rows, columns=["doc_id", "wav"])
-
-    return docs.select("doc_id").mapInPandas(synth, schema)
+    return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
 
 def synthesize_wav_adpcm_payloads(docs: DataFrame) -> DataFrame:
@@ -1453,43 +1275,32 @@ def synthesize_wav_adpcm_payloads(docs: DataFrame) -> DataFrame:
     nibble CODES are all closed-form in doc_id, so the SQL oracle can
     replay the decoder's full adaptive state machine as a list fold and
     reproduce every decoded sample exactly."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("wav", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    def wav(doc_id):
+        d = int(doc_id)
+        n = 24 + (d % 8) * 8  # nibble count, even
+        p0 = ((d * 131) % 20001) - 10000
+        i0 = d % 89
+        codes = [(d * 7 + i * 13) % 16 for i in range(n)]
+        data = bytes(
+            codes[j] | (codes[j + 1] << 4) for j in range(0, n, 2)
+        )
+        block_align = 4 + n // 2
+        header = struct.pack("<hBB", p0, i0, 0)
+        fmt = struct.pack(
+            "<HHIIHHHH", 0x11, 1, _WAV_RATE,
+            _WAV_RATE * block_align // (n + 1), block_align, 4,
+            2, n + 1,  # cbSize=2, wSamplesPerBlock
+        )
+        pcm = header + data
+        body = (
+            b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(pcm)) + pcm
+        )
+        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 24 + (d % 8) * 8  # nibble count, even
-                p0 = ((d * 131) % 20001) - 10000
-                i0 = d % 89
-                codes = [(d * 7 + i * 13) % 16 for i in range(n)]
-                data = bytes(
-                    codes[j] | (codes[j + 1] << 4) for j in range(0, n, 2)
-                )
-                block_align = 4 + n // 2
-                header = struct.pack("<hBB", p0, i0, 0)
-                fmt = struct.pack(
-                    "<HHIIHHHH", 0x11, 1, _WAV_RATE,
-                    _WAV_RATE * block_align // (n + 1), block_align, 4,
-                    2, n + 1,  # cbSize=2, wSamplesPerBlock
-                )
-                pcm = header + data
-                body = (
-                    b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(pcm)) + pcm
-                )
-                rows.append((d, b"RIFF" + struct.pack("<I", len(body)) + body))
-            yield pd.DataFrame(rows, columns=["doc_id", "wav"])
-
-    return docs.select("doc_id").mapInPandas(synth, schema)
+    return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
 
 def parse_wav(b: bytes) -> tuple[int, int, tuple[int, ...]]:
@@ -1589,22 +1400,14 @@ def decode_wav(with_wav: DataFrame) -> DataFrame:
     (sample instants), so duration is channel-count-independent; rms is
     over every sample of every channel (== mono rms for mono input)."""
 
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import math as _m
+    def stats(doc_id, wav):
+        rate, ch, samples = parse_wav(bytes(wav))
+        n = len(samples)
+        frames = n // ch
+        rms = math.sqrt(sum(s * s for s in samples) / n) if n else 0.0
+        yield int(doc_id), rate, frames, frames * 1000.0 / rate, rms
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, wav in zip(pdf["doc_id"], pdf["wav"]):
-                rate, ch, samples = parse_wav(bytes(wav))
-                n = len(samples)
-                frames = n // ch
-                rms = _m.sqrt(sum(s * s for s in samples) / n) if n else 0.0
-                rows.append((int(doc_id), rate, frames, frames * 1000.0 / rate, rms))
-            yield pd.DataFrame(rows, columns=[f.name for f in WAV_SCHEMA.fields])
-
-    return with_wav.select("doc_id", "wav").mapInPandas(dec, WAV_SCHEMA)
+    return _map_rows(with_wav, ["doc_id", "wav"], WAV_SCHEMA, stats)
 
 
 def _sample_st(doc_id: int, i: int, ch: int) -> int:
@@ -1618,35 +1421,24 @@ def synthesize_wav_stereo_payloads(docs: DataFrame) -> DataFrame:
     little-endian PCM STEREO @ 8 kHz (interleaved L/R from the
     closed-form per-channel formula), built per-partition in
     mapInPandas."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("wav", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    def wav(doc_id):
+        d = int(doc_id)
+        frames = 40 + (d % 15) * 20
+        inter = [
+            _sample_st(d, i, ch) for i in range(frames) for ch in range(2)
+        ]
+        pcm = struct.pack(f"<{len(inter)}h", *inter)
+        # block align = channels * bytes/sample = 4
+        fmt = struct.pack("<HHIIHH", 1, 2, _WAV_RATE, _WAV_RATE * 4, 4, 16)
+        body = (
+            b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(pcm)) + pcm
+        )
+        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                frames = 40 + (d % 15) * 20
-                inter = [
-                    _sample_st(d, i, ch) for i in range(frames) for ch in range(2)
-                ]
-                pcm = struct.pack(f"<{len(inter)}h", *inter)
-                # block align = channels * bytes/sample = 4
-                fmt = struct.pack("<HHIIHH", 1, 2, _WAV_RATE, _WAV_RATE * 4, 4, 16)
-                body = (
-                    b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(pcm)) + pcm
-                )
-                rows.append((d, b"RIFF" + struct.pack("<I", len(body)) + body))
-            yield pd.DataFrame(rows, columns=["doc_id", "wav"])
-
-    return docs.select("doc_id").mapInPandas(synth, schema)
+    return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
 
 WAV_STEREO_SCHEMA = T.StructType(
@@ -1666,29 +1458,19 @@ def decode_wav_stereo(with_wav: DataFrame) -> DataFrame:
     exact Python int, so the single sqrt-of-ratio per channel is
     bit-stable against the SQL oracle."""
 
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import math as _m
+    def stats(doc_id, wav):
+        rate, ch, samples = parse_wav(bytes(wav))
+        if ch != 2:
+            raise ValueError(f"doc {doc_id}: expected stereo WAV, got ch={ch}")
+        left, right = samples[0::2], samples[1::2]
+        frames = len(left)
+        yield (
+            int(doc_id), rate, frames,
+            math.sqrt(sum(s * s for s in left) / frames) if frames else 0.0,
+            math.sqrt(sum(s * s for s in right) / frames) if frames else 0.0,
+        )
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, wav in zip(pdf["doc_id"], pdf["wav"]):
-                rate, ch, samples = parse_wav(bytes(wav))
-                if ch != 2:
-                    raise ValueError(f"doc {doc_id}: expected stereo WAV, got ch={ch}")
-                left, right = samples[0::2], samples[1::2]
-                frames = len(left)
-                rows.append(
-                    (
-                        int(doc_id), rate, frames,
-                        _m.sqrt(sum(s * s for s in left) / frames) if frames else 0.0,
-                        _m.sqrt(sum(s * s for s in right) / frames) if frames else 0.0,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in WAV_STEREO_SCHEMA.fields])
-
-    return with_wav.select("doc_id", "wav").mapInPandas(dec, WAV_STEREO_SCHEMA)
+    return _map_rows(with_wav, ["doc_id", "wav"], WAV_STEREO_SCHEMA, stats)
 
 
 def synthesize_wav_multichannel_payloads(docs: DataFrame) -> DataFrame:
@@ -1697,41 +1479,30 @@ def synthesize_wav_multichannel_payloads(docs: DataFrame) -> DataFrame:
     nch = 3 + doc_id % 4) @ 8 kHz, per-channel samples from the same
     closed-form formula as the stereo fixture. Built per-partition in
     mapInPandas (r9 — closes the r8 two-channel ceiling)."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("wav", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    def wav(doc_id):
+        d = int(doc_id)
+        nch = 3 + d % 4
+        frames = 30 + (d % 12) * 15
+        inter = [
+            _sample_st(d, i, ch)
+            for i in range(frames)
+            for ch in range(nch)
+        ]
+        pcm = struct.pack(f"<{len(inter)}h", *inter)
+        # block align = channels * bytes/sample
+        fmt = struct.pack(
+            "<HHIIHH", 1, nch, _WAV_RATE, _WAV_RATE * 2 * nch,
+            2 * nch, 16,
+        )
+        body = (
+            b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(pcm)) + pcm
+        )
+        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nch = 3 + d % 4
-                frames = 30 + (d % 12) * 15
-                inter = [
-                    _sample_st(d, i, ch)
-                    for i in range(frames)
-                    for ch in range(nch)
-                ]
-                pcm = struct.pack(f"<{len(inter)}h", *inter)
-                # block align = channels * bytes/sample
-                fmt = struct.pack(
-                    "<HHIIHH", 1, nch, _WAV_RATE, _WAV_RATE * 2 * nch,
-                    2 * nch, 16,
-                )
-                body = (
-                    b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(pcm)) + pcm
-                )
-                rows.append((d, b"RIFF" + struct.pack("<I", len(body)) + body))
-            yield pd.DataFrame(rows, columns=["doc_id", "wav"])
-
-    return docs.select("doc_id").mapInPandas(synth, schema)
+    return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
 
 WAV_MC_SCHEMA = T.StructType(
@@ -1753,28 +1524,15 @@ def decode_wav_multichannel(with_wav: DataFrame) -> DataFrame:
     Channel sums of squares are exact Python ints, so the single
     sqrt-of-ratio per channel is bit-stable against the SQL oracle."""
 
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import math as _m
+    def channels(doc_id, wav):
+        _rate, nch, samples = parse_wav(bytes(wav))
+        frames = len(samples) // nch
+        for c in range(nch):
+            chan = samples[c::nch]
+            rms = math.sqrt(sum(s * s for s in chan) / frames) if frames else 0.0
+            yield int(doc_id), nch, c, frames, rms
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, wav in zip(pdf["doc_id"], pdf["wav"]):
-                _rate, nch, samples = parse_wav(bytes(wav))
-                frames = len(samples) // nch
-                for c in range(nch):
-                    chan = samples[c::nch]
-                    rows.append(
-                        (
-                            int(doc_id), nch, c, frames,
-                            _m.sqrt(sum(s * s for s in chan) / frames)
-                            if frames else 0.0,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in WAV_MC_SCHEMA.fields])
-
-    return with_wav.select("doc_id", "wav").mapInPandas(dec, WAV_MC_SCHEMA)
+    return _map_rows(with_wav, ["doc_id", "wav"], WAV_MC_SCHEMA, channels)
 
 
 # ---------------------------------------------------------------------------
@@ -1798,33 +1556,21 @@ def synthesize_jpeg_payloads(docs: DataFrame) -> DataFrame:
     parsing is a header walk and must not depend on pixel payload. For
     full streams with a real scan, see encode_jpeg /
     synthesize_jpeg_pixel_payloads below (r9)."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("jpeg", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    def jpeg(doc_id, text):
+        d = int(doc_id)
+        w, h = 64 + (d % 16) * 32, 64 + (d % 9) * 32
+        com = str(text)[:40].encode("utf-8")
+        sof0 = struct.pack(">BHHB", 8, h, w, 1) + b"\x01\x11\x00"
+        yield d, (
+            b"\xff\xd8"
+            + b"\xff\xe0" + struct.pack(">H", 2 + len(_JFIF_APP0)) + _JFIF_APP0
+            + b"\xff\xfe" + struct.pack(">H", 2 + len(com)) + com
+            + b"\xff\xc0" + struct.pack(">H", 2 + len(sof0)) + sof0
+            + b"\xff\xd9"
+        )
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                w, h = 64 + (d % 16) * 32, 64 + (d % 9) * 32
-                com = str(text)[:40].encode("utf-8")
-                sof0 = struct.pack(">BHHB", 8, h, w, 1) + b"\x01\x11\x00"
-                b = (
-                    b"\xff\xd8"
-                    + b"\xff\xe0" + struct.pack(">H", 2 + len(_JFIF_APP0)) + _JFIF_APP0
-                    + b"\xff\xfe" + struct.pack(">H", 2 + len(com)) + com
-                    + b"\xff\xc0" + struct.pack(">H", 2 + len(sof0)) + sof0
-                    + b"\xff\xd9"
-                )
-                rows.append((d, b))
-            yield pd.DataFrame(rows, columns=["doc_id", "jpeg"])
-
-    return docs.select("doc_id", "text").mapInPandas(synth, schema)
+    return _map_rows(docs, ["doc_id", "text"], _payload_schema("jpeg"), jpeg)
 
 
 def parse_jpeg_header(b: bytes) -> tuple[int, int, int, int, int]:
@@ -1885,17 +1631,11 @@ def decode_jpeg_header(with_jpeg: DataFrame) -> DataFrame:
     """Parse JPEG frame headers via ``parse_jpeg_header`` in Arrow-batched
     ``mapInPandas``."""
 
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def header(doc_id, jb):
+        precision, h, w, ncomp, com_len = parse_jpeg_header(bytes(jb))
+        yield int(doc_id), w, h, precision, ncomp, com_len
 
-        for pdf in batches:
-            rows = []
-            for doc_id, jb in zip(pdf["doc_id"], pdf["jpeg"]):
-                precision, h, w, ncomp, com_len = parse_jpeg_header(bytes(jb))
-                rows.append((int(doc_id), w, h, precision, ncomp, com_len))
-            yield pd.DataFrame(rows, columns=[f.name for f in JPEG_SCHEMA.fields])
-
-    return with_jpeg.select("doc_id", "jpeg").mapInPandas(dec, JPEG_SCHEMA)
+    return _map_rows(with_jpeg, ["doc_id", "jpeg"], JPEG_SCHEMA, header)
 
 
 # ---------------------------------------------------------------------------
@@ -2937,26 +2677,18 @@ def synthesize_jpeg_pixel_payloads(docs: DataFrame) -> DataFrame:
     general (lossy) AC path is pinned by the property tests instead
     (tests/test_multimodal.py round-trips random blocks against an
     independent numpy reference)."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("jpeg", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def jpeg(doc_id):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                bw_, bh_ = 2 + d % 3, 1 + d % 2
-                yy, xx = np.mgrid[0:bh_, 0:bw_]
-                vals = 2 * ((d * 7 + yy * 3 + xx) % 128)
-                grid = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-                rows.append((d, encode_jpeg([grid])))
-            yield pd.DataFrame(rows, columns=["doc_id", "jpeg"])
+        d = int(doc_id)
+        bw_, bh_ = 2 + d % 3, 1 + d % 2
+        yy, xx = np.mgrid[0:bh_, 0:bw_]
+        vals = 2 * ((d * 7 + yy * 3 + xx) % 128)
+        grid = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
+        yield d, encode_jpeg([grid])
 
-    return _ids_at_width(docs).mapInPandas(synth, schema)
+    return _map_rows(_ids_at_width(docs), ["doc_id"], _payload_schema("jpeg"), jpeg)
 
 
 def synthesize_jpeg_progressive_payloads(docs: DataFrame) -> DataFrame:
@@ -2968,33 +2700,23 @@ def synthesize_jpeg_progressive_payloads(docs: DataFrame) -> DataFrame:
     128), even) so the full scan script round-trips exactly and the
     pixel stats keep a closed-form SQL oracle; the general lossy path
     is pinned by the progressive==baseline property test."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("jpeg", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def jpeg(doc_id):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                bw_, bh_ = 2 + d % 4, 1 + d % 3
-                yy, xx = np.mgrid[0:bh_, 0:bw_]
-                vals = 2 * ((d * 11 + yy * 5 + xx) % 128)
-                grid = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-                # alternate docs add a DRI scan script (restart markers
-                # in every progressive scan, r11) — same pixels, so the
-                # entry's closed-form oracle is unchanged while the
-                # decoder's restart path is exercised by the gate
-                ri = 2 if d % 2 == 0 else 0
-                rows.append(
-                    (d, encode_jpeg_progressive([grid], restart_interval=ri))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "jpeg"])
+        d = int(doc_id)
+        bw_, bh_ = 2 + d % 4, 1 + d % 3
+        yy, xx = np.mgrid[0:bh_, 0:bw_]
+        vals = 2 * ((d * 11 + yy * 5 + xx) % 128)
+        grid = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
+        # alternate docs add a DRI scan script (restart markers in
+        # every progressive scan) — same pixels, so the entry's
+        # closed-form oracle is unchanged while the decoder's restart
+        # path is exercised by the gate
+        ri = 2 if d % 2 == 0 else 0
+        yield d, encode_jpeg_progressive([grid], restart_interval=ri)
 
-    return _ids_at_width(docs).mapInPandas(synth, schema)
+    return _map_rows(_ids_at_width(docs), ["doc_id"], _payload_schema("jpeg"), jpeg)
 
 
 def synthesize_jpeg_420_payloads(docs: DataFrame) -> DataFrame:
@@ -3004,13 +2726,9 @@ def synthesize_jpeg_420_payloads(docs: DataFrame) -> DataFrame:
     constant per MCU — all even values — so box decimation, the DCT
     round-trip, and replication upsampling are ALL exact and the
     per-plane pixel sums have a closed-form SQL oracle."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("jpeg", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def jpeg(doc_id):
         import numpy as np
-        import pandas as pd
 
         def cellgrid(d, base, rows_, cols_, cell):
             # value matrix at cell grain, replicated to pixel grain —
@@ -3019,20 +2737,14 @@ def synthesize_jpeg_420_payloads(docs: DataFrame) -> DataFrame:
             vals = 2 * ((d + base + yy * 3 + xx) % 128)
             return np.repeat(np.repeat(vals, cell, axis=0), cell, axis=1)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                mw, mh = 2 + d % 2, 1 + d % 3
-                y_p = cellgrid(d * 5, 0, 2 * mh, 2 * mw, 8)
-                cb = cellgrid(d * 7, 29, mh, mw, 16)
-                cr = cellgrid(d * 7, 58, mh, mw, 16)
-                rows.append(
-                    (d, encode_jpeg([y_p, cb, cr], subsample_420=True))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "jpeg"])
+        d = int(doc_id)
+        mw, mh = 2 + d % 2, 1 + d % 3
+        y_p = cellgrid(d * 5, 0, 2 * mh, 2 * mw, 8)
+        cb = cellgrid(d * 7, 29, mh, mw, 16)
+        cr = cellgrid(d * 7, 58, mh, mw, 16)
+        yield d, encode_jpeg([y_p, cb, cr], subsample_420=True)
 
-    return _ids_at_width(docs).mapInPandas(synth, schema)
+    return _map_rows(_ids_at_width(docs), ["doc_id"], _payload_schema("jpeg"), jpeg)
 
 
 def synthesize_jpeg_restart_payloads(docs: DataFrame) -> DataFrame:
@@ -3040,26 +2752,18 @@ def synthesize_jpeg_restart_payloads(docs: DataFrame) -> DataFrame:
     fixture family (see synthesize_jpeg_pixel_payloads) but encoded
     WITH restart_interval=2 — DRI segment + byte-aligned RST0-7 markers
     every two MCUs, DC predictors reset at each boundary."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("jpeg", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def jpeg(doc_id):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                bw_, bh_ = 2 + d % 3, 1 + d % 2
-                yy, xx = np.mgrid[0:bh_, 0:bw_]
-                vals = 2 * ((d * 11 + yy * 3 + xx) % 128)
-                grid = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
-                rows.append((d, encode_jpeg([grid], restart_interval=2)))
-            yield pd.DataFrame(rows, columns=["doc_id", "jpeg"])
+        d = int(doc_id)
+        bw_, bh_ = 2 + d % 3, 1 + d % 2
+        yy, xx = np.mgrid[0:bh_, 0:bw_]
+        vals = 2 * ((d * 11 + yy * 3 + xx) % 128)
+        grid = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
+        yield d, encode_jpeg([grid], restart_interval=2)
 
-    return _ids_at_width(docs).mapInPandas(synth, schema)
+    return _map_rows(_ids_at_width(docs), ["doc_id"], _payload_schema("jpeg"), jpeg)
 
 
 JPEG_420_SCHEMA = T.StructType(
@@ -3079,21 +2783,13 @@ def decode_jpeg_420_stats(with_jpeg: DataFrame) -> DataFrame:
     ``mapInPandas``; per-plane exact integer sums at FULL resolution
     (chroma after replication upsampling)."""
 
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def sums(doc_id, jb):
+        w, h, planes = _parse_jpeg_planes(bytes(jb))
+        if len(planes) != 3:
+            raise ValueError(f"doc {doc_id}: expected 3 components")
+        yield (int(doc_id), w, h, *(int(p.sum()) for p in planes))
 
-        for pdf in batches:
-            rows = []
-            for doc_id, jb in zip(pdf["doc_id"], pdf["jpeg"]):
-                w, h, planes = _parse_jpeg_planes(bytes(jb))
-                if len(planes) != 3:
-                    raise ValueError(f"doc {doc_id}: expected 3 components")
-                sums = [int(p.sum()) for p in planes]
-                rows.append((int(doc_id), w, h, *sums))
-            yield pd.DataFrame(rows, columns=[f.name for f in JPEG_420_SCHEMA.fields])
-
-    return with_jpeg.select("doc_id", "jpeg").mapInPandas(dec, JPEG_420_SCHEMA)
+    return _map_rows(with_jpeg, ["doc_id", "jpeg"], JPEG_420_SCHEMA, sums)
 
 
 JPEG_PX_SCHEMA = T.StructType(
@@ -3113,24 +2809,14 @@ def decode_jpeg_pixel_stats(with_jpeg: DataFrame) -> DataFrame:
     Arrow-batched ``mapInPandas`` and emit exact integer pixel stats of
     the (grayscale) plane."""
 
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def stats(doc_id, jb):
+        w, h, planes = _parse_jpeg_planes(bytes(jb))
+        if len(planes) != 1:
+            raise ValueError(f"doc {doc_id}: expected grayscale")
+        p = planes[0]
+        yield int(doc_id), w, h, int(p.min()), int(p.max()), int(p.sum())
 
-        for pdf in batches:
-            rows = []
-            for doc_id, jb in zip(pdf["doc_id"], pdf["jpeg"]):
-                w, h, planes = _parse_jpeg_planes(bytes(jb))
-                if len(planes) != 1:
-                    raise ValueError(f"doc {doc_id}: expected grayscale")
-                p = planes[0]
-                rows.append(
-                    (int(doc_id), w, h,
-                     int(p.min()), int(p.max()), int(p.sum()))
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in JPEG_PX_SCHEMA.fields])
-
-    return with_jpeg.select("doc_id", "jpeg").mapInPandas(dec, JPEG_PX_SCHEMA)
+    return _map_rows(with_jpeg, ["doc_id", "jpeg"], JPEG_PX_SCHEMA, stats)
 
 
 AHASH_SCHEMA = T.StructType(
@@ -3163,33 +2849,25 @@ def ahash_image(with_png: DataFrame) -> DataFrame:
     existing pigeonhole hamming machinery (operators/similarity.py).
     Arrow-batched mapInPandas; payload pruned from the output."""
 
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def ahash(doc_id, png):
+        w, h, c, grid = decode_png(bytes(png))
+        if c != 1:
+            raise ValueError(f"doc {doc_id}: aHash expects grayscale")
+        tot = sum(sum(r) for r in grid)
+        npx = w * h
+        bits = []
+        for cy in range(8):
+            for cx in range(8):
+                x0, x1 = cx * w // 8, (cx + 1) * w // 8
+                y0, y1 = cy * h // 8, (cy + 1) * h // 8
+                s = sum(grid[y][x] for y in range(y0, y1) for x in range(x0, x1))
+                ncell = (x1 - x0) * (y1 - y0)
+                bits.append(1 if s * npx > tot * ncell else 0)
+        hi = sum(b << i for i, b in enumerate(bits[:32]))
+        lo = sum(b << i for i, b in enumerate(bits[32:]))
+        yield int(doc_id), w, h, hi, lo, sum(bits)
 
-        for pdf in batches:
-            rows = []
-            for doc_id, png in zip(pdf["doc_id"], pdf["png"]):
-                w, h, c, grid = decode_png(bytes(png))
-                if c != 1:
-                    raise ValueError(f"doc {doc_id}: aHash expects grayscale")
-                tot = sum(sum(r) for r in grid)
-                npx = w * h
-                bits = []
-                for cy in range(8):
-                    for cx in range(8):
-                        x0, x1 = cx * w // 8, (cx + 1) * w // 8
-                        y0, y1 = cy * h // 8, (cy + 1) * h // 8
-                        s = sum(
-                            grid[y][x] for y in range(y0, y1) for x in range(x0, x1)
-                        )
-                        ncell = (x1 - x0) * (y1 - y0)
-                        bits.append(1 if s * npx > tot * ncell else 0)
-                hi = sum(b << i for i, b in enumerate(bits[:32]))
-                lo = sum(b << i for i, b in enumerate(bits[32:]))
-                rows.append((int(doc_id), w, h, hi, lo, sum(bits)))
-            yield pd.DataFrame(rows, columns=[f.name for f in AHASH_SCHEMA.fields])
-
-    return with_png.select("doc_id", "png").mapInPandas(dec, AHASH_SCHEMA)
+    return _map_rows(with_png, ["doc_id", "png"], AHASH_SCHEMA, ahash)
 
 
 def _pixel_rgba(doc_id: int, x: int, y: int, ch: int) -> int:
@@ -3202,30 +2880,17 @@ def synthesize_png_rgba_payloads(docs: DataFrame) -> DataFrame:
     """image-docs → (doc_id, png binary): real RGBA (color type 6) PNG
     files, filters cycling through all five types at the 4-byte pixel
     stride. Pixels closed-form in doc_id for the SQL oracle."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("png", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def png(doc_id):
+        d = int(doc_id)
+        w, h = 8 * (1 + d % 3), 4 * (1 + d % 4)
+        grid = [
+            [_pixel_rgba(d, x, y, ch) for x in range(w) for ch in range(4)]
+            for y in range(h)
+        ]
+        yield d, encode_png(grid, lambda y: d + y, channels=4)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 * (1 + d % 3), 4 * (1 + d % 4)
-                grid = [
-                    [
-                        _pixel_rgba(d, x, y, ch)
-                        for x in range(w)
-                        for ch in range(4)
-                    ]
-                    for y in range(h)
-                ]
-                rows.append((d, encode_png(grid, lambda y, d=d: d + y, channels=4)))
-            yield pd.DataFrame(rows, columns=["doc_id", "png"])
-
-    return docs.select("doc_id").mapInPandas(synth, schema)
+    return _map_rows(docs, ["doc_id"], _payload_schema("png"), png)
 
 
 RGBA_STATS_SCHEMA = T.StructType(
@@ -3245,24 +2910,16 @@ def decode_image_rgba(with_png: DataFrame) -> DataFrame:
     """Per-channel stats over REAL RGBA PNG payloads (4-byte-stride
     de-filter). Arrow-batched mapInPandas; payload pruned."""
 
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def stats(doc_id, png):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for doc_id, png in zip(pdf["doc_id"], pdf["png"]):
-                w, h, c, grid = decode_png(bytes(png))
-                if c != 4:
-                    raise ValueError(f"doc {doc_id}: expected RGBA PNG, got {c} channel(s)")
-                a = np.array(grid, dtype=np.float64).reshape(h, w, 4)
-                m = a.mean(axis=(0, 1))
-                rows.append(
-                    (int(doc_id), w, h, float(m[0]), float(m[1]), float(m[2]), float(m[3]))
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in RGBA_STATS_SCHEMA.fields])
+        w, h, c, grid = decode_png(bytes(png))
+        if c != 4:
+            raise ValueError(f"doc {doc_id}: expected RGBA PNG, got {c} channel(s)")
+        m = np.array(grid, dtype=np.float64).reshape(h, w, 4).mean(axis=(0, 1))
+        yield int(doc_id), w, h, float(m[0]), float(m[1]), float(m[2]), float(m[3])
 
-    return with_png.select("doc_id", "png").mapInPandas(dec, RGBA_STATS_SCHEMA)
+    return _map_rows(with_png, ["doc_id", "png"], RGBA_STATS_SCHEMA, stats)
 
 
 # -- ISO-BMFF (MP4) container walk -------------------------------------------
@@ -3293,55 +2950,44 @@ def synthesize_mp4_payloads(docs: DataFrame) -> DataFrame:
     >4 GiB recording exercises. Entropy/sample data is omitted
     (header-only streams): duration/dimension parsing is a box walk and
     must not depend on media payload."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("mp4", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    def box(fourcc: bytes, payload: bytes) -> bytes:
+        return struct.pack(">I", 8 + len(payload)) + fourcc + payload
 
-        import pandas as pd
+    def mp4(doc_id, text):
+        d = int(doc_id)
+        dur = (d % 90 + 1) * _MP4_TIMESCALE
+        w, h = 320 + (d % 8) * 16, 240 + (d % 5) * 16
+        ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isommp41")
+        free = box(b"free", str(text)[:32].encode("utf-8"))
+        mvhd = box(
+            b"mvhd",
+            struct.pack(">BxxxIIII", 0, 0, 0, _MP4_TIMESCALE, dur)
+            + struct.pack(">IHH", 0x00010000, 0x0100, 0)
+            + b"\x00" * 8
+            + _MP4_UNITY_MATRIX
+            + b"\x00" * 24
+            + struct.pack(">I", 2),
+        )
+        tkhd = box(
+            b"tkhd",
+            struct.pack(">BxxxIIIxxxxI", 0, 0, 0, 1, dur)
+            + b"\x00" * 8
+            + struct.pack(">HHHxx", 0, 0, 0)
+            + _MP4_UNITY_MATRIX
+            + struct.pack(">II", w << 16, h << 16),
+        )
+        moov = box(b"moov", mvhd + box(b"trak", tkhd))
+        mdat_payload = b"\x00" * (d % 7)
+        mdat = (
+            struct.pack(">I", 1)
+            + b"mdat"
+            + struct.pack(">Q", 16 + len(mdat_payload))
+            + mdat_payload
+        )
+        yield d, ftyp + free + moov + mdat
 
-        def box(fourcc: bytes, payload: bytes) -> bytes:
-            return struct.pack(">I", 8 + len(payload)) + fourcc + payload
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                dur = (d % 90 + 1) * _MP4_TIMESCALE
-                w, h = 320 + (d % 8) * 16, 240 + (d % 5) * 16
-                ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isommp41")
-                free = box(b"free", str(text)[:32].encode("utf-8"))
-                mvhd = box(
-                    b"mvhd",
-                    struct.pack(">BxxxIIII", 0, 0, 0, _MP4_TIMESCALE, dur)
-                    + struct.pack(">IHH", 0x00010000, 0x0100, 0)
-                    + b"\x00" * 8
-                    + _MP4_UNITY_MATRIX
-                    + b"\x00" * 24
-                    + struct.pack(">I", 2),
-                )
-                tkhd = box(
-                    b"tkhd",
-                    struct.pack(">BxxxIIIxxxxI", 0, 0, 0, 1, dur)
-                    + b"\x00" * 8
-                    + struct.pack(">HHHxx", 0, 0, 0)
-                    + _MP4_UNITY_MATRIX
-                    + struct.pack(">II", w << 16, h << 16),
-                )
-                moov = box(b"moov", mvhd + box(b"trak", tkhd))
-                mdat_payload = b"\x00" * (d % 7)
-                mdat = (
-                    struct.pack(">I", 1)
-                    + b"mdat"
-                    + struct.pack(">Q", 16 + len(mdat_payload))
-                    + mdat_payload
-                )
-                rows.append((d, ftyp + free + moov + mdat))
-            yield pd.DataFrame(rows, columns=["doc_id", "mp4"])
-
-    return docs.select("doc_id", "text").mapInPandas(synth, schema)
+    return _map_rows(docs, ["doc_id", "text"], _payload_schema("mp4"), mp4)
 
 
 _MP4_UNITY_MATRIX = (
@@ -3432,19 +3078,11 @@ def decode_mp4_header(with_mp4: DataFrame) -> DataFrame:
     ``mapInPandas``; duration surfaces in exact integer milliseconds
     (duration * 1000 // timescale)."""
 
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def header(doc_id, mb):
+        major, n_top, ts, dur, w, h, free_len = parse_mp4_header(bytes(mb))
+        yield int(doc_id), major, n_top, dur * 1000 // ts, w, h, free_len
 
-        for pdf in batches:
-            rows = []
-            for doc_id, mb in zip(pdf["doc_id"], pdf["mp4"]):
-                major, n_top, ts, dur, w, h, free_len = parse_mp4_header(bytes(mb))
-                rows.append(
-                    (int(doc_id), major, n_top, dur * 1000 // ts, w, h, free_len)
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in MP4_SCHEMA.fields])
-
-    return with_mp4.select("doc_id", "mp4").mapInPandas(dec, MP4_SCHEMA)
+    return _map_rows(with_mp4, ["doc_id", "mp4"], MP4_SCHEMA, header)
 
 
 # -- audio frequency-domain feature extraction --------------------------------
@@ -3471,38 +3109,26 @@ def synthesize_wav_tone_payloads(docs: DataFrame) -> DataFrame:
     """audio-docs → (doc_id, wav binary): real RIFF/WAVE mono int16 PCM
     files each carrying a pure sine at ``TONE_FREQS[doc_id % 4]`` —
     the labeled fixture for frequency-domain feature extraction."""
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("wav", T.BinaryType())]
-    )
 
-    def synth(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import math
-        import struct
+    def wav(doc_id):
+        d = int(doc_id)
+        f = TONE_FREQS[d % 4]
+        pcm = struct.pack(
+            f"<{_TONE_N}h",
+            *[
+                int(round(_TONE_AMP * math.sin(2 * math.pi * f * i / _WAV_RATE)))
+                for i in range(_TONE_N)
+            ],
+        )
+        fmt = struct.pack("<HHIIHH", 1, 1, _WAV_RATE, _WAV_RATE * 2, 2, 16)
+        body = (
+            b"WAVE"
+            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(pcm)) + pcm
+        )
+        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
 
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                f = TONE_FREQS[d % 4]
-                pcm = struct.pack(
-                    f"<{_TONE_N}h",
-                    *[
-                        int(round(_TONE_AMP * math.sin(2 * math.pi * f * i / _WAV_RATE)))
-                        for i in range(_TONE_N)
-                    ],
-                )
-                fmt = struct.pack("<HHIIHH", 1, 1, _WAV_RATE, _WAV_RATE * 2, 2, 16)
-                body = (
-                    b"WAVE"
-                    + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(pcm)) + pcm
-                )
-                rows.append((d, b"RIFF" + struct.pack("<I", len(body)) + body))
-            yield pd.DataFrame(rows, columns=["doc_id", "wav"])
-
-    return _ids_at_width(docs).mapInPandas(synth, schema)
+    return _map_rows(_ids_at_width(docs), ["doc_id"], _payload_schema("wav"), wav)
 
 
 def detect_wav_tone(with_wav: DataFrame) -> DataFrame:
@@ -3518,26 +3144,21 @@ def detect_wav_tone(with_wav: DataFrame) -> DataFrame:
     float noise, and the oracle checks only the recovered LABEL
     (doc_id % 4) plus exact integer metadata, never a float."""
 
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def tone(doc_id, wb):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for doc_id, wb in zip(pdf["doc_id"], pdf["wav"]):
-                rate, ch, samples = parse_wav(bytes(wb))
-                if ch != 1:
-                    raise ValueError(f"doc {doc_id}: tone detect expects mono")
-                x = np.asarray(samples, dtype=np.float64)
-                n = len(x)
-                t = np.arange(n) / rate
-                energies = [
-                    float(np.dot(x, np.cos(2 * np.pi * f * t)) ** 2
-                          + np.dot(x, np.sin(2 * np.pi * f * t)) ** 2)
-                    for f in TONE_FREQS
-                ]
-                k = int(max(range(len(TONE_FREQS)), key=lambda i: energies[i]))
-                rows.append((int(doc_id), rate, n, k, TONE_FREQS[k]))
-            yield pd.DataFrame(rows, columns=[f.name for f in TONE_SCHEMA.fields])
+        rate, ch, samples = parse_wav(bytes(wb))
+        if ch != 1:
+            raise ValueError(f"doc {doc_id}: tone detect expects mono")
+        x = np.asarray(samples, dtype=np.float64)
+        n = len(x)
+        t = np.arange(n) / rate
+        energies = [
+            float(np.dot(x, np.cos(2 * np.pi * f * t)) ** 2
+                  + np.dot(x, np.sin(2 * np.pi * f * t)) ** 2)
+            for f in TONE_FREQS
+        ]
+        k = int(max(range(len(TONE_FREQS)), key=lambda i: energies[i]))
+        yield int(doc_id), rate, n, k, TONE_FREQS[k]
 
-    return with_wav.select("doc_id", "wav").mapInPandas(dec, TONE_SCHEMA)
+    return _map_rows(with_wav, ["doc_id", "wav"], TONE_SCHEMA, tone)

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import cleaning as C
+from ..sources.artifacts import persisted
 from ..sources.tpch import register_views
 from .catalog import register
 
@@ -104,26 +105,15 @@ def _stg_sales_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(f"WITH {_dirty_sales_sql(True)} SELECT * FROM stg_sales")
 
 
-#: session-scoped persisted cleaned frames — the cleaning entries all
-#: share the products/sales pipelines (the fact build alone references
-#: products twice); persisting them once per (session, sf_dir) mirrors
-#: the reference's materialized staging tables (ETL.sql's staging schema
-#: is persisted, not recomputed per query)
-_CLEAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _cached(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _CLEAN_CACHE.get(key)
-    if df is None:
-        df = build().persist()
-        _CLEAN_CACHE[key] = df
-    return df
-
-
 def _products_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cached(
-        spark, sf_dir, "products", lambda: C.clean_products(_stg_products_df(spark, sf_dir))
+    # Persisted once per (session, sf_dir): the cleaning entries all
+    # share the products/sales pipelines (the fact build alone
+    # references products twice), which mirrors the reference's
+    # materialized staging tables (ETL.sql's staging schema is
+    # persisted, not recomputed per query).
+    return persisted(
+        spark, ("clean", sf_dir, "products"),
+        lambda: C.clean_products(_stg_products_df(spark, sf_dir)).persist(),
     )
 
 
@@ -135,9 +125,11 @@ def _sales_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materializing it once per (session, sf_dir) mirrors the
     # reference's persisted staging.sales_clean table (ETL.sql:155-194
     # writes the cleaned staging ONCE; every downstream load reads it).
-    return _cached(
-        spark, sf_dir, "sales",
-        lambda: C.clean_sales(_stg_sales_df(spark, sf_dir), _products_clean(spark, sf_dir)),
+    return persisted(
+        spark, ("clean", sf_dir, "sales"),
+        lambda: C.clean_sales(
+            _stg_sales_df(spark, sf_dir), _products_clean(spark, sf_dir)
+        ).persist(),
     )
 
 

@@ -21,6 +21,7 @@ from ..operators import ann_index as IX
 from ..operators import dedup as D
 from ..operators import minhash_index as MI
 from ..operators import similarity as S
+from ..sources.artifacts import persisted
 from ..sources.tpch import read_table
 from .catalog import register
 
@@ -187,24 +188,19 @@ def text_word_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deduplication
 # ---------------------------------------------------------------------------
 
-#: session-scoped persisted 2-word shingle set over the documents table,
-#: keyed (application, sf_dir) — the Jaccard, MinHash-LSH, and corpus-
-#: curation entries all start from the same (doc, g) frame, and the
-#: tokenize+explode+distinct is the expensive part of every one of them.
-#: Same pattern as sources/star.py::_PERSIST_CACHE; at 100 TB this
-#: persist becomes a parquet checkpoint feeding every dedup consumer.
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sh = _SHINGLE_CACHE.get(key)
-    if sh is None:
-        sh = D.shingle_set(
+    """Session-scoped persisted 2-word shingle set over the documents
+    table, keyed (application, sf_dir) — the Jaccard, MinHash-LSH, and
+    corpus-curation entries all start from the same (doc, g) frame, and
+    the tokenize+explode+distinct is the expensive part of every one of
+    them. At 100 TB this persist becomes a parquet checkpoint feeding
+    every dedup consumer."""
+    return persisted(
+        spark, ("doc_shingles", sf_dir),
+        lambda: D.shingle_set(
             read_table(spark, sf_dir, "documents"), "doc_id", "text", k=2
-        ).persist()
-        _SHINGLE_CACHE[key] = sh
-    return sh
+        ).persist(),
+    )
 
 
 @register(

@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 from ..functions import text as T2
 from ..functions.text import o_tokens, s_md5_long, s_tokens
 from ..operators import text_index as TX
+from ..sources.artifacts import persisted
 from ..sources.tpch import read_table
 from .catalog import register
 
@@ -54,26 +55,21 @@ def _term_freqs(docs: DataFrame, term_filter: DataFrame | None = None) -> DataFr
     return toks.groupBy("doc_id", "term", "dl").agg(F.count("*").alias("tf"))
 
 
-#: session-scoped parsed corpus, keyed by (application, sf_dir) — the
-#: retrieval analog of the reference's load-time index build (its FTS /
-#: B-tree indexes are created before any timed query; BASELINE.md) and of
-#: llm_ops._doc_shingles. One regex-normalize+split scan per session.
-_TOKDOC_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, dl, toks): the tokenized corpus, persisted per session."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _TOKDOC_CACHE.get(key)
-    if df is None:
-        docs = read_table(spark, sf_dir, "documents")
-        df = (
-            docs.select("doc_id", F.expr(s_tokens("text")).alias("toks"))
-            .select("doc_id", F.size("toks").alias("dl"), "toks")
-            .persist()
-        )
-        _TOKDOC_CACHE[key] = df
-    return df
+    """(doc_id, dl, toks): the tokenized corpus, persisted per session.
+
+    Session-scoped parsed corpus, keyed by (application, sf_dir) — the
+    retrieval analog of the reference's load-time index build (its FTS /
+    B-tree indexes are created before any timed query; BASELINE.md) and
+    of llm_ops._doc_shingles. One regex-normalize+split scan per
+    session."""
+    return persisted(
+        spark, ("tokenized_docs", sf_dir),
+        lambda: read_table(spark, sf_dir, "documents")
+        .select("doc_id", F.expr(s_tokens("text")).alias("toks"))
+        .select("doc_id", F.size("toks").alias("dl"), "toks")
+        .persist(),
+    )
 
 
 def bm25_topk(

@@ -28,6 +28,12 @@ State inside a complete root that records later changes (fold-generation
 markers, layout manifests, the compaction bracket) belongs to the module
 that owns the artifact. One writer per root: two processes building the
 same root at once are not guarded against.
+
+:func:`persisted` is the in-memory twin for frames that live only in
+the session's cache (the persisted star, cleaned staging, tokenized
+corpus, ...): ``build()`` returns the frame already persisted at its
+own storage level, runs once per ``(applicationId, *key)`` and later
+calls return the same DataFrame object.
 """
 
 from __future__ import annotations
@@ -36,7 +42,7 @@ import os
 import shutil
 from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -46,6 +52,9 @@ MARKER = "_COMPLETE"
 
 #: (applicationId, root) pairs ready in this process
 _READY: set[tuple[str, str]] = set()
+
+#: (applicationId, *key) -> the frame :func:`persisted` built for it
+_PERSISTED: dict[tuple, DataFrame] = {}
 
 
 def scratch_root(kind: str, sf_dir: str, name: str | None = None) -> str:
@@ -85,3 +94,15 @@ def discard(spark: SparkSession, root: str) -> None:
     :func:`ensure` rebuilds it."""
     _READY.discard((spark.sparkContext.applicationId, root))
     shutil.rmtree(root, ignore_errors=True)
+
+
+def persisted(
+    spark: SparkSession, key: tuple, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """The frame ``build()`` returns, built on the first call per
+    session and ``key``; ``build`` persists it itself."""
+    memo_key = (spark.sparkContext.applicationId, *key)
+    df = _PERSISTED.get(memo_key)
+    if df is None:
+        df = _PERSISTED[memo_key] = build()
+    return df

@@ -31,9 +31,11 @@ dims are broadcast in every star query (they are small by construction).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .artifacts import persisted
 from .tpch import read_table
 
 # ---------------------------------------------------------------------------
@@ -144,22 +146,19 @@ def _smart_date_key(ts_col: F.Column) -> F.Column:
     return F.date_format(ts_col, "yyyyMMddHHmmss").cast("long")
 
 
-#: session-scoped persisted star tables, keyed by (application, sf_dir,
-#: table). The reference's architecture loads the DW once and serves all
-#: OLAP/DAX queries from the loaded tables (README.md:25-42,170-173);
-#: this cache is the Spark analog — the conformance joins/distincts run
-#: once per session, every query after that reads persisted columnar
-#: batches. At 100 TB the same role is played by writing silver parquet
-#: via plans/layout.py writers; the query plans are identical either way.
-_PERSIST_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 class StarSchema:
     """Conformed star-schema DataFrames over one scale-factor directory.
 
     Tables are lazily-built logical plans, persisted (memory+disk) on
-    first use per (session, sf_dir) so repeated queries don't rebuild the
-    conformance layer — see ``_PERSIST_CACHE``.
+    first use per (session, sf_dir, table) through
+    ``artifacts.persisted``, so repeated queries don't rebuild the
+    conformance layer. The reference's architecture loads the DW once
+    and serves all OLAP/DAX queries from the loaded tables
+    (README.md:25-42,170-173); this is the Spark analog — the
+    conformance joins/distincts run once per session, every query after
+    that reads persisted columnar batches. At 100 TB the same role is
+    played by writing silver parquet via plans/layout.py writers; the
+    query plans are identical either way.
     """
 
     def __init__(self, spark: SparkSession, sf_dir: str):
@@ -170,20 +169,13 @@ class StarSchema:
     def raw(self, name: str) -> DataFrame:
         return read_table(self.spark, self.sf_dir, name)
 
-    def _persisted(self, name: str, df: DataFrame) -> DataFrame:
-        from pyspark import StorageLevel
-
-        key = (self.spark.sparkContext.applicationId, self.sf_dir, name)
-        cached = _PERSIST_CACHE.get(key)
-        if cached is None:
-            cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-            _PERSIST_CACHE[key] = cached
-        return cached
-
     # -- dims ----------------------------------------------------------------
     @property
     def dim_customer(self) -> DataFrame:
-        return self._persisted("dim_customer", self._dim_customer())
+        return persisted(
+            self.spark, ("star", self.sf_dir, "dim_customer"),
+            lambda: self._dim_customer().persist(StorageLevel.MEMORY_AND_DISK),
+        )
 
     def _dim_customer(self) -> DataFrame:
         c, n, r = self.raw("customer"), self.raw("nation"), self.raw("region")
@@ -203,7 +195,10 @@ class StarSchema:
 
     @property
     def dim_product(self) -> DataFrame:
-        return self._persisted("dim_product", self._dim_product())
+        return persisted(
+            self.spark, ("star", self.sf_dir, "dim_product"),
+            lambda: self._dim_product().persist(StorageLevel.MEMORY_AND_DISK),
+        )
 
     def _dim_product(self) -> DataFrame:
         return self.raw("part").select(
@@ -218,7 +213,10 @@ class StarSchema:
 
     @property
     def dim_date(self) -> DataFrame:
-        return self._persisted("dim_date", self._dim_date())
+        return persisted(
+            self.spark, ("star", self.sf_dir, "dim_date"),
+            lambda: self._dim_date().persist(StorageLevel.MEMORY_AND_DISK),
+        )
 
     def _dim_date(self) -> DataFrame:
         # UNION (deduplicating) of the two timestamp domains — SURVEY §2.7 U1.
@@ -269,7 +267,10 @@ class StarSchema:
         # plus the bucketed write, once per scale dir.
         from .silver import ensure_bucketed
 
-        base = self._persisted("fact_sales_base", self._fact_sales())
+        base = persisted(
+            self.spark, ("star", self.sf_dir, "fact_sales_base"),
+            lambda: self._fact_sales().persist(StorageLevel.MEMORY_AND_DISK),
+        )
         return ensure_bucketed(
             self.spark, self.sf_dir, "fact_sales", lambda: base, "invoiceid"
         )

@@ -73,6 +73,41 @@ def test_frame_idx_multiples(payloads):
     assert bad == 0
 
 
+def test_map_rows_envelope_contract(spark):
+    """The one Arrow envelope every multimodal operator runs through:
+    empty input, rows that yield nothing (a whole batch comes out
+    empty), 1→N expansion with the selected columns passed in order,
+    and an exception in the per-row function raised at the action."""
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("k", T.LongType())]
+    )
+    # ids 0-3 | 4-7 | 8-11, one Arrow batch per partition
+    src = spark.range(0, 12, numPartitions=3).withColumn("x", F.col("id") * 10)
+
+    def expand(i, x):
+        if i >= 4:  # partition 0 yields no row at all
+            for k in range(i % 3):  # 0, 1 or 2 rows per input row
+                yield i, x + k
+
+    empty = spark.createDataFrame([], "id long, x long")
+    assert MM._map_rows(empty, ["id", "x"], schema, expand).collect() == []
+
+    out = MM._map_rows(src, ["id", "x"], schema, expand)
+    assert out.rdd.glom().map(len).collect() == [0, 4, 5]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (i, i * 10 + k) for i in range(4, 12) for k in range(i % 3)
+    ]
+
+    def boom(i):
+        if i == 7:
+            raise ValueError("row 7 is corrupt")
+        yield i, 0
+
+    lazy = MM._map_rows(src, ["id"], schema, boom)  # nothing runs yet
+    with pytest.raises(Exception, match="row 7 is corrupt"):
+        lazy.collect()
+
+
 # ---------------------------------------------------------------------------
 # stdlib wire-format codecs: PNG (grayscale-8) and WAV (16-bit PCM mono)
 # ---------------------------------------------------------------------------
