@@ -25,7 +25,7 @@ claims deserve at least one measured 10x step. This harness
      sf1. tests/test_artifacts.py gates the recorded ratios.
 
 Usage: python bench_sf1.py   (~10-15 min; rerun-safe — the derived
-dataset is content-addressed by a completion marker).
+dataset is built once and reused through its ``_COMPLETE`` marker).
 """
 
 from __future__ import annotations
@@ -40,6 +40,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from e_commerce_data_warehouse_power_bi_analytics_dashboard_spark.plans import get_catalog
 from e_commerce_data_warehouse_power_bi_analytics_dashboard_spark.session import get_spark
+from e_commerce_data_warehouse_power_bi_analytics_dashboard_spark.sources.artifacts import ensure
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 SF01 = "/root/testdata/sf0.1"
@@ -90,20 +91,20 @@ ENTRIES = [
 ]
 
 
-def _marker() -> str:
-    return os.path.join(SF1, "_SCALE_COMPLETE")
-
-
 def ensure_sf1(spark) -> str:
+    """The derived ~sf1 dataset under ``SF1``, built once (the
+    ``sources/artifacts.py`` lifecycle: marked complete last, a torn
+    build is wiped and rebuilt)."""
+    return ensure(spark, SF1, lambda root: _build_sf1(spark, root))
+
+
+def _build_sf1(spark, root: str) -> None:
     from pyspark.sql import functions as F
 
-    if os.path.exists(_marker()):
-        return SF1
-    os.makedirs(SF1, exist_ok=True)
     rd = lambda t: spark.read.parquet(f"{SF01}/{t}.parquet")  # noqa: E731
 
     def write(name, df):
-        df.write.mode("overwrite").parquet(f"{SF1}/{name}.parquet")
+        df.write.mode("overwrite").parquet(f"{root}/{name}.parquet")
 
     # conformed dims: shared, single copy
     write("region", rd("region"))
@@ -159,9 +160,6 @@ def ensure_sf1(spark) -> str:
     for p in parts[1:]:
         docs = docs.unionByName(p)
     write("documents", docs)
-    with open(_marker(), "w") as fh:
-        fh.write(f"K={K}\n")
-    return SF1
 
 
 def _materialize(df) -> None:

@@ -827,6 +827,18 @@ def _sample(doc_id: int, i: int) -> int:
     return ((doc_id * 131 + i * 37) % 20001) - 10000
 
 
+def _riff_wav(fmt: bytes, pcm: bytes, pre: bytes = b"") -> bytes:
+    """One RIFF/WAVE file: ``pre`` (extra chunks placed before fmt),
+    the ``fmt `` chunk and the ``data`` chunk, under the RIFF size
+    header."""
+    body = (
+        b"WAVE" + pre
+        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(pcm)) + pcm
+    )
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
 def synthesize_wav_payloads(docs: DataFrame) -> DataFrame:
     """audio-docs → (doc_id, wav binary): real RIFF/WAVE files (fmt +
     data chunks, 16-bit little-endian PCM mono @ 8 kHz) built
@@ -837,12 +849,7 @@ def synthesize_wav_payloads(docs: DataFrame) -> DataFrame:
         n = 50 + (d % 20) * 25
         pcm = struct.pack(f"<{n}h", *[_sample(d, i) for i in range(n)])
         fmt = struct.pack("<HHIIHH", 1, 1, _WAV_RATE, _WAV_RATE * 2, 2, 16)
-        body = (
-            b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(pcm)) + pcm
-        )
-        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
+        yield d, _riff_wav(fmt, pcm)
 
     return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
@@ -872,13 +879,7 @@ def synthesize_wav_pcm24_payloads(docs: DataFrame) -> DataFrame:
             "<HHIIHH", 1, 1, _WAV_RATE, _WAV_RATE * 3, 3, 24
         )
         junk = b"LIST" + struct.pack("<I", 5) + b"INFOx" + b"\x00"
-        body = (
-            b"WAVE"
-            + junk
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(pcm)) + pcm
-        )
-        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
+        yield d, _riff_wav(fmt, pcm, pre=junk)
 
     return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
@@ -896,12 +897,7 @@ def synthesize_wav_mulaw_payloads(docs: DataFrame) -> DataFrame:
         n = 30 + (d % 10) * 15
         pcm = bytes((d * 17 + i * 29) % 256 for i in range(n))
         fmt = struct.pack("<HHIIHH", 7, 1, _WAV_RATE, _WAV_RATE, 1, 8)
-        body = (
-            b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(pcm)) + pcm
-        )
-        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
+        yield d, _riff_wav(fmt, pcm)
 
     return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
@@ -919,12 +915,7 @@ def synthesize_wav_alaw_payloads(docs: DataFrame) -> DataFrame:
         n = 30 + (d % 10) * 15
         pcm = bytes((d * 23 + i * 31) % 256 for i in range(n))
         fmt = struct.pack("<HHIIHH", 6, 1, _WAV_RATE, _WAV_RATE, 1, 8)
-        body = (
-            b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(pcm)) + pcm
-        )
-        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
+        yield d, _riff_wav(fmt, pcm)
 
     return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
@@ -946,12 +937,7 @@ def synthesize_wav_float32_payloads(docs: DataFrame) -> DataFrame:
         ]
         pcm = struct.pack(f"<{n}f", *vals)
         fmt = struct.pack("<HHIIHH", 3, 1, _WAV_RATE, _WAV_RATE * 4, 4, 32)
-        body = (
-            b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(pcm)) + pcm
-        )
-        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
+        yield d, _riff_wav(fmt, pcm)
 
     return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
@@ -1151,12 +1137,7 @@ def synthesize_wav_float64_payloads(docs: DataFrame) -> DataFrame:
         fmt = struct.pack(
             "<HHIIHH", 3, 1, _WAV_RATE, _WAV_RATE * 8, 8, 64
         )
-        body = (
-            b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(pcm)) + pcm
-        )
-        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
+        yield d, _riff_wav(fmt, pcm)
 
     return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
@@ -1258,12 +1239,7 @@ def synthesize_wav_msadpcm_payloads(docs: DataFrame) -> DataFrame:
             2, n + 2,
         )
         pcm = header + data
-        body = (
-            b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(pcm)) + pcm
-        )
-        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
+        yield d, _riff_wav(fmt, pcm)
 
     return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
@@ -1293,12 +1269,7 @@ def synthesize_wav_adpcm_payloads(docs: DataFrame) -> DataFrame:
             2, n + 1,  # cbSize=2, wSamplesPerBlock
         )
         pcm = header + data
-        body = (
-            b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(pcm)) + pcm
-        )
-        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
+        yield d, _riff_wav(fmt, pcm)
 
     return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
@@ -1431,12 +1402,7 @@ def synthesize_wav_stereo_payloads(docs: DataFrame) -> DataFrame:
         pcm = struct.pack(f"<{len(inter)}h", *inter)
         # block align = channels * bytes/sample = 4
         fmt = struct.pack("<HHIIHH", 1, 2, _WAV_RATE, _WAV_RATE * 4, 4, 16)
-        body = (
-            b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(pcm)) + pcm
-        )
-        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
+        yield d, _riff_wav(fmt, pcm)
 
     return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
@@ -1495,12 +1461,7 @@ def synthesize_wav_multichannel_payloads(docs: DataFrame) -> DataFrame:
             "<HHIIHH", 1, nch, _WAV_RATE, _WAV_RATE * 2 * nch,
             2 * nch, 16,
         )
-        body = (
-            b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(pcm)) + pcm
-        )
-        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
+        yield d, _riff_wav(fmt, pcm)
 
     return _map_rows(docs, ["doc_id"], _payload_schema("wav"), wav)
 
@@ -1706,6 +1667,11 @@ def _dct_matrix():
     return a  # F = A @ p @ A.T ; p = A.T @ F @ A
 
 
+def _jpeg_seg(marker: int, body: bytes) -> bytes:
+    """One JPEG marker segment: 0xFF, marker, 2-byte length, body."""
+    return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(body)) + body
+
+
 class _BitWriter:
     """MSB-first bit accumulator with JPEG byte stuffing (an 0xFF data
     byte is followed by 0x00) and 1-padding at flush (spec D.1.6)."""
@@ -1868,30 +1834,27 @@ def encode_jpeg(
                 pred = [0] * ncomp
     scan = wtr.flush()
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(body)) + body
-
-    dqt = seg(0xDB, bytes([0x00]) + bytes(qzz))
+    dqt = _jpeg_seg(0xDB, bytes([0x00]) + bytes(qzz))
     sof_body = struct.pack(">BHHB", 8, h, w, ncomp)
     for ci in range(ncomp):
         hi, vi = sampling[ci]
         sof_body += bytes([ci + 1, (hi << 4) | vi, 0x00])
-    sof = seg(0xC0, sof_body)
-    dht = seg(
+    sof = _jpeg_seg(0xC0, sof_body)
+    dht = _jpeg_seg(
         0xC4, bytes([0x00]) + bytes(_DC_COUNTS) + bytes(_DC_VALUES)
-    ) + seg(
+    ) + _jpeg_seg(
         0xC4, bytes([0x10]) + bytes(_AC_COUNTS) + bytes(_AC_VALUES)
     )
     dri = (
-        seg(0xDD, struct.pack(">H", restart_interval))
+        _jpeg_seg(0xDD, struct.pack(">H", restart_interval))
         if restart_interval else b""
     )
     sos_body = bytes([ncomp])
     for ci in range(ncomp):
         sos_body += bytes([ci + 1, 0x00])
     sos_body += bytes([0, 63, 0])
-    sos = seg(0xDA, sos_body)
-    app0 = seg(0xE0, _JFIF_APP0)
+    sos = _jpeg_seg(0xDA, sos_body)
+    app0 = _jpeg_seg(0xE0, _JFIF_APP0)
     return (
         b"\xff\xd8" + app0 + dqt + sof + dht + dri + sos + scan
         + b"\xff\xd9"
@@ -2153,28 +2116,25 @@ def encode_jpeg_progressive(
     for a in range(dc_al - 1, -1, -1):
         scans.append((list(range(ncomp)), 0, 0, a + 1, a, dc_refine(a)))
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(body)) + body
-
-    dqt = seg(0xDB, bytes([0x00]) + bytes(qzz))
+    dqt = _jpeg_seg(0xDB, bytes([0x00]) + bytes(qzz))
     sof_body = struct.pack(">BHHB", 8, h, w, ncomp)
     for ci in range(ncomp):
         sof_body += bytes([ci + 1, 0x11, 0x00])
-    sof = seg(0xC2, sof_body)
-    dht = seg(
+    sof = _jpeg_seg(0xC2, sof_body)
+    dht = _jpeg_seg(
         0xC4, bytes([0x00]) + bytes(_DC_COUNTS) + bytes(_DC_VALUES)
-    ) + seg(
+    ) + _jpeg_seg(
         0xC4,
         bytes([0x10]) + bytes(_PROG_AC_COUNTS) + bytes(_PROG_AC_VALUES),
     )
-    dri = seg(0xDD, struct.pack(">H", ri)) if ri else b""
-    out = b"\xff\xd8" + seg(0xE0, _JFIF_APP0) + dqt + sof + dht + dri
+    dri = _jpeg_seg(0xDD, struct.pack(">H", ri)) if ri else b""
+    out = b"\xff\xd8" + _jpeg_seg(0xE0, _JFIF_APP0) + dqt + sof + dht + dri
     for comp_ids, ss, se, ah, al, data in scans:
         sos_body = bytes([len(comp_ids)])
         for ci in comp_ids:
             sos_body += bytes([ci + 1, 0x00])  # DC table 0, AC table 0
         sos_body += bytes([ss, se, (ah << 4) | al])
-        out += seg(0xDA, sos_body) + data
+        out += _jpeg_seg(0xDA, sos_body) + data
     return out + b"\xff\xd9"
 
 
@@ -3121,12 +3081,7 @@ def synthesize_wav_tone_payloads(docs: DataFrame) -> DataFrame:
             ],
         )
         fmt = struct.pack("<HHIIHH", 1, 1, _WAV_RATE, _WAV_RATE * 2, 2, 16)
-        body = (
-            b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(pcm)) + pcm
-        )
-        yield d, b"RIFF" + struct.pack("<I", len(body)) + body
+        yield d, _riff_wav(fmt, pcm)
 
     return _map_rows(_ids_at_width(docs), ["doc_id"], _payload_schema("wav"), wav)
 

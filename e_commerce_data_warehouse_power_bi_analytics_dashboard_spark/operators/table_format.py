@@ -44,6 +44,23 @@ snapshot resolves the commit list ONCE and reads only files those
 manifests name, so an in-flight writer (data files present, manifest
 not yet linked) is invisible — snapshot isolation by construction.
 
+One fold answers "what is live at version v": :func:`snapshot` walks
+the log prefix once (``_Fold``) into a frozen :class:`Snapshot` — the
+active data files and delete vectors, CHECK constraints, column
+mapping, latest writer schema, partition spec, each epoch's first
+version and the retention floor. ``active_adds``, ``column_mapping``,
+``active_constraints`` and the rest are views of it; every writer folds
+once and takes its next version, spec, mapping and constraints from the
+record, and ``change_feed`` / ``vacuum`` walk the same fold alongside
+the log. Published manifests are immutable and versions append-only,
+so each process keeps ONE memo of parsed manifests per root
+(``_LOGS``): an operation globs the commit directory once and parses
+only manifests it has not seen. The memo resets when the log got
+shorter or manifest 0's mtime changed — the table was deleted and
+recreated (or rewritten in place) at the same root. ``_RETENTION.json``
+is mutable (vacuum rewrites it), so the floor is read fresh on every
+fold, never memoized.
+
 MERGE is COPY-ON-WRITE at file granularity, the property that makes it
 viable at 100 TB: the feed's distinct keys are joined (broadcast —
 change batches are small vs the table) against a (key, file) projection
@@ -104,6 +121,7 @@ import re
 import threading
 import time
 import uuid
+from dataclasses import dataclass
 from typing import Mapping, Sequence
 
 #: monotonically-unique suffix for commit temp files (per-attempt)
@@ -195,40 +213,30 @@ def _publish(root: str, version: int, manifest: dict) -> None:
         os.unlink(tmp)
 
 
-#: per-root incremental epoch index: {root: [scanned_to, {epoch: version}]}.
-#: Manifests are immutable and versions append-only, so folding each
-#: manifest exactly once is sound; without this a long-lived streaming
-#: merge pays O(V^2) driver-side JSON reads over its lifetime (every
-#: call re-reading every manifest — the pattern TableAppendStreamWriter
-#: ._epoch_seen already fixed for the append sink).
-_EPOCH_INDEX: dict[str, list] = {}
+#: per-process memo of the parsed commit log:
+#: root -> (manifest 0's mtime, {version: parsed manifest}); the reset
+#: rule and why one memo suffices are in the module docstring
+_LOGS: dict[str, tuple[float | None, dict[int, dict]]] = {}
 
 
-def _epoch_committed(root: str, epoch) -> int | None:
-    """Version that already committed ``epoch`` at ``root`` (None if
-    unseen). Scans only manifests newer than the per-root high-water
-    mark, so replay detection over a stream's lifetime is O(V) total.
-    A commit log SHORTER than the high-water mark — or whose first
-    manifest's mtime changed — means the table was deleted and
-    recreated at the same root (the clear-and-rebuild recovery
-    pattern): the stale index would silently skip commits, so it
-    resets and rescans. Duplicate epochs across manifests keep
-    FIRST-match resolution (the pre-index loop's semantics)."""
+def _log(root: str) -> tuple[tuple[int, dict], ...]:
+    """Every published ``(version, manifest)``, ascending: one glob,
+    and a parse only for manifests this process has not seen yet."""
     versions = list_versions(root)
     stamp = (
         os.path.getmtime(_commit_path(root, versions[0])) if versions else None
     )
-    idx = _EPOCH_INDEX.setdefault(root, [-1, {}, stamp])
-    if idx[0] > (versions[-1] if versions else -1) or idx[2] != stamp:
-        idx[0], idx[1], idx[2] = -1, {}, stamp
+    memo = _LOGS.get(root)
+    if (
+        memo is None or memo[0] != stamp
+        or max(memo[1], default=-1) > (versions[-1] if versions else -1)
+    ):
+        memo = _LOGS[root] = (stamp, {})
+    parsed = memo[1]
     for v in versions:
-        if v <= idx[0]:
-            continue
-        e = read_manifest(root, v).get("epoch")
-        if e is not None:
-            idx[1].setdefault(e, v)
-        idx[0] = max(idx[0], v)
-    return idx[1].get(epoch)
+        if v not in parsed:
+            parsed[v] = read_manifest(root, v)
+    return tuple((v, parsed[v]) for v in versions)
 
 
 def _norm_add(a) -> dict:
@@ -237,34 +245,120 @@ def _norm_add(a) -> dict:
     return {"path": a} if isinstance(a, str) else a
 
 
-def active_adds(root: str, version: int | None = None) -> list[dict]:
-    """Active file RECORDS (path + partition + stats) at ``version``
-    (default: latest), by folding adds/removes over the commit log
-    prefix. Fails fast (VersionExpired) past vacuum's retention floor."""
-    versions = list_versions(root)
-    if not versions:
-        raise FileNotFoundError(f"no commits at {root}")
-    if version is None:
-        version = versions[-1]
-    if version not in versions:
-        raise FileNotFoundError(f"version {version} not in {versions}")
-    floor = earliest_readable(root)
-    if version < floor:
-        raise VersionExpired(
-            f"version {version} predates vacuum retention "
-            f"(earliest readable: {floor}) at {root}"
-        )
-    active: dict[str, dict] = {}
-    for v in versions:
-        if v > version:
-            break
-        m = read_manifest(root, v)
+def _by_path(records: Mapping[str, dict]) -> tuple[dict, ...]:
+    return tuple(records[p] for p in sorted(records))
+
+
+class _Fold:
+    """The one left fold over the commit log, applied one manifest at a
+    time: data files (``adds`` - ``removes``), position-delete files
+    (``delete_adds`` - ``delete_removes``), CHECK constraints
+    (``constraints_add`` / ``constraints_drop``), the last recorded
+    column mapping and writer schema, and each epoch's FIRST version."""
+
+    def __init__(self) -> None:
+        self.adds: dict[str, dict] = {}
+        self.dels: dict[str, dict] = {}
+        self.constraints: dict[str, str] = {}
+        self.epochs: dict = {}
+        self.mapping: dict | None = None
+        self.schema: str | None = None
+
+    def apply(self, version: int, m: dict) -> None:
         for p in m["removes"]:
-            active.pop(p, None)
+            self.adds.pop(p, None)
         for a in m["adds"]:
             rec = _norm_add(a)
-            active[rec["path"]] = rec
-    return [active[p] for p in sorted(active)]
+            self.adds[rec["path"]] = rec
+        for p in m.get("delete_removes", []):
+            self.dels.pop(p, None)
+        for a in m.get("delete_adds", []):
+            rec = _norm_add(a)
+            self.dels[rec["path"]] = rec
+        for name in m.get("constraints_drop", []):
+            self.constraints.pop(name, None)
+        self.constraints.update(m.get("constraints_add", {}))
+        self.mapping = m.get("column_mapping", self.mapping)
+        self.schema = m.get("schema") or self.schema
+        if m.get("epoch") is not None:
+            self.epochs.setdefault(m["epoch"], version)
+
+
+@dataclass(frozen=True, eq=False)
+class Snapshot:
+    """What is live at ``version`` (-1: no commits yet), from one fold
+    of the log prefix. ``log`` holds every published (version,
+    manifest) the fold saw, so a caller that needs other versions walks
+    it without globbing again. Manifests and records are shared with
+    the process memo: read them, never mutate them."""
+
+    root: str
+    version: int
+    log: tuple[tuple[int, dict], ...]
+    adds: tuple[dict, ...]          # active data-file records, by path
+    delete_adds: tuple[dict, ...]   # live position-delete records, by path
+    constraints: dict[str, str]
+    mapping: dict | None            # None = unmapped table
+    schema_json: str | None         # latest writer schema
+    spec: list[str] | None          # partition spec (manifest 0)
+    epochs: dict                    # epoch -> first version recording it
+    floor: int                      # vacuum retention floor, read fresh
+
+    @property
+    def versions(self) -> list[int]:
+        return [v for v, _ in self.log]
+
+    @property
+    def schema(self) -> StructType | None:
+        if not self.schema_json:
+            return None
+        return StructType.fromJson(json.loads(self.schema_json))
+
+    def readable(self, version: int | None = None) -> "Snapshot":
+        """This snapshot, if the data files of ``version`` (default:
+        its own) may be read: the version exists and is not below
+        vacuum's retention floor."""
+        version = self.version if version is None else version
+        versions = self.versions
+        if not versions:
+            raise FileNotFoundError(f"no commits at {self.root}")
+        if version not in versions:
+            raise FileNotFoundError(f"version {version} not in {versions}")
+        if version < self.floor:
+            raise VersionExpired(
+                f"version {version} predates vacuum retention "
+                f"(earliest readable: {self.floor}) at {self.root}"
+            )
+        return self
+
+
+def snapshot(root: str, version: int | None = None) -> Snapshot:
+    """Fold the commit log at ``root`` up to ``version`` (default:
+    latest) into one :class:`Snapshot`. Never raises for a missing or
+    expired version; readers call :meth:`Snapshot.readable`."""
+    log = _log(root)
+    if version is None:
+        version = log[-1][0] if log else -1
+    fold = _Fold()
+    for v, m in log:
+        if v > version:
+            break
+        fold.apply(v, m)
+    return Snapshot(
+        root=root, version=version, log=log,
+        adds=_by_path(fold.adds), delete_adds=_by_path(fold.dels),
+        constraints=fold.constraints, mapping=fold.mapping,
+        schema_json=fold.schema,
+        spec=log[0][1].get("partition_by") if log else None,
+        epochs=fold.epochs, floor=earliest_readable(root),
+    )
+
+
+def active_adds(root: str, version: int | None = None) -> list[dict]:
+    """Active file RECORDS (path + partition + stats) at ``version``
+    (default: latest). Fails fast (VersionExpired) past vacuum's
+    retention floor."""
+    return list(snapshot(root, version).readable().adds)
 
 
 def active_files(root: str, version: int | None = None) -> list[str]:
@@ -274,25 +368,12 @@ def active_files(root: str, version: int | None = None) -> list[str]:
 
 def active_delete_adds(root: str, version: int | None = None) -> list[dict]:
     """Live POSITION-DELETE file records at ``version`` (default latest):
-    fold of ``delete_adds`` minus ``delete_removes`` over the commit-log
-    prefix — the same fold as the data side, over the vector files a
-    merge-on-read ``delete_where`` wrote and ``compact`` retires."""
-    versions = list_versions(root)
-    if not versions:
+    the vector files a merge-on-read ``delete_where`` wrote and
+    ``compact`` has not yet retired."""
+    snap = snapshot(root, version)
+    if not snap.log:
         raise FileNotFoundError(f"no commits at {root}")
-    if version is None:
-        version = versions[-1]
-    live: dict[str, dict] = {}
-    for v in versions:
-        if v > version:
-            break
-        m = read_manifest(root, v)
-        for p in m.get("delete_removes", []):
-            live.pop(p, None)
-        for a in m.get("delete_adds", []):
-            rec = _norm_add(a)
-            live[rec["path"]] = rec
-    return [live[p] for p in sorted(live)]
+    return list(snap.delete_adds)
 
 
 def _overlaps(add: dict, col: str, lo, hi) -> bool:
@@ -328,14 +409,17 @@ def snapshot_files(
     manifest-side pruning real formats do before the scan ever starts.
     The caller must still apply the row-level filter: skipping is a
     superset guarantee, never exact."""
-    adds = active_adds(root, version)
-    total = len(adds)
-    if where:
-        adds = [
-            a for a in adds
-            if all(_overlaps(a, c, b[0], b[1]) for c, b in where.items())
-        ]
-    return [a["path"] for a in adds], total
+    adds = snapshot(root, version).readable().adds
+    return _skip(adds, where), len(adds)
+
+
+def _skip(adds: Sequence[dict], where: Mapping[str, tuple] | None) -> list[str]:
+    """Paths of ``adds`` whose stats overlap every ``where`` bound."""
+    return [
+        a["path"] for a in adds
+        if not where
+        or all(_overlaps(a, c, b[0], b[1]) for c, b in where.items())
+    ]
 
 
 def _with_positions(df: DataFrame, root: str) -> DataFrame:
@@ -387,15 +471,6 @@ def _anti_vectors(
         & (F.col("_tf_pos") == F.col("_tf_dpos")),
         "left_anti",
     )
-
-
-def _snapshot_schema(root: str, version: int) -> StructType | None:
-    """Latest writer schema at or before ``version`` (for empty reads)."""
-    for v in reversed([v for v in list_versions(root) if v <= version]):
-        s = read_manifest(root, v).get("schema")
-        if s:
-            return StructType.fromJson(json.loads(s))
-    return None
 
 
 def _file_stats(abs_path: str) -> dict:
@@ -504,40 +579,11 @@ def _widening_ok(old: str, new: str) -> bool:
     return False
 
 
-#: per-root incremental mapping index: {root: [scanned_to,
-#: [(version, mapping), ...] ascending]} — manifests are immutable and
-#: append-only, so each folds exactly once; without this every
-#: read/write on EVERY table (mapped or not) would re-read the whole
-#: commit log just to discover there is no mapping. Same
-#: shrunk-log reset as _EPOCH_INDEX (table recreated at the root).
-_MAPPING_INDEX: dict[str, list] = {}
-
-
 def column_mapping(root: str, version: int | None = None) -> dict | None:
     """The table's column mapping as of ``version`` (default latest):
     the LAST ``column_mapping`` recorded at or before it (each mapping
     commit stores the full updated mapping). None = unmapped table."""
-    versions = list_versions(root)
-    if not versions:
-        return None
-    stamp = os.path.getmtime(_commit_path(root, versions[0]))
-    idx = _MAPPING_INDEX.setdefault(root, [-1, [], stamp])
-    if idx[0] > versions[-1] or idx[2] != stamp:
-        idx[0], idx[1], idx[2] = -1, [], stamp
-    for vv in versions:
-        if vv <= idx[0]:
-            continue
-        m = read_manifest(root, vv)
-        if "column_mapping" in m:
-            idx[1].append((vv, m["column_mapping"]))
-        idx[0] = max(idx[0], vv)
-    v = versions[-1] if version is None else version
-    mp = None
-    for vv, m in idx[1]:
-        if vv > v:
-            break
-        mp = m
-    return mp
+    return snapshot(root, version).mapping
 
 
 def _new_mapping(schema: StructType) -> dict:
@@ -585,31 +631,34 @@ def _to_logical(df: DataFrame, mapping: dict, extra: Sequence[str] = ()) -> Data
     )
 
 
-def _publish_mapping(root: str, mapping: dict, op: str, detail: dict) -> int:
-    versions = list_versions(root)
-    new_v = versions[-1] + 1
-    _publish(root, new_v, {
-        "version": new_v, "op": op, "adds": [], "removes": [],
+def _publish_mapping(snap: Snapshot, mapping: dict, detail: dict) -> int:
+    new_v = snap.version + 1
+    _publish(snap.root, new_v, {
+        "version": new_v, "op": "alter_mapping", "adds": [], "removes": [],
         "n_changes": 0, "column_mapping": mapping, **detail,
     })
     return new_v
 
 
-def _require_mapping(root: str) -> dict:
-    mp = column_mapping(root)
+def _require_mapping(root: str) -> tuple[Snapshot, dict]:
+    """The latest snapshot and an editable copy of its mapping."""
+    snap = snapshot(root)
+    mp = snap.mapping
     if mp is None:
         raise ValueError(
             f"table at {root} has no column mapping — create it with "
             f"column_mapping=True (rename/drop/widen need the physical "
             f"indirection; an unmapped table's names are its file names)"
         )
-    return {"fields": [dict(f) for f in mp["fields"]], "max_id": mp["max_id"]}
+    return snap, {
+        "fields": [dict(f) for f in mp["fields"]], "max_id": mp["max_id"],
+    }
 
 
 def rename_column(root: str, old: str, new: str) -> int:
     """Metadata-only RENAME: same field id, same physical column, zero
     data movement — every existing file stays valid."""
-    mp = _require_mapping(root)
+    snap, mp = _require_mapping(root)
     names = {f["name"] for f in mp["fields"]}
     if old not in names:
         raise ValueError(f"no column {old!r} to rename (have {sorted(names)})")
@@ -618,22 +667,20 @@ def rename_column(root: str, old: str, new: str) -> int:
     for f in mp["fields"]:
         if f["name"] == old:
             f["name"] = new
-    return _publish_mapping(
-        root, mp, "alter_mapping", {"rename": [old, new]}
-    )
+    return _publish_mapping(snap, mp, {"rename": [old, new]})
 
 
 def drop_column(root: str, name: str) -> int:
     """Metadata-only DROP: the field leaves the mapping; its physical
     bytes stay in existing files, never selected again. Time travel to
     pre-drop versions still reads them (mapping is per-version)."""
-    mp = _require_mapping(root)
+    snap, mp = _require_mapping(root)
     if name not in {f["name"] for f in mp["fields"]}:
         raise ValueError(f"no column {name!r} to drop")
     if len(mp["fields"]) == 1:
         raise ValueError("cannot drop the last column")
     mp["fields"] = [f for f in mp["fields"] if f["name"] != name]
-    return _publish_mapping(root, mp, "alter_mapping", {"drop": name})
+    return _publish_mapping(snap, mp, {"drop": name})
 
 
 def add_column(root: str, name: str, dtype: str) -> int:
@@ -641,7 +688,7 @@ def add_column(root: str, name: str, dtype: str) -> int:
     files lack the physical column and read NULL; re-adding a dropped
     logical name can never resurrect old data (the dead id's physical
     column is a different name)."""
-    mp = _require_mapping(root)
+    snap, mp = _require_mapping(root)
     if name in {f["name"] for f in mp["fields"]}:
         raise ValueError(f"column {name!r} already exists")
     dtype = dtype.strip().lower().replace(" ", "")
@@ -670,7 +717,7 @@ def add_column(root: str, name: str, dtype: str) -> int:
         {"id": fid, "name": name, "physical": f"col-{fid}", "type": dtype}
     )
     mp["max_id"] = fid
-    return _publish_mapping(root, mp, "alter_mapping", {"add": [name, dtype]})
+    return _publish_mapping(snap, mp, {"add": [name, dtype]})
 
 
 def widen_column(root: str, name: str, new_type: str) -> int:
@@ -678,7 +725,7 @@ def widen_column(root: str, name: str, new_type: str) -> int:
     precision growth at equal scale): reads upcast old narrow files
     schema-on-read; subsequent writes land the wide type. Anything
     outside the allowlist would be lossy or change semantics — raises."""
-    mp = _require_mapping(root)
+    snap, mp = _require_mapping(root)
     new_type = new_type.strip().lower().replace(" ", "")
     for f in mp["fields"]:
         if f["name"] == name:
@@ -689,9 +736,7 @@ def widen_column(root: str, name: str, new_type: str) -> int:
                 )
             old = f["type"]
             f["type"] = new_type
-            return _publish_mapping(
-                root, mp, "alter_mapping", {"widen": [name, old, new_type]}
-            )
+            return _publish_mapping(snap, mp, {"widen": [name, old, new_type]})
     raise ValueError(f"no column {name!r} to widen")
 
 
@@ -703,28 +748,10 @@ def _normalize_spec(partition_by) -> list[str] | None:
     return list(partition_by)
 
 
-def _table_spec(root: str) -> list[str] | None:
-    return read_manifest(root, 0).get("partition_by")
-
-
 def active_constraints(root: str, version: int | None = None) -> dict[str, str]:
-    """Live CHECK constraints (name -> SQL boolean expr) at ``version``:
-    fold of ``constraints_add`` / ``constraints_drop`` over the commit
-    log — the same prefix fold as files and delete vectors."""
-    versions = list_versions(root)
-    if not versions:
-        return {}
-    if version is None:
-        version = versions[-1]
-    out: dict[str, str] = {}
-    for v in versions:
-        if v > version:
-            break
-        m = read_manifest(root, v)
-        for name in m.get("constraints_drop", []):
-            out.pop(name, None)
-        out.update(m.get("constraints_add", {}))
-    return out
+    """Live CHECK constraints (name -> SQL boolean expr) at ``version``
+    (default latest)."""
+    return dict(snapshot(root, version).constraints)
 
 
 def _check_constraints(df: DataFrame, constraints: Mapping[str, str]) -> None:
@@ -779,9 +806,9 @@ def add_constraint(
     CURRENT snapshot once (the one-time scan Delta documents), then
     records the constraint in an alter commit; every subsequent write
     validates its own rows before publishing."""
-    versions = list_versions(root)
-    new_v = versions[-1] + 1
-    _check_constraints(read_version(spark, root, merge_schema=True), {name: expr})
+    snap = snapshot(root)
+    new_v = snap.version + 1
+    _check_constraints(_read(spark, snap, merge_schema=True), {name: expr})
     _publish(root, new_v, {
         "version": new_v, "op": "alter", "adds": [], "removes": [],
         "n_changes": 0, "constraints_add": {name: expr},
@@ -790,8 +817,7 @@ def add_constraint(
 
 
 def drop_constraint(spark: SparkSession, root: str, name: str) -> int:
-    versions = list_versions(root)
-    new_v = versions[-1] + 1
+    new_v = snapshot(root).version + 1
     _publish(root, new_v, {
         "version": new_v, "op": "alter", "adds": [], "removes": [],
         "n_changes": 0, "constraints_drop": [name],
@@ -975,23 +1001,37 @@ def read_version(
     physical schema of the mapping AT THIS VERSION (missing physical
     columns null-fill, narrow ones upcast) and projects to that
     version's logical names — ``where`` keys stay logical."""
-    versions = list_versions(root)
-    v = versions[-1] if version is None else version
-    mapping = column_mapping(root, v)
+    return _read(
+        spark, snapshot(root, version), merge_schema, where, with_positions
+    )
+
+
+def _read(
+    spark: SparkSession,
+    snap: Snapshot,
+    merge_schema: bool = False,
+    where: Mapping[str, tuple] | None = None,
+    with_positions: bool = False,
+) -> DataFrame:
+    """:func:`read_version` of an already-folded snapshot (writers read
+    the record they resolved instead of folding the log again)."""
+    root, mapping = snap.root, snap.mapping
     if mapping and where:
         phys = {f["name"]: f["physical"] for f in mapping["fields"]}
         where = {phys.get(c, c): b for c, b in where.items()}
-    files, _ = snapshot_files(root, version, where)
-    dels = active_delete_adds(root, version)
+    files = _skip(snap.readable().adds, where)
+    dels = snap.delete_adds
     if not files:
         if mapping:
             out = spark.createDataFrame([], ", ".join(
                 f"`{f['name']}` {f['type']}" for f in mapping["fields"]
             ))
         else:
-            schema = _snapshot_schema(root, v)
+            schema = snap.schema
             if schema is None:
-                raise FileNotFoundError(f"no schema recorded at {root} v{v}")
+                raise FileNotFoundError(
+                    f"no schema recorded at {root} v{snap.version}"
+                )
             out = spark.createDataFrame([], schema)
         if with_positions:
             out = out.withColumn(
@@ -1030,12 +1070,12 @@ def append(
     column-mapped table the frame must match the CURRENT logical
     schema exactly (evolve with add_column/widen_column first — the
     mapping, not the writer, owns the schema)."""
-    versions = list_versions(root)
-    new_v = versions[-1] + 1
-    spec = _table_spec(root)
+    snap = snapshot(root)
+    new_v = snap.version + 1
+    spec = snap.spec
     if spec and not all(c in df.columns for c in spec):
         spec = None
-    mapping = column_mapping(root)
+    mapping = snap.mapping
     if mapping:
         logical = {f["name"] for f in mapping["fields"]}
         if set(df.columns) != logical:
@@ -1044,7 +1084,7 @@ def append(
                 f"current logical schema {sorted(logical)} exactly "
                 f"(got {sorted(df.columns)}); evolve the mapping first"
             )
-    with _validated(df, active_constraints(root)) as vdf:
+    with _validated(df, snap.constraints) as vdf:
         adds = _write_data(vdf, root, new_v, files, spec, mapping=mapping)
     _publish(root, new_v, {
         "version": new_v, "op": "append", "adds": adds, "removes": [],
@@ -1054,32 +1094,51 @@ def append(
     return new_v
 
 
-def _current_with_file(spark: SparkSession, root: str) -> DataFrame:
-    """Current snapshot + ``_tf_file`` root-relative provenance column
+def _current_with_file(spark: SparkSession, snap: Snapshot) -> DataFrame:
+    """``snap``'s rows + ``_tf_file`` root-relative provenance column
     (merged schema, so evolved columns are visible to validation).
-    Delete vectors are already applied by read_version, so a rewrite
+    Delete vectors are already applied by the read, so a rewrite
     that consumes this frame can never resurrect a deleted row."""
-    return read_version(
-        spark, root, merge_schema=True, with_positions=True
+    return _read(
+        spark, snap, merge_schema=True, with_positions=True
     ).drop("_tf_pos")
 
 
+def _touched(
+    cur: DataFrame, feed: DataFrame, key_cols: list[str]
+) -> tuple[list[str], DataFrame]:
+    """Copy-on-write touched-file probe: the files of ``cur`` (a
+    :func:`_current_with_file` frame) holding a key of ``feed`` — a
+    semi-join against the broadcast key set, collected as a
+    manifest-sized file list — and ``cur`` restricted to those files."""
+    keys = feed.select(*key_cols).distinct()
+    touched = [
+        r[0]
+        for r in cur.join(F.broadcast(keys), key_cols, "left_semi")
+        .select("_tf_file").distinct().collect()
+    ]
+    return touched, cur.filter(
+        F.col("_tf_file").isin(touched) if touched else F.lit(False)
+    )
+
 
 def _plan_vector_delete(
-    matched: DataFrame, root: str, new_v: int
+    matched: DataFrame, snap: Snapshot
 ) -> tuple[list[str], int, list[dict]]:
     """Shared MoR vector-write step for delete_where/update_where: from
     a positioned ``matched`` frame, split fully-matched data files
     (whole-file removes, no vector needed) from partially-matched ones
-    (a sorted position-delete parquet under deletes/v=<n>-<uid>), and
-    return (full_file_removes, n_matched_rows, delete_add_records)."""
+    (a sorted position-delete parquet under deletes/v=<n>-<uid>, n =
+    ``snap``'s next version), and return (full_file_removes,
+    n_matched_rows, delete_add_records)."""
     import pyarrow.parquet as pq
 
+    root = snap.root
     per_file = {
         r["_tf_file"]: r["n"]
         for r in matched.groupBy("_tf_file").agg(F.count("*").alias("n")).collect()
     }
-    rows_by_file = {a["path"]: a.get("rows") for a in active_adds(root)}
+    rows_by_file = {a["path"]: a.get("rows") for a in snap.adds}
     full = sorted(
         f for f, n in per_file.items()
         if rows_by_file.get(f) is not None and n == rows_by_file[f]
@@ -1088,7 +1147,7 @@ def _plan_vector_delete(
     delete_adds: list[dict] = []
     if len(full) < len(per_file):  # some file matched only partially
         uid = uuid.uuid4().hex[:8]
-        vdir = os.path.join(root, "deletes", f"v={new_v}-{uid}")
+        vdir = os.path.join(root, "deletes", f"v={snap.version + 1}-{uid}")
         partial = (
             matched.filter(~F.col("_tf_file").isin(full)) if full else matched
         )
@@ -1126,15 +1185,15 @@ def delete_where(spark: SparkSession, root: str, condition: str) -> int:
     rewrite (that is ``compact``'s job, amortized); the COW/MOR trade
     as real formats ship it (Iceberg v2 position deletes, Delta
     deletion vectors). Returns the new version."""
-    versions = list_versions(root)
-    new_v = versions[-1] + 1
+    snap = snapshot(root)
+    new_v = snap.version + 1
     matched = (
-        read_version(spark, root, merge_schema=True, with_positions=True)
+        _read(spark, snap, merge_schema=True, with_positions=True)
         .filter(F.expr(condition))
         .select("_tf_file", "_tf_pos")
     )
-    full, n_deleted, delete_adds = _plan_vector_delete(matched, root, new_v)
-    schema = _snapshot_schema(root, versions[-1])
+    full, n_deleted, delete_adds = _plan_vector_delete(matched, snap)
+    schema = snap.schema
     _publish(root, new_v, {
         "version": new_v, "op": "delete", "adds": [], "removes": full,
         "delete_adds": delete_adds, "n_changes": n_deleted,
@@ -1168,11 +1227,9 @@ def merge(
     concurrent writer claimed it first).
     """
     key_cols = [key] if isinstance(key, str) else list(key)
-    versions = list_versions(root)
-    new_v = versions[-1] + 1
-    spec = _table_spec(root)
-    current = sorted(active_files(root))
-    cur_df = _current_with_file(spark, root)
+    snap = snapshot(root)
+    new_v = snap.version + 1
+    cur_df = _current_with_file(spark, snap)
     extra = set(cur_df.columns) - {*key_cols, *payload, "_tf_file"}
     if extra:
         raise ValueError(
@@ -1180,27 +1237,23 @@ def merge(
             f"evolved columns {sorted(extra)} not in key+payload — a "
             f"rewrite would drop their data"
         )
-    mapping = column_mapping(root)
-    keys = feed.select(*key_cols).distinct()
-    touched = [
-        r[0]
-        for r in cur_df.join(F.broadcast(keys), key_cols, "left_semi")
-        .select("_tf_file").distinct().collect()
-    ]  # file list is manifest-sized metadata, never row data
+    touched, base_rows = _touched(cur_df, feed, key_cols)
     touched_set = set(touched)
-    base_rows = cur_df.filter(
-        F.col("_tf_file").isin(touched) if touched else F.lit(False)
-    ).select(*key_cols, *payload)
     merged = apply_change_feed(
-        base_rows, feed, key_cols, payload, order_col, tiebreak
+        base_rows.select(*key_cols, *payload), feed, key_cols, payload,
+        order_col, tiebreak,
     ).select(*key_cols, *payload)
-    with _validated(merged, active_constraints(root)) as vmerged:
-        adds = _write_data(vmerged, root, new_v, files, spec, mapping=mapping)
+    with _validated(merged, snap.constraints) as vmerged:
+        adds = _write_data(
+            vmerged, root, new_v, files, snap.spec, mapping=snap.mapping
+        )
     _publish(root, new_v, {
         "version": new_v, "op": "merge", "adds": adds,
         "removes": sorted(touched_set),
         "n_changes": feed.count(),
-        "untouched_carried": len([f for f in current if f not in touched_set]),
+        "untouched_carried": sum(
+            a["path"] not in touched_set for a in snap.adds
+        ),
         "schema": merged.schema.json(),
     })
     return new_v
@@ -1236,12 +1289,10 @@ def merge_compacted(
     cols = [key, op_col, *list(payload), order_col, tiebreak]
     from .dedup import latest_wins
 
-    versions = list_versions(root)
-    if epoch is not None and versions:
-        seen = _epoch_committed(root, epoch)
-        if seen is not None:
-            return seen
-    if not versions:
+    snap = snapshot(root)
+    if epoch in snap.epochs:
+        return snap.epochs[epoch]
+    if not snap.log:
         spec = _normalize_spec(partition_by)
         merged = latest_wins(batch.select(*cols), key, order_col, tiebreak)
         adds = _write_data(merged, root, 0, files, spec)
@@ -1251,24 +1302,15 @@ def merge_compacted(
             "partition_by": spec, "schema": merged.schema.json(),
         })
         return 0
-    new_v = versions[-1] + 1
-    spec = _table_spec(root)
-    cur = _current_with_file(spark, root)
-    keys = batch.select(F.col(key)).distinct()
-    touched = [
-        r[0]
-        for r in cur.join(F.broadcast(keys), key, "left_semi")
-        .select("_tf_file").distinct().collect()
-    ]
-    base_rows = cur.filter(
-        F.col("_tf_file").isin(touched) if touched else F.lit(False)
-    ).select(*cols)
+    new_v = snap.version + 1
+    touched, base_rows = _touched(_current_with_file(spark, snap), batch, [key])
     merged = latest_wins(
-        base_rows.unionByName(batch.select(*cols)), key, order_col, tiebreak
+        base_rows.select(*cols).unionByName(batch.select(*cols)),
+        key, order_col, tiebreak,
     )
-    with _validated(merged, active_constraints(root)) as vmerged:
-        adds = _write_data(vmerged, root, new_v, files, spec,
-                           mapping=column_mapping(root))
+    with _validated(merged, snap.constraints) as vmerged:
+        adds = _write_data(vmerged, root, new_v, files, snap.spec,
+                           mapping=snap.mapping)
     _publish(root, new_v, {
         "version": new_v, "op": "merge_compacted", "adds": adds,
         "removes": sorted(touched), "n_changes": batch.count(),
@@ -1295,10 +1337,9 @@ def update_where(
     SQL expression (evaluated on the matched pre-image rows; other
     columns carry). Unmatched rows are untouched by construction.
     Returns the new version."""
-    versions = list_versions(root)
-    new_v = versions[-1] + 1
-    spec = _table_spec(root)
-    cur = read_version(spark, root, merge_schema=True, with_positions=True)
+    snap = snapshot(root)
+    new_v = snap.version + 1
+    cur = _read(spark, snap, merge_schema=True, with_positions=True)
     matched = cur.filter(F.expr(condition))
     data_cols = [c for c in cur.columns if c not in ("_tf_file", "_tf_pos")]
     updated = matched.select(
@@ -1310,13 +1351,13 @@ def update_where(
     unknown = set(assignments) - set(data_cols)
     if unknown:
         raise ValueError(f"assignments reference unknown columns {sorted(unknown)}")
-    with _validated(updated, active_constraints(root)) as vupd:
+    with _validated(updated, snap.constraints) as vupd:
         # the delete half: the same vector machinery as delete_where
         full, n_matched, delete_adds = _plan_vector_delete(
-            matched.select("_tf_file", "_tf_pos"), root, new_v
+            matched.select("_tf_file", "_tf_pos"), snap
         )
-        adds = _write_data(vupd, root, new_v, files, spec,
-                           mapping=column_mapping(root))
+        adds = _write_data(vupd, root, new_v, files, snap.spec,
+                           mapping=snap.mapping)
     _publish(root, new_v, {
         "version": new_v, "op": "update", "adds": adds, "removes": full,
         "delete_adds": delete_adds, "n_changes": n_matched,
@@ -1361,24 +1402,22 @@ def merge_mor(
     version."""
     from .dedup import latest_wins
 
-    versions = list_versions(root)
-    if not versions:
+    snap = snapshot(root)
+    if not snap.log:
         raise FileNotFoundError(
             f"merge_mor target {root} does not exist — create_table "
             f"first (the sink appends vectors+images to a pinned "
             f"schema; it never invents commit 0)"
         )
-    if epoch is not None:
-        seen = _epoch_committed(root, epoch)
-        if seen is not None:
-            return seen
-    new_v = versions[-1] + 1
-    spec = _table_spec(root)
+    if epoch in snap.epochs:
+        return snap.epochs[epoch]
+    new_v = snap.version + 1
+    spec = snap.spec
     latest = latest_wins(
         batch.select(key, op_col, *payload, order_col, tiebreak),
         key, order_col, tiebreak,
     )
-    cur = read_version(spark, root, merge_schema=True, with_positions=True)
+    cur = _read(spark, snap, merge_schema=True, with_positions=True)
     # pre-images of EVERY fed key leave the active set (I on an
     # existing key is an upsert — without its delete the appended image
     # would duplicate the row). No forced broadcast: a CDC batch can be
@@ -1386,13 +1425,13 @@ def merge_mor(
     matched = cur.join(
         latest.select(key), key, "left_semi"
     ).select("_tf_file", "_tf_pos")
-    full, _n_pre, delete_adds = _plan_vector_delete(matched, root, new_v)
+    full, _n_pre, delete_adds = _plan_vector_delete(matched, snap)
     images = latest.filter(F.col(op_col) != "D").select(key, *payload)
     if spec and not all(c in images.columns for c in spec):
         spec = None
-    with _validated(images, active_constraints(root)) as vimg:
+    with _validated(images, snap.constraints) as vimg:
         adds = _write_data(vimg, root, new_v, files, spec,
-                           mapping=column_mapping(root))
+                           mapping=snap.mapping)
     _publish(root, new_v, {
         "version": new_v, "op": "merge_mor", "adds": adds,
         "removes": full, "delete_adds": delete_adds,
@@ -1438,11 +1477,9 @@ def compact(
     merge-on-read deletes on untouched partitions survive exactly.
     Returns the current version unchanged when no active file
     matches."""
-    import pyarrow.parquet as pq
-
-    versions = list_versions(root)
-    new_v = versions[-1] + 1
-    spec = _table_spec(root)
+    snap = snapshot(root)
+    new_v = snap.version + 1
+    spec = snap.spec
     if zorder_by and spec:
         # validate the combination BEFORE any vector-split side effects:
         # _write_data would raise anyway, but only after selective
@@ -1453,8 +1490,6 @@ def compact(
             "clustering and a hive partition spec both dictate file "
             "placement — use sort_by for within-partition clustering"
         )
-    all_adds = active_adds(root)
-    dels = active_delete_adds(root)
     if where:
         if not spec:
             raise ValueError("selective OPTIMIZE needs a partition spec")
@@ -1464,51 +1499,24 @@ def compact(
                 f"WHERE references non-partition columns {sorted(unknown)}"
             )
         sel = [
-            a for a in all_adds
+            a for a in snap.adds
             if all(
                 str(a.get("partition", {}).get(c)) == str(v)
                 for c, v in where.items()
             )
         ]
         if not sel:
-            return versions[-1]  # nothing to do: no-op, no commit
+            return snap.version  # nothing to do: no-op, no commit
         current = sorted(a["path"] for a in sel)
-        sel_set = set(current)
-        # split delete vectors: retire every vector file touching a
-        # selected data file; rewrite its unselected remainder
-        cur_dels, delete_adds_new = [], []
-        for d in dels:
-            t = pq.read_table(os.path.join(root, d["path"]))
-            fcol = t.column("_tf_dfile").to_pylist()
-            hit = [f in sel_set for f in fcol]
-            if not any(hit):
-                continue  # untouched vector file stays live
-            cur_dels.append(d["path"])
-            if not all(hit):
-                import pyarrow as pa
-
-                keep = t.filter(pa.array([not h for h in hit]))
-                uid = uuid.uuid4().hex[:8]
-                vdir = os.path.join(root, "deletes", f"v={new_v}-{uid}")
-                os.makedirs(vdir, exist_ok=True)
-                vpath = os.path.join(vdir, "part-00000.parquet")
-                pq.write_table(
-                    keep.sort_by([("_tf_dfile", "ascending"),
-                                  ("_tf_dpos", "ascending")]),
-                    vpath,
-                )
-                delete_adds_new.append({
-                    "path": os.path.relpath(vpath, root),
-                    "rows": keep.num_rows,
-                })
+        cur_dels, delete_adds_new = _split_vectors(snap, set(current))
         reader = spark.read.option("mergeSchema", "true")
-        snap = _with_positions(
+        rows = _with_positions(
             reader.parquet(*[os.path.join(root, p) for p in current]), root
         )
-        snap = _anti_vectors(spark, root, snap, dels).drop(
+        rows = _anti_vectors(spark, root, rows, snap.delete_adds).drop(
             "_tf_file", "_tf_pos"
         )
-        adds = _write_data(snap, root, new_v, files, spec, sort_by, zorder_by)
+        adds = _write_data(rows, root, new_v, files, spec, sort_by, zorder_by)
         _publish(root, new_v, {
             "version": new_v, "op": "compact", "adds": adds,
             "removes": current, "n_changes": 0, "sort_by": sort_by,
@@ -1516,14 +1524,14 @@ def compact(
             "partition_where": {str(c): str(v) for c, v in where.items()},
             "delete_removes": cur_dels,
             "delete_adds": delete_adds_new,
-            "schema": snap.schema.json(),
+            "schema": rows.schema.json(),
         })
         return new_v
-    current = sorted(active_files(root))
-    cur_dels = sorted(d["path"] for d in dels)
-    snap = read_version(spark, root, merge_schema=True)
-    adds = _write_data(snap, root, new_v, files, spec, sort_by, zorder_by,
-                       mapping=column_mapping(root))
+    current = [a["path"] for a in snap.adds]
+    cur_dels = [d["path"] for d in snap.delete_adds]
+    rows = _read(spark, snap, merge_schema=True)
+    adds = _write_data(rows, root, new_v, files, spec, sort_by, zorder_by,
+                       mapping=snap.mapping)
     _publish(root, new_v, {
         "version": new_v, "op": "compact", "adds": adds,
         "removes": current, "n_changes": 0, "sort_by": sort_by,
@@ -1532,9 +1540,46 @@ def compact(
         # subtracts them), so they are retired with the files they
         # referenced — merge-on-read read-amp resets to zero here
         "delete_removes": cur_dels,
-        "schema": snap.schema.json(),
+        "schema": rows.schema.json(),
     })
     return new_v
+
+
+def _split_vectors(
+    snap: Snapshot, files: set[str]
+) -> tuple[list[str], list[dict]]:
+    """Retire every live delete-vector file of ``snap`` that references
+    one of ``files`` (the data files a commit rewrites, applying the
+    vectors); a vector file that also references other files has that
+    remainder rewritten as a new vector file for ``snap``'s next
+    version. Returns (delete_removes, delete_adds)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = snap.root
+    retired, remainders = [], []
+    for d in snap.delete_adds:
+        t = pq.read_table(os.path.join(root, d["path"]))
+        hit = [f in files for f in t.column("_tf_dfile").to_pylist()]
+        if not any(hit):
+            continue  # references only other files: stays live
+        retired.append(d["path"])
+        if not all(hit):
+            keep = t.filter(pa.array([not h for h in hit]))
+            uid = uuid.uuid4().hex[:8]
+            vdir = os.path.join(root, "deletes", f"v={snap.version + 1}-{uid}")
+            os.makedirs(vdir, exist_ok=True)
+            vpath = os.path.join(vdir, "part-00000.parquet")
+            pq.write_table(
+                keep.sort_by([("_tf_dfile", "ascending"),
+                              ("_tf_dpos", "ascending")]),
+                vpath,
+            )
+            remainders.append({
+                "path": os.path.relpath(vpath, root),
+                "rows": keep.num_rows,
+            })
+    return retired, remainders
 
 
 def purge(spark: SparkSession, root: str, files: int = 4) -> int:
@@ -1564,58 +1609,33 @@ def purge(spark: SparkSession, root: str, files: int = 4) -> int:
 
     Parity: Delta's ``REORG TABLE ... APPLY (PURGE)``; the reference
     has no mapped tables — beyond-reference surface."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    mapping = column_mapping(root)
+    snap = snapshot(root)
+    mapping = snap.mapping
     if mapping is None:
         raise ValueError(
             f"PURGE needs a column-mapped table (table at {root} stores "
             f"logical names physically — there are no dead physical "
             f"columns to shed; use OPTIMIZE for layout maintenance)"
         )
-    versions = list_versions(root)
-    new_v = versions[-1] + 1
+    new_v = snap.version + 1
     live_phys = {f["physical"] for f in mapping["fields"]}
     stale = sorted(
-        a["path"] for a in active_adds(root)
+        a["path"] for a in snap.readable().adds
         if set(pq.read_schema(os.path.join(root, a["path"])).names)
         - live_phys
     )
     if not stale:
-        return versions[-1]
-    stale_set = set(stale)
-    dels = active_delete_adds(root)
-    cur_dels, delete_adds_new = [], []
-    for d in dels:
-        t = pq.read_table(os.path.join(root, d["path"]))
-        fcol = t.column("_tf_dfile").to_pylist()
-        hit = [f in stale_set for f in fcol]
-        if not any(hit):
-            continue  # vector only references clean files: stays live
-        cur_dels.append(d["path"])
-        if not all(hit):
-            keep = t.filter(pa.array([not h for h in hit]))
-            uid = uuid.uuid4().hex[:8]
-            vdir = os.path.join(root, "deletes", f"v={new_v}-{uid}")
-            os.makedirs(vdir, exist_ok=True)
-            vpath = os.path.join(vdir, "part-00000.parquet")
-            pq.write_table(
-                keep.sort_by([("_tf_dfile", "ascending"),
-                              ("_tf_dpos", "ascending")]),
-                vpath,
-            )
-            delete_adds_new.append({
-                "path": os.path.relpath(vpath, root),
-                "rows": keep.num_rows,
-            })
+        return snap.version
+    cur_dels, delete_adds_new = _split_vectors(snap, set(stale))
     # the CURRENT physical schema IS the purge projection: reading the
     # stale files under it simply never selects the dead columns
     df = spark.read.schema(_phys_ddl(mapping)).parquet(
         *[os.path.join(root, p) for p in stale]
     )
     df = _with_positions(df, root)
-    df = _anti_vectors(spark, root, df, dels)
+    df = _anti_vectors(spark, root, df, snap.delete_adds)
     logical = _to_logical(df, mapping)
     adds = _write_data(logical, root, new_v, files, None, mapping=mapping)
     _publish(root, new_v, {
@@ -1653,16 +1673,15 @@ def change_feed(
     (payload bit-identical under null-safe comparison) are filtered
     out. Requires key-unique snapshots — the contract ``merge``
     maintains."""
-    versions = list_versions(root)
-    if v_to is None:
-        v_to = versions[-1]
+    snap = snapshot(root, v_to)
+    v_to = snap.version
     pay = list(payload)
     # column-mapped tables: physical names are immutable, so EVERY
     # version's files resolve under the v_to mapping's physical schema;
     # output uses the v_to logical names (a renamed column keeps its
     # field id and therefore its history; a re-added name is a new id
     # whose physical column simply doesn't exist in old files)
-    mapping = column_mapping(root, v_to)
+    mapping = snap.mapping
 
     def _rd(paths: list[str]) -> DataFrame:
         r = spark.read.schema(_phys_ddl(mapping)) if mapping else spark.read
@@ -1672,10 +1691,14 @@ def change_feed(
         return _to_logical(d, mapping) if mapping else d
 
     parts: list[DataFrame] = []
-    for v in versions:
-        if v <= v_from or v > v_to:
+    fold = _Fold()  # walked alongside: the vectors live at v - 1
+    for v, m in snap.log:
+        if v > v_to:
+            break
+        live_before = _by_path(fold.dels)
+        fold.apply(v, m)
+        if v <= v_from:
             continue
-        m = read_manifest(root, v)
         adds = [os.path.join(root, _norm_add(a)["path"]) for a in m["adds"]]
         rems = [os.path.join(root, p) for p in m["removes"]]
         if m.get("op") == "update":
@@ -1702,7 +1725,7 @@ def change_feed(
             old = _logical(_anti_vectors(
                 spark, root,
                 _with_positions(_rd(rems), root),
-                active_delete_adds(root, v - 1),
+                live_before,
             )).select(key, *pay)
         # a selective compact's / purge's delete_adds are REWRITTEN
         # remainders of vectors it split (bookkeeping, not new deletes)
@@ -1769,7 +1792,7 @@ def change_feed(
             )
         parts.append(ch.withColumn("_commit_version", F.lit(v)))
     if not parts:
-        schema = _snapshot_schema(root, v_to)
+        schema = snap.schema
         base = spark.createDataFrame([], schema) if schema else None
         if base is None:
             raise FileNotFoundError(f"no readable commits at {root}")
@@ -1799,17 +1822,18 @@ def vacuum(
     files. Records the new retention floor so ``read_version`` of an
     expired version fails fast (VersionExpired) instead of surfacing a
     mid-scan FileNotFound. Returns deleted relative paths."""
-    versions = list_versions(root)
-    retained = versions[-keep_versions:]
+    snap = snapshot(root).readable()
+    retained = snap.versions[-keep_versions:]
+    snap.readable(retained[0])  # below an earlier vacuum's floor: expired
     live: set[str] = set()
-    for v in retained:
-        live |= set(active_files(root, v))
-        live |= {d["path"] for d in active_delete_adds(root, v)}
     committed: set[str] = set()
-    for v in versions:
-        m = read_manifest(root, v)
+    fold = _Fold()
+    for v, m in snap.log:
+        fold.apply(v, m)
         committed |= {_norm_add(a)["path"] for a in m["adds"]}
         committed |= {_norm_add(d)["path"] for d in m.get("delete_adds", [])}
+        if v >= retained[0]:
+            live |= fold.adds.keys() | fold.dels.keys()
     now = time.time()
     deleted = []
     for p in glob.glob(
@@ -1823,14 +1847,16 @@ def vacuum(
         if relp in committed or now - os.path.getmtime(p) > orphan_grace_sec:
             os.unlink(p)
             deleted.append(relp)
-    floor = max(earliest_readable(root), retained[0])
+    floor = max(snap.floor, retained[0])
     with open(_retention_path(root), "w") as fh:
         json.dump({"earliest_readable": floor}, fh)
     return sorted(deleted)
 
 
 def history(root: str) -> list[dict]:
-    return [read_manifest(root, v) for v in list_versions(root)]
+    """Every published manifest, ascending (shared with the process
+    memo: read, never mutate)."""
+    return [m for _, m in _log(root)]
 
 
 def version_as_of_timestamp(root: str, ts: float) -> int:
@@ -1838,8 +1864,8 @@ def version_as_of_timestamp(root: str, ts: float) -> int:
     the TIMESTAMP AS OF resolution rule real formats use. Raises if the
     table did not exist yet at ``ts``."""
     best = None
-    for v in list_versions(root):
-        at = read_manifest(root, v).get("committed_at")
+    for v, m in _log(root):
+        at = m.get("committed_at")
         if at is None:
             # manifests published before committed_at existed: the
             # commit file's mtime is the publish instant (os.link
@@ -2280,10 +2306,21 @@ def _route_merge(
         # latest-wins pick a pure function of row CONTENT
         .withColumn("tb", F.xxhash64("op", *keys, *payload))
     )
-    v = merge(spark, root, feed, keys, payload, "seq", "tb")
-    n = int(read_manifest(root, v)["n_changes"])
+    return _receipt(
+        spark, "merge", root, merge(spark, root, feed, keys, payload, "seq", "tb")
+    )
+
+
+def _receipt(
+    spark: SparkSession, op: str, root: str, version: int,
+    n_changes: int | None = None,
+) -> DataFrame:
+    """The 1-row (op, version, n_changes) frame a routed statement
+    returns; ``n_changes`` defaults to the count the commit recorded."""
+    if n_changes is None:
+        n_changes = int(dict(_log(root))[version]["n_changes"])
     return spark.createDataFrame(
-        [("merge", v, n)], "op STRING, version INT, n_changes BIGINT"
+        [(op, version, n_changes)], "op STRING, version INT, n_changes BIGINT"
     )
 
 
@@ -2372,11 +2409,7 @@ def sql(
             F.col(src.columns[i]).cast(f.dataType).alias(f.name)
             for i, f in enumerate(target.schema.fields)
         ])
-        v = append(spark, root, aligned)
-        n = int(read_manifest(root, v)["n_changes"])
-        return spark.createDataFrame(
-            [("insert", v, n)], "op STRING, version INT, n_changes BIGINT"
-        )
+        return _receipt(spark, "insert", root, append(spark, root, aligned))
     m = _OPTIMIZE_STMT.match(query)
     if m and m.group(1) in tables:
         name, where_raw, zcols = m.group(1), m.group(2), m.group(3)
@@ -2397,27 +2430,19 @@ def sql(
                         f"(got {clause!r})"
                     )
                 where[pe.group(1)] = pe.group(2).strip("'\"")
-        v = compact(spark, tables[name], zorder_by=zorder_by, where=where)
-        n = int(read_manifest(tables[name], v)["n_changes"])
-        return spark.createDataFrame(
-            [("optimize", v, n)], "op STRING, version INT, n_changes BIGINT"
-        )
+        root = tables[name]
+        v = compact(spark, root, zorder_by=zorder_by, where=where)
+        return _receipt(spark, "optimize", root, v)
     m = _VACUUM_STMT.match(query)
     if m and m.group(1) in tables:
         name, keep = m.group(1), m.group(2)
         root = tables[name]
         deleted = vacuum(root, keep_versions=int(keep) if keep else 1)
-        return spark.createDataFrame(
-            [("vacuum", list_versions(root)[-1], len(deleted))],
-            "op STRING, version INT, n_changes BIGINT",
-        )
+        return _receipt(spark, "vacuum", root, _log(root)[-1][0], len(deleted))
     m = _REORG_PURGE_STMT.match(query)
     if m and m.group(1) in tables:
         root = tables[m.group(1)]
-        v = purge(spark, root)
-        return spark.createDataFrame(
-            [("purge", v, 0)], "op STRING, version INT, n_changes BIGINT"
-        )
+        return _receipt(spark, "purge", root, purge(spark, root), 0)
     # column-mapping DDL -> metadata commits (rename/drop/add/widen as
     # ALTER TABLE statements, the way a lake user types them)
     for stmt, route in (
@@ -2428,26 +2453,19 @@ def sql(
     ):
         m = stmt.match(query)
         if m and m.group(1) in tables:
-            v = route(tables[m.group(1)], m.groups())
-            return spark.createDataFrame(
-                [("alter", v, 0)], "op STRING, version INT, n_changes BIGINT"
-            )
+            root = tables[m.group(1)]
+            return _receipt(spark, "alter", root, route(root, m.groups()), 0)
     m = _DELETE_STMT.match(query)
     if m and m.group(1) in tables:
-        name, cond = m.group(1), m.group(2)
-        v = delete_where(spark, tables[name], cond)
-        n = int(read_manifest(tables[name], v)["n_changes"])
-        return spark.createDataFrame(
-            [("delete", v, n)], "op STRING, version INT, n_changes BIGINT"
+        root = tables[m.group(1)]
+        return _receipt(
+            spark, "delete", root, delete_where(spark, root, m.group(2))
         )
     m = _UPDATE_STMT.match(query)
     if m and m.group(1) in tables:
-        name, sets, cond = m.group(1), m.group(2), m.group(3)
-        v = update_where(spark, tables[name], cond, _split_assignments(sets))
-        n = int(read_manifest(tables[name], v)["n_changes"])
-        return spark.createDataFrame(
-            [("update", v, n)], "op STRING, version INT, n_changes BIGINT"
-        )
+        root, sets, cond = tables[m.group(1)], m.group(2), m.group(3)
+        v = update_where(spark, root, cond, _split_assignments(sets))
+        return _receipt(spark, "update", root, v)
 
     def _sub(m: re.Match) -> str:
         name, v = m.group(1), int(m.group(2))

@@ -72,27 +72,7 @@ class TableAppendStreamWriter(DataSourceStreamArrowWriter):
         # reads skip streamed files by partition too
         from ..operators import table_format as tf
 
-        self.spec = tf._table_spec(options["root"]) or []
-        # incremental epoch index: replay detection used to re-read
-        # EVERY manifest on every micro-batch (O(V^2) driver-side JSON
-        # reads over a long stream's lifetime); instead fold each
-        # manifest exactly once into an in-memory set. A fresh writer
-        # (first batch, or restart after recovery) scans the whole log
-        # once; every later batch only reads manifests committed since.
-        self._seen_epochs: set = set()
-        self._epochs_scanned_to = -1
-
-    def _epoch_seen(self, epoch) -> bool:
-        from ..operators import table_format as tf
-
-        for v in tf.list_versions(self.root):
-            if v <= self._epochs_scanned_to:
-                continue
-            e = tf.read_manifest(self.root, v).get("epoch")
-            if e is not None:
-                self._seen_epochs.add(e)
-            self._epochs_scanned_to = max(self._epochs_scanned_to, v)
-        return epoch in self._seen_epochs
+        self.spec = tf.snapshot(self.root).readable().spec or []
 
     def _epoch(self, batchId: int):
         return f"{self.writer_id}/{batchId}" if self.writer_id else int(batchId)
@@ -171,15 +151,17 @@ class TableAppendStreamWriter(DataSourceStreamArrowWriter):
         from ..operators import table_format as tf
 
         epoch = self._epoch(batchId)
-        if self._epoch_seen(epoch):
+        # the table format's log memo parses only manifests committed
+        # since the last batch, so replay detection stays O(new commits)
+        snap = tf.snapshot(self.root)
+        if epoch in snap.epochs:
             return  # replayed epoch: already committed, no-op
         adds = [
             rec for m in messages if m is not None
             for rec in getattr(m, "files", [])
         ]
         for _attempt in range(16):  # appends commute; retry on conflict
-            versions = tf.list_versions(self.root)
-            new_v = versions[-1] + 1 if versions else 0
+            new_v = snap.version + 1
             try:
                 tf._publish(self.root, new_v, {
                     "version": new_v, "op": "append", "adds": adds,
@@ -188,7 +170,7 @@ class TableAppendStreamWriter(DataSourceStreamArrowWriter):
                 })
                 return
             except tf.CommitConflict:
-                continue
+                snap = tf.snapshot(self.root)
         raise tf.CommitConflict(
             f"append epoch {batchId} lost 16 version races at {self.root}"
         )

@@ -1571,6 +1571,48 @@ def test_epoch_index_survives_table_recreation(spark, tmp_path):
     assert tf.column_mapping(root2) is None
 
 
+def test_log_fold_one_glob_per_op_each_manifest_parsed_once(
+    spark, tmp_path, monkeypatch
+):
+    """Every public op resolves the commit log ONCE: one glob of the
+    commit directory, and — manifests being immutable — no manifest is
+    parsed twice in the process, however many ops fold it."""
+    from collections import Counter
+
+    globs, parses = [], Counter()
+    list_versions, read_manifest = tf.list_versions, tf.read_manifest
+    monkeypatch.setattr(
+        tf, "list_versions", lambda r: globs.append(r) or list_versions(r)
+    )
+    monkeypatch.setattr(
+        tf, "read_manifest",
+        lambda r, v: parses.update([(r, v)]) or read_manifest(r, v),
+    )
+    root = str(tmp_path / "fold")
+    tf.create_table(spark, root, _mor_base(spark), files=2, partition_by="b")
+    feed = spark.createDataFrame(
+        [(11, "U", 1, 999, 1, 0), (500, "I", 3, 7, 1, 0)],
+        "k long, op string, b int, val long, seq int, tb int",
+    )
+
+    def one_glob(op, *args, **kw):
+        globs.clear()
+        out = op(spark, root, *args, **kw)
+        assert len(globs) == 1, f"{op.__name__} globbed {len(globs)} times"
+        return out
+
+    one_glob(tf.merge, feed, "k", ["b", "val"], "seq", "tb")
+    one_glob(tf.compact, files=1)
+    one_glob(tf.delete_where, "k < 5")
+    one_glob(tf.update_where, "k = 20", {"val": "val + 1"})
+    assert one_glob(tf.read_version).count() == 96
+    # whole range: merge 1 update + 1 insert, compact nothing, delete
+    # 5 rows, update 1 post-image
+    assert one_glob(tf.change_feed, "k", ["b", "val"]).count() == 8
+    assert sorted(parses) == [(root, v) for v in range(5)]
+    assert set(parses.values()) == {1}
+
+
 def test_purge_sheds_dead_physical_columns(spark, tmp_path):
     """REORG PURGE (r12 — verdict #3): after a metadata-only DROP, the
     dead column's bytes sit in every pre-drop file; purge rewrites ONLY
