@@ -375,7 +375,7 @@ def main() -> None:
     # started contended; spend a bounded budget waiting for the load to
     # settle before sampling (the contended tag below remains the
     # guarantee if the budget expires busy)
-    from harness_util import git_head, wait_for_quiet
+    from harness_util import git_head, jvm_facts, wait_for_quiet
 
     waited_quiet = wait_for_quiet()
     load_at_start = machine_load()
@@ -407,6 +407,7 @@ def main() -> None:
     spark = get_spark(
         app_name="ecdw-bench",
         shuffle_partitions=int(os.environ.get("SPARK_GRAFT_BENCH_SHUFFLE", "8")),
+        sf_dir=sf_dir,
     )
     catalog = get_catalog()
 
@@ -733,6 +734,7 @@ def main() -> None:
                     "start": load_at_start, "end": machine_load(),
                 },
                 "contended": contended,
+                "jvm": jvm_facts(spark),
                 "sf": sf,
             },
             f,

@@ -171,7 +171,7 @@ def main() -> None:
 
     waited_quiet = wait_for_quiet()  # r12 — verdict #4
     load1_start = round(os.getloadavg()[0], 2)
-    spark = get_spark(app_name="ecdw-bench-sf1", shuffle_partitions=32)
+    spark = get_spark(app_name="ecdw-bench-sf1", shuffle_partitions=32, sf_dir=SF01)
     catalog = get_catalog()
     ensure_sf1(spark)
     reps = int(os.environ.get("SPARK_GRAFT_SF1_REPS", "3"))

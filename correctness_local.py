@@ -167,7 +167,9 @@ def verify_entry(con, q, df, rebuild=None) -> dict:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.01")
     changed_only = "--changed-only" in sys.argv
-    spark = get_spark(app_name="ecdw-correctness-local", shuffle_partitions=8)
+    spark = get_spark(
+        app_name="ecdw-correctness-local", shuffle_partitions=8, sf_dir=sf_dir
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

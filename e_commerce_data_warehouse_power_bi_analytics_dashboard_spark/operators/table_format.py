@@ -2047,30 +2047,10 @@ _ALTER_TYPE_STMT = re.compile(
 
 
 def _split_assignments(raw: str) -> dict[str, str]:
-    """``a = expr, b = expr`` -> {a: expr}; commas inside parentheses
-    or quotes do not split (a linear scan, not a SQL parser)."""
-    parts, depth, buf, in_q = [], 0, [], None
-    for ch in raw:
-        if in_q:
-            buf.append(ch)
-            if ch == in_q:
-                in_q = None
-            continue
-        if ch in "'\"":
-            in_q = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-            continue
-        buf.append(ch)
-    if buf:
-        parts.append("".join(buf))
+    """``a = expr, b = expr`` -> {a: expr}; the commas are split by
+    :func:`_split_values`."""
     out: dict[str, str] = {}
-    for p in parts:
+    for p in _split_values(raw):
         col, _, expr = p.partition("=")
         col, expr = col.strip(), expr.strip()
         if not col or not expr:
@@ -2325,8 +2305,9 @@ def _receipt(
 
 
 def _split_values(raw: str) -> list[str]:
-    """Comma-split a VALUES list, respecting parens/quotes (the same
-    linear scan as _split_assignments, without the ``=``)."""
+    """Comma-split a VALUES or SET list into stripped parts; commas
+    inside parentheses or quotes do not split (a linear scan, not a SQL
+    parser)."""
     parts, depth, buf, in_q = [], 0, [], None
     for ch in raw:
         if in_q:

@@ -1,5 +1,6 @@
 """Shared helpers for the round-artifact harness scripts
-(correctness_local.py, bench.py, plan_audit.py, bench_sf1.py).
+(correctness_local.py, bench.py, plan_audit.py, bench_sf1.py,
+profile_entries.py).
 
 Freeze discipline (r12 — verdict #4): every committed artifact records
 the git HEAD it was generated against (tests/test_artifacts.py gates
@@ -68,3 +69,32 @@ def wait_for_quiet(
         time.sleep(step)
         waited += step
     return waited
+
+
+def jvm_facts(spark) -> dict:
+    """What the engine JVM's JIT did, read from its management beans:
+    the JIT flags it was started with, the total compilation time, and
+    the code cache's used / peak / max MB. A peak at the max means the
+    cache filled and the JIT ran out of room to compile, the failure
+    the 240 MB cache in ``session.C1_OPTIONS`` prevents."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    flags = [
+        a for a in mf.getRuntimeMXBean().getInputArguments()
+        if a.startswith("-XX:") and any(k in a for k in ("Tiered", "CodeCache", "Compil"))
+    ]
+    # one "CodeCache" pool, or three "CodeHeap '...'" pools when the
+    # cache is segmented (tiered C1+C2 with a cache of 240 MB or more)
+    pools = [
+        p for p in mf.getMemoryPoolMXBeans()
+        if p.getName() == "CodeCache" or p.getName().startswith("CodeHeap")
+    ]
+    mb = 1 << 20
+    return {
+        "jit_flags": flags,
+        "compile_ms": int(mf.getCompilationMXBean().getTotalCompilationTime()),
+        "code_cache_mb": {
+            "used": round(sum(p.getUsage().getUsed() for p in pools) / mb, 1),
+            "peak": round(sum(p.getPeakUsage().getUsed() for p in pools) / mb, 1),
+            "max": round(sum(p.getUsage().getMax() for p in pools) / mb, 1),
+        },
+    }

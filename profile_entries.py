@@ -1,7 +1,9 @@
 """Per-entry profiler: isolate catalog entries with the noop sink
 (guide §1.4), bench-identical methodology (warm-up rep, internal-cache
 eviction, median of N), and capture ``explain("formatted")`` to
-plans/profile/<name>_<tag>.txt. (Not named ``profile.py``: a script
+plans/profile/<name>_<tag>.txt, plus the JVM's JIT facts
+(``harness_util.jvm_facts``: flags, compile time, code cache) at the end
+of the run in plans/profile/jvm_<tag>.json. (Not named ``profile.py``: a script
 directory on ``sys.path`` would shadow the stdlib ``profile`` module
 that ``cProfile``, and through it pyspark, imports.)
 
@@ -16,6 +18,7 @@ developer tool only.
 
 from __future__ import annotations
 
+import json
 import os
 import statistics
 import sys
@@ -30,6 +33,7 @@ from e_commerce_data_warehouse_power_bi_analytics_dashboard_spark.session import
 )
 
 from bench import evict_rdds, materialize, persistent_rdd_ids
+from harness_util import jvm_facts
 
 
 def main() -> None:
@@ -40,6 +44,7 @@ def main() -> None:
     spark = get_spark(
         app_name="ecdw-profile",
         shuffle_partitions=int(os.environ.get("SPARK_GRAFT_BENCH_SHUFFLE", "8")),
+        sf_dir=sf_dir,
     )
     catalog = get_catalog()
     plans_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "profile")
@@ -91,6 +96,8 @@ def main() -> None:
             f"{name}: median={statistics.median(samples):.3f}s samples={samples}",
             flush=True,
         )
+    with open(os.path.join(plans_dir, f"jvm_{tag}.json"), "w") as f:
+        json.dump(jvm_facts(spark), f, indent=1)
     spark.stop()
 
 
