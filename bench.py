@@ -377,8 +377,11 @@ def main() -> None:
     # guarantee if the budget expires busy)
     from harness_util import git_head, jvm_facts, wait_for_quiet
 
+    from perfbench.run import _steal_share, cpu_ticks
+
     waited_quiet = wait_for_quiet()
     load_at_start = machine_load()
+    ticks_at_start = cpu_ticks()
     # contention guard (r11 — verdict #7): a bench started on a busy
     # machine inflates EVERY query uniformly (r10's driver run read
     # ~1.3x over the quiet freeze at load1 2.45); tag the artifact so
@@ -732,6 +735,11 @@ def main() -> None:
                 },
                 "machine_load": {
                     "start": load_at_start, "end": machine_load(),
+                    # hypervisor steal over the whole run: loadavg does
+                    # not see it, yet it slows every timed query
+                    "cpu_steal_share": round(
+                        _steal_share(ticks_at_start, cpu_ticks()), 4
+                    ),
                 },
                 "contended": contended,
                 "jvm": jvm_facts(spark),

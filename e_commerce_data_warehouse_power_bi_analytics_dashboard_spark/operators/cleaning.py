@@ -118,7 +118,7 @@ def clean_products(stg: DataFrame) -> DataFrame:
         .alias("_median_price")
     )
     return (
-        cleaned.crossJoin(F.broadcast(median))
+        cleaned.crossJoin(median)
         .withColumn(
             "unitprice",
             F.coalesce(F.col("unitprice_raw").cast("double"), F.col("_median_price")),

@@ -50,7 +50,7 @@ def chi2_scaled(cells: DataFrame, a: str, b: str, o: str = "o") -> DataFrame:
     scaled = (
         cells.join(F.broadcast(rt), a)
         .join(F.broadcast(ct), b)
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .withColumn(
             "e_s",
             F.greatest(

@@ -97,7 +97,7 @@ def evaluate(
     if wants_arpc:
         n_cust = dim_customer.agg(F.countDistinct("customerid").alias("_n_customers"))
         out = (
-            out.crossJoin(F.broadcast(n_cust))
+            out.crossJoin(n_cust)
             .withColumn("arpc", safe_divide(F.col("total_revenue"), F.col("_n_customers")))
             .drop("_n_customers")
         )

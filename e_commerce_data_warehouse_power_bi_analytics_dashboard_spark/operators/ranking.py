@@ -144,7 +144,6 @@ def ordered_prefix_sum(
     *,
     out: str | Sequence[str] = "cumsum",
     num_partitions: int | None = None,
-    cache_out: list | None = None,
 ) -> DataFrame:
     """Append ``out`` = running sum of ``value`` under ``ORDER BY`` the
     given ``(column, 'asc'|'desc')`` spec — distributed, never a
@@ -171,17 +170,13 @@ def ordered_prefix_sum(
     replaces). No stage holds more than ~N/P rows in one task; P follows
     ``spark.sql.shuffle.partitions`` unless ``num_partitions`` is given.
 
-    CACHE CONTRACT (caller must evict): the range-partitioned frame is
-    ``persist()``-ed for partition-id stability (see inline note) and the
-    pin cannot be released before the caller's terminal action on the
-    returned lazy DataFrame — so this operator CANNOT unpersist it
-    itself. Long-lived sessions invoking it repeatedly should pass
-    ``cache_out`` (a list; the persisted frame is appended) and call
-    ``.unpersist()`` on it after consuming the result, or eventually
-    leftover blocks accumulate until LRU/disk spill. One-shot contexts
-    (catalog entries under the bench harness, short jobs) can ignore it —
-    the bench evicts query-internal caches per rep, and session teardown
-    drops them regardless.
+    Cache lifetime: the range-partitioned frame is ``persist()``-ed for
+    partition-id stability (see inline note), and the pin cannot be
+    released before the caller's terminal action on the returned lazy
+    DataFrame, so this operator never unpersists it. ``bench.py`` evicts
+    query-internal caches before each timed rep, and session teardown
+    drops whatever is left; until then a long-lived session keeps each
+    call's blocks, subject to LRU eviction and disk spill.
     """
     bad = [d for _, d in order if d not in ("asc", "desc")]
     if bad:
@@ -214,8 +209,6 @@ def ordered_prefix_sum(
     # The cache is query-internal (bench evicts it per timed rep); at
     # petabyte scale it becomes a checkpoint, same shape.
     with_pid = parts.withColumn("_ps_pid", F.spark_partition_id()).persist()
-    if cache_out is not None:
-        cache_out.append(with_pid)
 
     w = (
         Window.partitionBy("_ps_pid")

@@ -498,6 +498,39 @@ def _pq_lut(
     return lut
 
 
+def _adc_topk(
+    rows: DataFrame, m: int, k: int, qc: DataFrame | None = None
+) -> DataFrame:
+    """The ADC scan's shared tail: ``rows`` holds one (query_id, vid,
+    subspace, lut) row per candidate and subspace. Each subspace's LUT
+    value lands in its own conditional-sum slot ``_l{s}`` and the m slots
+    are added in fixed textual order, so adc_score is bit-identical to
+    the oracles, never an order-dependent float SUM across subspaces.
+    When a ``qc`` frame (query_id, qc) is given, the score is
+    ``qc + (_l0 + ... + _l{m-1})``.
+    Returns the top ``k`` (query_id, neighbor_id, rank, adc_score) per
+    query, ties broken by neighbor_id."""
+    slots = rows.groupBy("query_id", "vid").agg(
+        *[
+            F.sum(F.when(F.col("subspace") == s, F.col("lut"))).alias(f"_l{s}")
+            for s in range(m)
+        ]
+    )
+    score = F.expr(" + ".join(f"_l{s}" for s in range(m)))
+    if qc is not None:
+        slots = slots.join(F.broadcast(qc), "query_id")
+        score = F.col("qc") + score
+    scored = slots.select(
+        "query_id", F.col("vid").alias("neighbor_id"), score.alias("adc_score")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("adc_score"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "adc_score")
+    )
+
+
 def pq_adc_topk(
     emb: DataFrame, codebooks: DataFrame, query_pred: str, k: int = 5,
     m: int = 4, dim: int = 64,
@@ -513,10 +546,7 @@ def pq_adc_topk(
     rows; the LUT (|Q|·m·k rows) broadcasts, so scoring is a map-side
     broadcast join + an (query, vid)-keyed aggregation — no vector
     arithmetic per corpus row at query time, the whole point of PQ.
-    Determinism: each subspace's LUT value lands in its own
-    conditional-sum slot and the m slots are added in fixed textual
-    order, so adc_score is bit-identical to the oracle (never an
-    order-dependent float SUM across subspaces).
+    Determinism: the slot-per-subspace sum of :func:`_adc_topk`.
 
     Train/serve split: pass prebuilt ``codes`` (the persisted PQ index,
     operators/ann_index.py) to skip corpus re-encoding — the serve-time
@@ -526,27 +556,10 @@ def pq_adc_topk(
         codes = pq_encode(emb, codebooks, m, dim, id_col, vec_col)
     lut = _pq_lut(emb.filter(F.expr(query_pred)), codebooks, m, dim,
                   id_col, vec_col)
-    scored = (
+    return _adc_topk(
         codes.join(F.broadcast(lut), ["subspace", "code"])
-        .filter(F.col("vid") != F.col("query_id"))
-        .groupBy("query_id", "vid")
-        .agg(
-            *[
-                F.sum(F.when(F.col("subspace") == s, F.col("lut"))).alias(f"_l{s}")
-                for s in range(m)
-            ]
-        )
-        .select(
-            "query_id",
-            F.col("vid").alias("neighbor_id"),
-            F.expr(" + ".join(f"_l{s}" for s in range(m))).alias("adc_score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc_score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_score")
+        .filter(F.col("vid") != F.col("query_id")),
+        m, k,
     )
 
 
@@ -599,27 +612,10 @@ def ivfpq_adc_topk(
         .filter(F.col("vid") != F.col("query_id"))
         .select("query_id", "vid")
     )
-    scored = (
+    return _adc_topk(
         cand.join(codes, "vid")
-        .join(F.broadcast(lut), ["query_id", "subspace", "code"])
-        .groupBy("query_id", "vid")
-        .agg(
-            *[
-                F.sum(F.when(F.col("subspace") == s, F.col("lut"))).alias(f"_l{s}")
-                for s in range(m)
-            ]
-        )
-        .select(
-            "query_id",
-            F.col("vid").alias("neighbor_id"),
-            F.expr(" + ".join(f"_l{s}" for s in range(m))).alias("adc_score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc_score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_score")
+        .join(F.broadcast(lut), ["query_id", "subspace", "code"]),
+        m, k,
     )
 
 
@@ -651,28 +647,11 @@ def ivfpq_partitioned_scan(
         .join(F.broadcast(q_ids), "vid")
         .select(F.col("vid").alias("query_id"), "centroid_id")
     )
-    scored = (
+    return _adc_topk(
         codes_ivf.join(F.broadcast(qb), "centroid_id")
         .filter(F.col("vid") != F.col("query_id"))
-        .join(F.broadcast(lut), ["query_id", "subspace", "code"])
-        .groupBy("query_id", "vid")
-        .agg(
-            *[
-                F.sum(F.when(F.col("subspace") == s, F.col("lut"))).alias(f"_l{s}")
-                for s in range(m)
-            ]
-        )
-        .select(
-            "query_id",
-            F.col("vid").alias("neighbor_id"),
-            F.expr(" + ".join(f"_l{s}" for s in range(m))).alias("adc_score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc_score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_score")
+        .join(F.broadcast(lut), ["query_id", "subspace", "code"]),
+        m, k,
     )
 
 
@@ -1356,31 +1335,8 @@ def ivfpq_residual_topk(
         .filter(F.col("vid") != F.col("query_id"))
         .select("query_id", "vid")
     )
-    scored = (
+    return _adc_topk(
         cand.join(codes, "vid")
-        .join(F.broadcast(lut), ["query_id", "subspace", "code"])
-        .groupBy("query_id", "vid")
-        .agg(
-            *[
-                F.sum(F.when(F.col("subspace") == s, F.col("lut"))).alias(f"_l{s}")
-                for s in range(m)
-            ]
-        )
-        .join(F.broadcast(qb.select("query_id", "qc")), "query_id")
-        .select(
-            "query_id",
-            F.col("vid").alias("neighbor_id"),
-            (
-                F.col("qc")
-                + F.expr(" + ".join(f"_l{s}" for s in range(m)))
-            ).alias("adc_score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_score")
+        .join(F.broadcast(lut), ["query_id", "subspace", "code"]),
+        m, k, qc=qb.select("query_id", "qc"),
     )

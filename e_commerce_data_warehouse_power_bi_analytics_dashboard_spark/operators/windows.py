@@ -17,7 +17,7 @@ from pyspark.sql.window import Window
 def monthly_revenue(fact: DataFrame, dim_date: DataFrame) -> DataFrame:
     """Measure 10: revenue at month grain. Returns (month_start date, revenue decimal)."""
     return (
-        fact.join(F.broadcast(dim_date.select("date_key", "full_date")), "date_key")
+        fact.join(dim_date.select("date_key", "full_date"), "date_key")
         .groupBy(F.trunc("full_date", "month").alias("month_start"))
         .agg(F.sum("totalamount").alias("revenue"))
     )
@@ -59,7 +59,7 @@ def yoy_growth(fact: DataFrame, dim_date: DataFrame) -> DataFrame:
     Yearly agg then lag; growth left as a raw double quotient ×100.
     """
     yearly = (
-        fact.join(F.broadcast(dim_date.select("date_key", "year")), "date_key")
+        fact.join(dim_date.select("date_key", "year"), "date_key")
         .groupBy("year")
         .agg(F.sum("totalamount").alias("revenue"))
     )
@@ -81,7 +81,7 @@ def top_region_label(fact: DataFrame, dim_customer: DataFrame) -> DataFrame:
     revenue with thousands separators (DAX FORMAT(x, "#,##0") analog).
     """
     per_country = (
-        fact.join(F.broadcast(dim_customer.select("customer_key", "country")), "customer_key")
+        fact.join(dim_customer.select("customer_key", "country"), "customer_key")
         .groupBy("country")
         .agg(F.sum("totalamount").alias("revenue"))
         .orderBy(F.desc("revenue"), "country")

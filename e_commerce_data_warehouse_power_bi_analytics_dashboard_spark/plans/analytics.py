@@ -93,7 +93,7 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     per_cust = (
         s.fact_sales
-        .join(F.broadcast(s.dim_date.select("date_key", "full_date")), "date_key")
+        .join(s.dim_date.select("date_key", "full_date"), "date_key")
         .groupBy("customer_key")
         .agg(
             F.max("full_date").alias("last_date"),
@@ -105,7 +105,7 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.dim_date.agg(F.max("full_date").alias("anchor_date"))
     )
     base = (
-        per_cust.crossJoin(F.broadcast(anchor))
+        per_cust.crossJoin(anchor)
         .select(
             "customer_key",
             F.datediff("anchor_date", "last_date").alias("recency_days"),
@@ -139,6 +139,7 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             + (value > F.col(f"{tag}3")).cast("int")
         )
 
+    # hint kept: the other side is small too, and unhinted the planner builds it
     scored = base.crossJoin(F.broadcast(cuts)).select(
         "customer_key", "recency_days", "frequency", "monetary",
         _score(F.col("recency_days"), "r").alias("r_score"),
@@ -192,7 +193,7 @@ def pareto_product_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     rev = (
         s.fact_sales
-        .join(F.broadcast(s.dim_product.select("product_key", "category")), "product_key")
+        .join(s.dim_product.select("product_key", "category"), "product_key")
         .groupBy("category", "product_key")
         .agg(F.sum("totalamount").alias("rev_dec"))
         # product-grain frame read by the prefix sum AND the grand total —
@@ -210,7 +211,7 @@ def pareto_product_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
         out="_cum_dec",
     )
     grand = rev.agg(F.sum("rev_dec").alias("_grand_dec"))
-    cum = ranked.crossJoin(F.broadcast(grand)).select(
+    cum = ranked.crossJoin(grand).select(
         "category",
         "product_key",
         F.round(F.col("rev_dec"), 2).cast("double").alias("revenue"),
@@ -326,7 +327,7 @@ def retention_cohort_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     activity = (
         s.fact_sales
-        .join(F.broadcast(s.dim_date.select("date_key", "full_date")), "date_key")
+        .join(s.dim_date.select("date_key", "full_date"), "date_key")
         .select(
             "customer_key",
             F.date_trunc("month", "full_date").cast("date").alias("act_month"),

@@ -272,6 +272,7 @@ def lr_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("pred").cast("double") == F.col("y"), 1).otherwise(0)
         ).cast("long").alias("n_correct"),
     )
+    # hint kept: the other side is small too, and unhinted the planner builds it
     return u.crossJoin(F.broadcast(n)).select(
         "n",
         "n_pos",
@@ -352,6 +353,7 @@ def lr_eval_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin_col = sum(
         (F.col("p") > F.col(f"c{d}")).cast("int") for d in range(1, 10)
     )
+    # hint kept: the other side is small too, and unhinted the planner builds it
     binned = sc.crossJoin(F.broadcast(cuts)).select(
         bin_col.alias("bin"),
         F.round(F.col("p") * 1000000).cast("long").alias("pm"),

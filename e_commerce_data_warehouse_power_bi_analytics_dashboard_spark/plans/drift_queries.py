@@ -117,7 +117,7 @@ def drift_ks_doclen_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("ca").alias("na"), F.sum("cb").alias("nb")
     )
     d = (
-        c.crossJoin(F.broadcast(tot))
+        c.crossJoin(tot)
         .select(
             F.abs(
                 F.col("cum_a").cast("double") / F.col("na")
@@ -216,7 +216,7 @@ def drift_psi_event_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_cand") + _PSI_NB
     )
     return (
-        g.crossJoin(F.broadcast(t))
+        g.crossJoin(t)
         .select(
             "bin",
             F.col("c_ref").cast("long").alias("c_ref"),

@@ -306,6 +306,7 @@ def er_linkage_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(in_suffix.cast("int")).cast("long").alias("n_truth_reach_suffix"),
         F.sum((in_band | in_suffix).cast("int")).cast("long").alias("n_truth_reach_union"),
     )
+    # hint kept: the other side is small too, and unhinted the planner builds it
     return counts.crossJoin(F.broadcast(reach))
 
 

@@ -284,6 +284,7 @@ def events_enriched_segment_daily(spark: SparkSession, sf_dir: str) -> DataFrame
     cust = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
+    # raw customer grows with SF: the hint records the broadcast choice
     return (
         ev.join(F.broadcast(cust), "user_id")
         .groupBy(

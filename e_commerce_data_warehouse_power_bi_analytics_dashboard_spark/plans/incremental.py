@@ -50,8 +50,8 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     lines = (
         s.fact_sales
-        .join(F.broadcast(s.dim_product.select("product_key", "category")), "product_key")
-        .join(F.broadcast(s.dim_date.select("date_key", "full_datetime")), "date_key")
+        .join(s.dim_product.select("product_key", "category"), "product_key")
+        .join(s.dim_date.select("date_key", "full_datetime"), "date_key")
         .select(
             F.date_format(F.date_trunc("month", "full_datetime"), "yyyy-MM").alias("month"),
             "category",

@@ -75,7 +75,7 @@ def category_dummy_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     return (
         s.fact_sales.select("product_key")
-        .join(F.broadcast(s.dim_product.select("product_key", "category", "unitprice")), "product_key")
+        .join(s.dim_product.select("product_key", "category", "unitprice"), "product_key")
         .groupBy("category")
         .agg(F.round(F.sum(F.col("unitprice") * 100), 2).cast("double").alias("dummy_sales"))
     )
@@ -107,7 +107,7 @@ def secondary_lookup_customername(spark: SparkSession, sf_dir: str) -> DataFrame
     s = StarSchema(spark, sf_dir)
     target = s.dim_customer.agg(F.min("customername").alias("target_name"))
     return (
-        s.dim_customer.crossJoin(F.broadcast(target))
+        s.dim_customer.crossJoin(target)
         .filter(F.col("customername") == F.col("target_name"))
         .drop("target_name")
     )
@@ -183,8 +183,8 @@ def mv_monthly_category_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     return (
         s.fact_sales
-        .join(F.broadcast(s.dim_product.select("product_key", "category", "unitprice").withColumnRenamed("unitprice", "p_unitprice")), "product_key")
-        .join(F.broadcast(s.dim_date.select("date_key", "full_datetime")), "date_key")
+        .join(s.dim_product.select("product_key", "category", "unitprice").withColumnRenamed("unitprice", "p_unitprice"), "product_key")
+        .join(s.dim_date.select("date_key", "full_datetime"), "date_key")
         .groupBy(F.date_format(F.date_trunc("month", "full_datetime"), "yyyy-MM").alias("month"), "category")
         .agg(
             money_sum("totalamount").alias("monthly_revenue"),
@@ -212,7 +212,7 @@ def top5_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     return (
         s.fact_sales.select("customer_key", "totalamount")
-        .join(F.broadcast(s.dim_customer.select("customer_key", "customername")), "customer_key")
+        .join(s.dim_customer.select("customer_key", "customername"), "customer_key")
         .groupBy("customername")
         .agg(money_sum("totalamount").alias("revenue"))
         .orderBy(F.desc("revenue"), "customername")
@@ -240,8 +240,8 @@ def top5_products_monthly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     return (
         s.fact_sales
-        .join(F.broadcast(s.dim_product.select("product_key", "description")), "product_key")
-        .join(F.broadcast(s.dim_date.select("date_key", "full_datetime")), "date_key")
+        .join(s.dim_product.select("product_key", "description"), "product_key")
+        .join(s.dim_date.select("date_key", "full_datetime"), "date_key")
         .groupBy("description", F.date_format(F.date_trunc("month", "full_datetime"), "yyyy-MM").alias("month"))
         .agg(money_sum("totalamount").alias("monthly_revenue"))
         .orderBy(F.desc("month"), F.desc("monthly_revenue"), "description")
@@ -268,7 +268,7 @@ def revenue_share_by_category(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     per_cat = (
         s.fact_sales.select("product_key", "totalamount")
-        .join(F.broadcast(s.dim_product.select("product_key", "category")), "product_key")
+        .join(s.dim_product.select("product_key", "category"), "product_key")
         .groupBy("category")
         .agg(F.sum("totalamount").alias("rev"))
     )

@@ -9,6 +9,10 @@ BroadcastNestedLoopJoin via a degenerate non-equi band (enable_nestloop's
 analog); the plan-shape assertions live in tests/test_plans.py. All four
 variants must return identical results — each is registered with the
 same oracle, which IS the study's correctness claim.
+
+The hints here stay even where they restate the star's own broadcast
+mark (sources/star.py): each entry pins a join algorithm, and the hint
+at the site is what the study varies.
 """
 
 from __future__ import annotations

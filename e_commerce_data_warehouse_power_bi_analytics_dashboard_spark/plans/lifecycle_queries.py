@@ -363,6 +363,7 @@ def lifecycle_right_to_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.sum(F.when(survives & is_tomb_f, 1).otherwise(0)), F.lit(0))
         .cast("long").alias("orphans_remaining"),
     )
+    # hint kept: the other side is small too, and unhinted the planner builds it
     return cust_counts.crossJoin(F.broadcast(fact_counts)).select(
         "n_tombstones", "customers_before", "customers_after",
         "facts_before", "facts_after", "orphans_remaining",

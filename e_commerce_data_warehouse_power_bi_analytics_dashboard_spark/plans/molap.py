@@ -65,8 +65,8 @@ def molap_month_country(spark: SparkSession, sf_dir: str) -> DataFrame:
     dm = _month_dates(s)
     return (
         s.fact_sales
-        .join(F.broadcast(dm), "date_key")
-        .join(F.broadcast(s.dim_customer.select("customer_key", "country")), "customer_key", "left")
+        .join(dm, "date_key")
+        .join(s.dim_customer.select("customer_key", "country"), "customer_key", "left")
         .groupBy(month_str("month").alias("month"), F.coalesce("country", F.lit("UNKNOWN")).alias("country"))
         .agg(
             money_sum("totalamount").alias("total_revenue"),
@@ -97,8 +97,8 @@ def molap_month_product(spark: SparkSession, sf_dir: str) -> DataFrame:
     dm = _month_dates(s)
     return (
         s.fact_sales
-        .join(F.broadcast(dm), "date_key")
-        .join(F.broadcast(s.dim_product.select("product_key", "stockcode", "description")), "product_key")
+        .join(dm, "date_key")
+        .join(s.dim_product.select("product_key", "stockcode", "description"), "product_key")
         .groupBy(month_str("month").alias("month"), "product_key", "stockcode", "description")
         .agg(
             money_sum("totalamount").alias("revenue"),
@@ -129,8 +129,8 @@ def molap_customer_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     dm = _month_dates(s)
     return (
         s.fact_sales
-        .join(F.broadcast(dm), "date_key")
-        .join(F.broadcast(s.dim_customer.select("customer_key", "customerid")), "customer_key")
+        .join(dm, "date_key")
+        .join(s.dim_customer.select("customer_key", "customerid"), "customer_key")
         .groupBy(month_str("month").alias("month"), "customer_key", "customerid")
         .agg(
             money_sum("totalamount").alias("revenue"),
@@ -172,10 +172,10 @@ def molap_top10_products_last3m(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         s.fact_sales
-        .join(F.broadcast(s.dim_date.select("date_key", "full_date")), "date_key")
-        .crossJoin(F.broadcast(bound))
+        .join(s.dim_date.select("date_key", "full_date"), "date_key")
+        .crossJoin(bound)
         .filter(F.col("full_date") >= F.col("min_date"))
-        .join(F.broadcast(s.dim_product.select("product_key", "stockcode", "description")), "product_key")
+        .join(s.dim_product.select("product_key", "stockcode", "description"), "product_key")
         .groupBy("stockcode", "description")
         .agg(money_sum("totalamount").alias("revenue"), int_sum("quantity").alias("qty_sold"))
         .orderBy(F.desc("revenue"), "stockcode")
@@ -211,8 +211,8 @@ def molap_daily_revenue_90d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         s.fact_sales.select("date_key", "totalamount")
-        .join(F.broadcast(s.dim_date.select("date_key", "full_date")), "date_key")
-        .crossJoin(F.broadcast(bound))
+        .join(s.dim_date.select("date_key", "full_date"), "date_key")
+        .crossJoin(bound)
         .filter(F.col("full_date") >= F.col("min_date"))
         .groupBy("full_date")
         .agg(money_sum("totalamount").alias("daily_revenue"))
@@ -255,7 +255,7 @@ def molap_daily_revenue_90d(spark: SparkSession, sf_dir: str) -> DataFrame:
 def molap_cohort_recent12(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     fd = s.fact_sales.select("customer_key", "date_key", "totalamount").join(
-        F.broadcast(s.dim_date.select("date_key", "full_date")), "date_key"
+        s.dim_date.select("date_key", "full_date"), "date_key"
     )
     sale_month = F.trunc("full_date", "month")
     signup = fd.groupBy("customer_key").agg(F.min(sale_month).alias("signup_month"))
@@ -314,14 +314,14 @@ def molap_cohort_recent12(spark: SparkSession, sf_dir: str) -> DataFrame:
 def molap_vs_olap_verification(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     dm = _month_dates(s)
-    base = s.fact_sales.join(F.broadcast(s.dim_customer.select("customer_key", "country")), "customer_key", "left")
+    base = s.fact_sales.join(s.dim_customer.select("customer_key", "country"), "customer_key", "left")
     molap = (
-        base.join(F.broadcast(dm), "date_key")
+        base.join(dm, "date_key")
         .groupBy("month", F.coalesce("country", F.lit("UNKNOWN")).alias("country"))
         .agg(F.sum("totalamount").alias("total_revenue"))
     )
     olap = (
-        base.join(F.broadcast(s.dim_date.select("date_key", "full_date")), "date_key")
+        base.join(s.dim_date.select("date_key", "full_date"), "date_key")
         .groupBy(F.trunc("full_date", "month").alias("month"), F.coalesce("country", F.lit("UNKNOWN")).alias("country"))
         .agg(F.sum("totalamount").alias("revenue"))
     )
@@ -360,7 +360,7 @@ def molap_year_quarter_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     return (
         s.fact_sales.select("date_key", "totalamount", "quantity", "invoiceid")
-        .join(F.broadcast(s.dim_date.select("date_key", "year", "quarter")), "date_key")
+        .join(s.dim_date.select("date_key", "year", "quarter"), "date_key")
         .groupBy("year", "quarter")
         .agg(
             money_sum("totalamount").alias("total_revenue"),
@@ -395,6 +395,7 @@ def olap_cube_year_mktsegment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = read_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice", "o_orderdate")
     cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    # raw customer grows with SF: the hint records the broadcast choice
     joined = orders.join(
         F.broadcast(cust), orders.o_custkey == cust.c_custkey
     ).select(
@@ -523,7 +524,7 @@ def molap_pivot_month_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format(F.date_trunc("month", "full_date"), "yyyy-MM").alias("month"),
     )
     pivoted = (
-        s.fact_sales.join(F.broadcast(months), "date_key")
+        s.fact_sales.join(months, "date_key")
         .groupBy("month")
         .pivot("returnflag", ["A", "N", "R"])
         .agg(F.sum("quantity"))
@@ -563,9 +564,9 @@ def sketch_mergeable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dm = _month_dates(s)
     base = (
         s.fact_sales
-        .join(F.broadcast(dm), "date_key")
+        .join(dm, "date_key")
         .join(
-            F.broadcast(s.dim_customer.select("customer_key", "country")),
+            s.dim_customer.select("customer_key", "country"),
             "customer_key",
             "left",
         )
@@ -622,8 +623,9 @@ def sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = orders.groupBy("o_orderpriority").agg(F.count("*").alias("cnt"))
     total = orders.agg(F.count("*").alias("n_total"))
     return (
-        exact.crossJoin(F.broadcast(total))
+        exact.crossJoin(total)
         .filter(F.col("cnt") > 0.1 * F.col("n_total"))
+        # hint kept: the filtered side is a handful of rows too
         .crossJoin(F.broadcast(sketch))
         .select(
             F.col("o_orderpriority").alias("key"),
@@ -668,9 +670,11 @@ def molap_grouping_sets_country(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nation = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    # raw customer grows with SF: the hint records the broadcast choice;
+    # nation is 25 rows at every SF and broadcast unhinted
     joined = (
         orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
+        .join(nation, cust.c_nationkey == nation.n_nationkey)
         .select(
             F.year("o_orderdate").alias("year"),
             F.col("n_name").alias("country"),
@@ -714,7 +718,7 @@ def molap_rollup_year_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     j = (
         s.fact_sales.select("date_key", "totalamount")
-        .join(F.broadcast(s.dim_date.select("date_key", "year", "quarter")), "date_key")
+        .join(s.dim_date.select("date_key", "year", "quarter"), "date_key")
         .select("year", "quarter", "totalamount")
     )
     return j.rollup("year", "quarter").agg(

@@ -45,8 +45,8 @@ def olap_monthly_revenue_by_country(spark: SparkSession, sf_dir: str) -> DataFra
     s = StarSchema(spark, sf_dir)
     return (
         s.fact_sales
-        .join(F.broadcast(s.dim_date.select("date_key", "year", "month")), "date_key")
-        .join(F.broadcast(s.dim_customer.select("customer_key", "country")), "customer_key", "left")
+        .join(s.dim_date.select("date_key", "year", "month"), "date_key")
+        .join(s.dim_customer.select("customer_key", "country"), "customer_key", "left")
         .groupBy("year", "month", F.coalesce("country", F.lit("UNKNOWN")).alias("country"))
         .agg(
             money_sum("totalamount").alias("total_revenue"),
@@ -91,6 +91,8 @@ def olap_top10_products_last3m(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("full_date").alias("max_date"))
         .select(F.add_months("max_date", -3).alias("min_date"), "max_date")
     )
+    # the dim side carries its own broadcast mark; only a mark on the
+    # 1-row side too lets the planner build that side instead
     dates = (
         s.dim_date.select("date_key", "full_date")
         .crossJoin(F.broadcast(bounds))
@@ -100,7 +102,7 @@ def olap_top10_products_last3m(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         s.fact_sales
         .join(F.broadcast(dates), "date_key")
-        .join(F.broadcast(s.dim_product.select("product_key", "stockcode", "description")), "product_key")
+        .join(s.dim_product.select("product_key", "stockcode", "description"), "product_key")
         .groupBy("stockcode", "description")
         .agg(money_sum("totalamount").alias("revenue"), int_sum("quantity").alias("qty_sold"))
         .orderBy(F.desc("revenue"), "stockcode")
@@ -134,7 +136,7 @@ def olap_cltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     per_customer = (
         s.fact_sales.select("customer_key", "totalamount", "invoiceid", "date_key")
-        .join(F.broadcast(s.dim_date.select("date_key", "full_date")), "date_key", "left")
+        .join(s.dim_date.select("date_key", "full_date"), "date_key", "left")
         .groupBy("customer_key")
         .agg(
             F.sum("totalamount").alias("_rev"),
@@ -184,6 +186,8 @@ def olap_daily_revenue_90d(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("full_date").alias("max_date"))
         .select(F.date_sub("max_date", 90).alias("min_date"), "max_date")
     )
+    # the dim side carries its own broadcast mark; only a mark on the
+    # 1-row side too lets the planner build that side instead
     dates = (
         s.dim_date.select("date_key", "full_date")
         .crossJoin(F.broadcast(bounds))
@@ -215,7 +219,7 @@ def olap_product_price_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     return (
         s.fact_sales.select("product_key", "unitprice", "totalamount", "quantity")
-        .join(F.broadcast(s.dim_product.select("product_key", "stockcode", "description")), "product_key")
+        .join(s.dim_product.select("product_key", "stockcode", "description"), "product_key")
         .groupBy("stockcode", "description")
         .agg(
             avg2("unitprice").alias("avg_unitprice"),
@@ -260,7 +264,7 @@ def olap_product_price_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def olap_cohort_first_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     fd = s.fact_sales.select("customer_key", "date_key", "totalamount").join(
-        F.broadcast(s.dim_date.select("date_key", "full_date")), "date_key"
+        s.dim_date.select("date_key", "full_date"), "date_key"
     )
     sale_month = F.trunc("full_date", "month")
     signup = fd.groupBy("customer_key").agg(F.min(sale_month).alias("signup_month"))
@@ -303,8 +307,8 @@ def olap_monthly_country_verification(spark: SparkSession, sf_dir: str) -> DataF
     s = StarSchema(spark, sf_dir)
     return (
         s.fact_sales
-        .join(F.broadcast(s.dim_date.select("date_key", "full_date")), "date_key")
-        .join(F.broadcast(s.dim_customer.select("customer_key", "country")), "customer_key", "left")
+        .join(s.dim_date.select("date_key", "full_date"), "date_key")
+        .join(s.dim_customer.select("customer_key", "country"), "customer_key", "left")
         .groupBy(
             month_str(F.trunc("full_date", "month")).alias("month"),
             F.coalesce("country", F.lit("UNKNOWN")).alias("country"),

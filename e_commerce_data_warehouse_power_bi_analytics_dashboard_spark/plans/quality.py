@@ -177,6 +177,7 @@ def dq_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY n)").alias("median_n"),
     )
     top3 = top_k_ranked(per_key, [("n", "desc"), ("o_custkey", "asc")], 3, out="rk")
+    # hint kept: the other side is small too, and unhinted the planner builds it
     return top3.crossJoin(F.broadcast(stats)).select(
         F.col("rk").alias("rank"),
         F.col("o_custkey").alias("hot_key"),
@@ -303,7 +304,7 @@ def dq_observe_single_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum("totalamount"), 2).cast("double").alias("total_revenue"),
     )
     gold = (
-        fact.join(F.broadcast(s.dim_date.select("date_key", "full_date")), "date_key")
+        fact.join(s.dim_date.select("date_key", "full_date"), "date_key")
         .groupBy(F.date_format(F.date_trunc("month", "full_date"), "yyyy-MM").alias("month"))
         .agg(F.round(F.sum("totalamount"), 2).cast("double").alias("revenue"))
     )

@@ -113,9 +113,9 @@ def _rollup_from_fact(
     s = StarSchema(spark, sf_dir)
     joined = (
         s.fact_sales
-        .join(F.broadcast(s.dim_date.select("date_key", "full_date")), "date_key")
+        .join(s.dim_date.select("date_key", "full_date"), "date_key")
         .join(
-            F.broadcast(s.dim_customer.select("customer_key", "country", "mktsegment")),
+            s.dim_customer.select("customer_key", "country", "mktsegment"),
             "customer_key",
             "left",
         )

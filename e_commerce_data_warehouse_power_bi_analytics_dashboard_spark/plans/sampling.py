@@ -125,7 +125,7 @@ def corpus_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = j.agg(F.min(F.floor(F.col("n_docs") / F.col("weight"))).alias("c"))
     return (
-        j.crossJoin(F.broadcast(corpus))
+        j.crossJoin(corpus)
         .select(
             "lang", "n_docs", "weight",
             F.floor(F.col("weight") * F.col("c")).cast("long").alias("take_n"),
@@ -529,7 +529,7 @@ def sample_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lam = (
         sb.join(tb, "bucket", "left")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "bucket",
             (
@@ -555,7 +555,7 @@ def sample_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"percentile_disc({_DSIR_KEEP_Q}) WITHIN GROUP (ORDER BY avg_log_ratio)"
         ).alias("q")
     )
-    return scored.crossJoin(F.broadcast(cut)).select(
+    return scored.crossJoin(cut).select(
         "doc_id",
         "source",
         "n_tokens",
@@ -742,7 +742,7 @@ def sample_group_split_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("user_id").cast("long").alias("n_users"),
             F.count("*").cast("long").alias("n_events"),
         )
-        .crossJoin(F.broadcast(leak))
+        .crossJoin(leak)
         .select("split", "n_users", "n_events", "leaky_users")
         .orderBy("split")
     )

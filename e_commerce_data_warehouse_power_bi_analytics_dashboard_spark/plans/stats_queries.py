@@ -102,7 +102,7 @@ def window_customer_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         rem + ((rn - rem * big - 1) / q).cast("long") + 1
     )
     return (
-        ranked.crossJoin(F.broadcast(n1))
+        ranked.crossJoin(n1)
         .select(
             "customer_key",
             "monetary",
@@ -170,12 +170,12 @@ def stats_daily_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     daily = (
         s.fact_sales
-        .join(F.broadcast(s.dim_date.select("date_key", "full_date")), "date_key")
+        .join(s.dim_date.select("date_key", "full_date"), "date_key")
         .groupBy("full_date")
         .agg((F.sum("totalamount") * 100).cast("long").alias("cents"))
     )
     min_d = daily.groupBy().agg(F.min("full_date").alias("_d0"))
-    xy = daily.crossJoin(F.broadcast(min_d)).select(
+    xy = daily.crossJoin(min_d).select(
         F.datediff("full_date", "_d0").cast("long").alias("x"),
         F.col("cents").alias("y"),
     )
@@ -350,7 +350,7 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = (
         rules.join(F.broadcast(sa), "antecedent")
         .join(F.broadcast(sc), "consequent")
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .select(
             "antecedent",
             "consequent",
@@ -442,7 +442,7 @@ def udaf_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     px = (
         s.fact_sales.select("product_key", "unitprice", "quantity")
-        .join(F.broadcast(s.dim_product.select("product_key", "category")), "product_key")
+        .join(s.dim_product.select("product_key", "category"), "product_key")
         .select(
             "category",
             (F.col("unitprice") * 100).cast("long").alias("cents"),
@@ -495,7 +495,7 @@ def category_top2_products(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     rev = (
         s.fact_sales
-        .join(F.broadcast(s.dim_product.select("product_key", "category")), "product_key")
+        .join(s.dim_product.select("product_key", "category"), "product_key")
         .groupBy("category", "product_key")
         .agg(money_sum("totalamount").alias("revenue"))
     )
@@ -684,9 +684,9 @@ def stats_benford_amounts(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(d, s_) for d, s_ in _BENFORD.items()], "d INT, benford_share DOUBLE"
     )
     return (
-        F.broadcast(expected)
+        expected
         .join(obs, expected.d == obs.leading_digit, "left")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             F.col("d").alias("leading_digit"),
             F.coalesce(F.col("observed"), F.lit(0)).cast("long").alias("observed"),
@@ -815,7 +815,7 @@ def stats_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pts = (
         s.fact_sales.select("product_key", "quantity")
-        .join(F.broadcast(prod), "product_key")
+        .join(prod, "product_key")
         .groupBy("category", "product_key", "list_price")
         .agg(F.sum("quantity").alias("units"))
         .select(

@@ -100,12 +100,10 @@ def bm25_topk(
             .select("doc_id", F.size("toks").alias("dl"), "toks")
             .persist()
         )
-    # N and avgdl over the whole corpus: single-row broadcast
-    stats = F.broadcast(
-        tokd.select(
-            F.count("*").cast("double").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-        )
+    # N and avgdl over the whole corpus: one row, broadcast by the planner
+    stats = tokd.select(
+        F.count("*").cast("double").alias("n_docs"),
+        F.avg("dl").alias("avgdl"),
     )
     tf = (
         tokd.select("doc_id", "dl", F.explode("toks").alias("term"))
@@ -321,7 +319,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("tf"))
     )
     df_ = tf.groupBy("term").agg(F.count_distinct("doc_id").cast("double").alias("df"))
-    n = F.broadcast(docs.select(F.count("*").cast("double").alias("n_docs")))
+    n = docs.select(F.count("*").cast("double").alias("n_docs"))
     scored = (
         tf.join(df_, "term")
         .crossJoin(n)
@@ -652,7 +650,7 @@ def text_unigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("c").cast("long").alias("n_tokens"),
             F.sum(F.col("c") * F.log("cw")).alias("_s"),
         )
-        .crossJoin(F.broadcast(n_total))
+        .crossJoin(n_total)
         .select(
             "doc_id",
             "lang",
@@ -868,7 +866,7 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ctx,
             F.split(F.col("b"), " ").getItem(0) == F.col("w1"),
         )
-        .crossJoin(F.broadcast(v))
+        .crossJoin(v)
         .groupBy("doc_id")
         .agg(
             F.sum("c").cast("long").alias("n_bigrams"),
@@ -975,7 +973,7 @@ def text_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_w2", F.split("b", " ").getItem(1))
         .join(u1, "_w1")
         .join(u2, "_w2")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             F.col("b").alias("bigram"),
             F.col("cb").cast("long").alias("c_bigram"),

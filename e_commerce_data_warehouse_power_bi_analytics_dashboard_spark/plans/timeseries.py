@@ -43,7 +43,7 @@ def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     return (
         s.fact_sales
-        .join(F.broadcast(s.dim_date.select("date_key", "full_date")), "date_key")
+        .join(s.dim_date.select("date_key", "full_date"), "date_key")
         .groupBy(F.col("full_date").alias("day"))
         .agg(F.sum("totalamount").cast("decimal(18,2)").alias("rev_dec"))
         # |days| rows; gapfill references it twice (spine min/max agg +
@@ -188,7 +188,7 @@ def ts_anomaly_zscore_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stats_category_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     base = s.fact_sales.join(
-        F.broadcast(s.dim_product.select("product_key", "category")), "product_key"
+        s.dim_product.select("product_key", "category"), "product_key"
     ).select("category", F.col("totalamount").cast("double").alias("amt"))
     return base.groupBy("category").agg(
         F.count("*").cast("long").alias("n_lines"),

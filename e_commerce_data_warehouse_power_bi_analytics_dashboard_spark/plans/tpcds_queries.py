@@ -29,6 +29,9 @@ Scale shape: every window here runs over PRE-AGGREGATED cells
 size), partitioned by category/segment — never a data-sized or
 single-partition window. The one data-sized operation in each entry is
 the initial fact aggregation, which partial-aggregates map-side.
+customer and part grow with SF, so their broadcast is a hint that
+records the choice; nation (25 rows at every SF) is broadcast by the
+planner unhinted.
 """
 
 from __future__ import annotations
@@ -332,7 +335,7 @@ def _fact_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _fact(spark, sf_dir)
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(nat, F.col("c_nationkey") == F.col("n_nationkey"))
     )
 
 

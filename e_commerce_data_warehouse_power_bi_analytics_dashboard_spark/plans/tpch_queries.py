@@ -22,7 +22,10 @@ shipdate-vs-orderdate lag; no o_comment/p_container/c_phone, so those
 filters map to o_orderpriority / p_size / c_nationkey.
 
 Scale design: q1 is one map-side-partial aggregation over the biggest
-table (4 groups); every dimension-sized side broadcasts and the only
+table (4 groups); every dimension-sized side broadcasts (nation and
+region are 25 and 5 rows at every SF, so the planner broadcasts them
+unhinted; customer/part/supplier grow with SF, so their broadcast
+stays a hint that records the choice) and the only
 data-sized shuffles key on orderkey/partkey/suppkey; correlated
 subqueries are written so Catalyst decorrelates them into one aggregate
 + join (plan-pinned for q17/q18/q21 in tests/test_plans.py — never a
@@ -224,8 +227,8 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
             (F.col("l_suppkey") == F.col("s_suppkey"))
             & (F.col("c_nationkey") == F.col("s_nationkey")),
         )
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(region, F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
         .agg(
             F.round(F.sum(_s_price() * (F.lit(1) - _s_disc())), 2)
@@ -643,8 +646,8 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
+        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
+        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
         .filter(pair)
         .groupBy(
             "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
@@ -714,9 +717,9 @@ def tpch_q8_national_market_share(spark: SparkSession, sf_dir: str) -> DataFrame
         .join(F.broadcast(part.select("p_partkey")), F.col("l_partkey") == F.col("p_partkey"))
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
-        .join(F.broadcast(region), F.col("cust_rk") == F.col("r_regionkey"))
+        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
+        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
+        .join(region, F.col("cust_rk") == F.col("r_regionkey"))
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             (
@@ -778,7 +781,7 @@ def tpch_q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(nation, F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(
             F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year")
         )
@@ -824,7 +827,7 @@ def tpch_q10_returned_item_reporting(spark: SparkSession, sf_dir: str) -> DataFr
     return (
         orders.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(
             F.round(F.sum(_s_price() * (F.lit(1) - _s_disc())), 2)

@@ -89,7 +89,7 @@ def validation_top10_country_revenue(spark: SparkSession, sf_dir: str) -> DataFr
     s = StarSchema(spark, sf_dir)
     etl = (
         s.fact_sales
-        .join(F.broadcast(s.dim_customer.select("customer_key", "country")), "customer_key", "left")
+        .join(s.dim_customer.select("customer_key", "country"), "customer_key", "left")
         .groupBy(F.coalesce("country", F.lit("UNKNOWN")).alias("country"))
         .agg(F.sum("totalamount").alias("etl_rev"))
     )
@@ -176,7 +176,7 @@ def validation_daily_trend_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = StarSchema(spark, sf_dir)
     etl = (
         s.fact_sales
-        .join(F.broadcast(s.dim_date.select("date_key", "full_date")), "date_key")
+        .join(s.dim_date.select("date_key", "full_date"), "date_key")
         .groupBy("full_date")
         .agg(F.sum("totalamount").alias("etl_rev"))
     )

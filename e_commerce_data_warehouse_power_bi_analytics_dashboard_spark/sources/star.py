@@ -25,11 +25,31 @@ Determinism rules shared by both engines:
 
 Scale design: fact_sales is a projection+join of the two largest tables.
 The orders side is joined on ``l_orderkey = o_orderkey``; at 100 TB both
-sides would be bucketed/co-partitioned on orderkey (plans/layout.py), and
-dims are broadcast in every star query (they are small by construction).
+sides would be bucketed/co-partitioned on orderkey (plans/layout.py).
+
+Join policy, stated once here: every star query broadcasts the dims
+(they are small by construction). ``StarSchema.dim_customer``,
+``dim_product`` and ``dim_date`` come back marked for broadcast, so query
+code joins them without a hint of its own. The mark survives
+``select``/``filter`` and any other single-input step up to the next
+join, and the plan still reads the cached dim. It sits at the source
+rather than being left to the planner because, until a dim is cached,
+Spark's size-only estimate for ``dim_customer`` multiplies the sizes of
+its three join inputs: 177 GB at sf0.01 and 1.65 TB at sf0.1, against
+122 KB and 1.24 MB once loaded (``dim_date`` reads 13 MB cold at sf0.1,
+also over the 10 MB broadcast threshold). A cold, unmarked customer
+join would plan a sort-merge that AQE demotes only after the fact has
+been shuffled. To pick another strategy for one query, put the strategy
+hint on the dim side, top-most: ``merge`` gives a sort-merge join and
+``shuffle_hash`` a shuffled hash join (plans/joinstudy.py does both). A
+hint on the fact side alone does not override the mark. Reading a dim
+outside any join makes Spark log that the broadcast hint found no join;
+that warning is expected.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -170,18 +190,23 @@ class StarSchema:
         return read_table(self.spark, self.sf_dir, name)
 
     # -- dims ----------------------------------------------------------------
+    def _dim(self, name: str, build: Callable[[], DataFrame]) -> DataFrame:
+        """The persisted dimension ``name``, marked for broadcast (see the
+        module docstring for why the hint sits here)."""
+        return F.broadcast(persisted(
+            self.spark, ("star", self.sf_dir, name),
+            lambda: build().persist(StorageLevel.MEMORY_AND_DISK),
+        ))
+
     @property
     def dim_customer(self) -> DataFrame:
-        return persisted(
-            self.spark, ("star", self.sf_dir, "dim_customer"),
-            lambda: self._dim_customer().persist(StorageLevel.MEMORY_AND_DISK),
-        )
+        return self._dim("dim_customer", self._dim_customer)
 
     def _dim_customer(self) -> DataFrame:
         c, n, r = self.raw("customer"), self.raw("nation"), self.raw("region")
         return (
-            c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-            .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+            c.join(n, c.c_nationkey == n.n_nationkey)
+            .join(r, n.n_regionkey == r.r_regionkey)
             .select(
                 F.col("c_custkey").alias("customer_key"),
                 F.col("c_custkey").cast("string").alias("customerid"),
@@ -195,10 +220,7 @@ class StarSchema:
 
     @property
     def dim_product(self) -> DataFrame:
-        return persisted(
-            self.spark, ("star", self.sf_dir, "dim_product"),
-            lambda: self._dim_product().persist(StorageLevel.MEMORY_AND_DISK),
-        )
+        return self._dim("dim_product", self._dim_product)
 
     def _dim_product(self) -> DataFrame:
         return self.raw("part").select(
@@ -213,10 +235,7 @@ class StarSchema:
 
     @property
     def dim_date(self) -> DataFrame:
-        return persisted(
-            self.spark, ("star", self.sf_dir, "dim_date"),
-            lambda: self._dim_date().persist(StorageLevel.MEMORY_AND_DISK),
-        )
+        return self._dim("dim_date", self._dim_date)
 
     def _dim_date(self) -> DataFrame:
         # UNION (deduplicating) of the two timestamp domains — SURVEY §2.7 U1.

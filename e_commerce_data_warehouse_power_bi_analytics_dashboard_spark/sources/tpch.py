@@ -42,9 +42,7 @@ TABLES = (
 SILVER_ROUTED = {"lineitem": "l_orderkey", "orders": "o_orderkey"}
 
 
-def read_table(
-    spark: SparkSession, sf_dir: str, name: str, raw_layout: bool = False
-) -> DataFrame:
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     # every catalog query reads through here: pin the runtime confs the
@@ -59,7 +57,7 @@ def read_table(
         # SQL conf, not a static one)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name in SILVER_ROUTED and not raw_layout:
+    if name in SILVER_ROUTED:
         from .silver import ensure_bucketed
 
         return ensure_bucketed(

@@ -10,12 +10,18 @@ proper TimestampType with sane values.
 
 from __future__ import annotations
 
+import inspect
 import os
+import re
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
+from e_commerce_data_warehouse_power_bi_analytics_dashboard_spark.sources.star import (
+    StarSchema,
+)
 from e_commerce_data_warehouse_power_bi_analytics_dashboard_spark.sources.tpch import (
     normalize_events_ts,
     read_events,
@@ -117,3 +123,42 @@ def test_artifact_ensure_lifecycle_contract(spark, tmp_path):
     for _ in range(2):
         A.ensure(spark, str(tmp_path / "other"), never, attached.append)
     assert attached == [failed, str(tmp_path / "other")]
+
+
+def _top_join(df) -> str:
+    """The outermost join line of ``df``'s physical plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return next(line for line in plan.splitlines() if "Join" in line)
+
+
+def test_star_dims_broadcast_before_they_are_cached(spark, tmp_path):
+    """A fresh star's dims are the broadcast side of a star join even
+    while the planner's only size estimate for them is the cold one: for
+    dim_customer, the product of its three join inputs' file sizes, far
+    over the broadcast threshold. A strategy hint on the dim still wins."""
+    # a path this session has never loaded, so no dim of it is cached
+    sf_dir = str(tmp_path / "sf")
+    os.symlink(SF_SMOKE, sf_dir)
+    dim = StarSchema(spark, sf_dir).dim_customer.select("customer_key", "country")
+    estimate = int(dim._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    threshold = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold").rstrip("b"))
+    assert estimate > threshold
+    small = spark.range(3).withColumnRenamed("id", "customer_key")
+    top = _top_join(small.join(dim, "customer_key"))
+    assert "BroadcastHashJoin" in top and "BuildRight" in top, top
+    assert "SortMergeJoin" in _top_join(small.join(dim.hint("merge"), "customer_key"))
+
+
+def test_no_call_site_broadcasts_a_star_dim():
+    """StarSchema marks its dims for broadcast; a call-site broadcast of
+    one restates that policy. Only the plan-pinned join study wraps them."""
+    pkg = Path(inspect.getfile(StarSchema)).parents[1]
+    wrap = re.compile(r"F\.broadcast\(\s*(?:s|star)\.dim_")
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "plans/joinstudy.py":
+            continue
+        text = path.read_text()
+        hits += [f"{rel}:{text.count(chr(10), 0, m.start()) + 1}" for m in wrap.finditer(text)]
+    assert not hits, f"call-site broadcast of a star dim: {hits}"
